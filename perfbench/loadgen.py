@@ -1,8 +1,11 @@
 """Closed-loop HTTP load generator for the serve workload.
 
 Runs as its own process against a server started by run.py and prints
-one JSON object. Two phases back to back:
+one JSON object. Three phases back to back:
 
+  warmup  two dashboard readers for WARMUP_S: the server's first
+          requests run on a cold JIT, so they are checked but not
+          measured;
   read    two dashboard readers, no writes;
   ingest  one reader beside one writer that POSTs a fixed number of
           batches extending every series forward in time; the phase
@@ -30,6 +33,7 @@ import datagen
 
 RAW_S, HOUR_S, FULL_S = 300, 3600, 6000  # routed: raw, 1 s, 10 s level
 FIDELITY = {"raw": None, "hour": 1, "full": 10}
+WARMUP_S = 3.0
 DECK = ["datasets"] + ["refetch"] * 4 + ["raw"] * 9 + ["hour"] * 4 + ["full"] * 2
 
 
@@ -203,14 +207,17 @@ def main() -> None:
     threading.excepthook = lambda a: crashes.append(f"client thread crashed: {a.exc_value!r}")
     readers = [Reader(client, geo, random.Random(a.seed * 31 + i), log) for i in range(2)]
 
-    t_read = time.perf_counter()
-    until = t_read + a.read_seconds
-    threads = [threading.Thread(target=r.run, args=("read", until)) for r in readers]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    read_wall = time.perf_counter() - t_read
+    def read_phase(phase: str, seconds: float) -> float:
+        t0 = time.perf_counter()
+        threads = [threading.Thread(target=r.run, args=(phase, t0 + seconds)) for r in readers]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        return time.perf_counter() - t0
+
+    read_phase("warmup", WARMUP_S)
+    read_wall = read_phase("read", a.read_seconds)
 
     posts: list[int] = []  # acknowledged batches
     done = threading.Event()

@@ -37,7 +37,9 @@ def prepare_env() -> None:
         os.makedirs(os.path.join(WORK, d))
     os.makedirs(TRACES, exist_ok=True)
     os.environ.update(
-        SPARK_GRAFT_CPUS=str(min(4, os.cpu_count() or 1)),
+        # two Spark cores, leaving the rest of the host to the Python
+        # process, the load generator and other tenants' noise
+        SPARK_GRAFT_CPUS=str(min(2, os.cpu_count() or 1)),
         SPARK_GRAFT_DRIVER_MEM="2g",
         SPARK_LOCAL_DIRS=os.path.join(WORK, "spark-local"),
         TMPDIR=os.path.join(WORK, "tmp"),

@@ -64,7 +64,7 @@ def main() -> None:
         n = check_spans(workload)
         with open(os.path.join(TRACES, f"{workload}_seed{SEED}_trace1.json")) as fh:
             rec = json.load(fh)
-        if workload == "analytics_core" and not all(abs(r - 1) <= 0.05 for r in rec["reconcile"]):
+        if workload == "analytics_core" and not abs(rec["reconcile"] - 1) <= 0.05:
             fail(f"analytics layers do not add up to the pass wall: {rec['reconcile']}")
         if workload == "serve_ingest" and rec["metrics"]["store.put.spark_jobs"] <= 0:
             fail("no Spark jobs attributed to store.put")
