@@ -240,6 +240,9 @@ def register(
 #            re-verified green against its DuckDB oracle locally this
 #            round (tools/diffcheck.py at sf0.01).
 _CHECK_FIRST = [
+    # 0. TelemetryStore.put now merges all rollup levels in one plan
+    "store_roundtrip_rollup",
+    "metrics_loop_series",
     # 1. restructured-in-r13 without a driver row (closure catch)
     "sim_pq_recall_eval",
     "quality_filter_funnel",

@@ -3,7 +3,10 @@
 Reference parity (SURVEY.md §1.4, §3):
   * Index.put  (src/index.py:102-177)  -> put(): validate -> dedup ->
     append raw points (partitioned, sorted-within-partition for
-    Parquet min/max locality) -> upsert all rollup levels.
+    Parquet min/max locality) -> upsert all rollup levels. The
+    reference rewrites its six levels in six passes; put() merges all
+    six in ONE aggregation and runs a fixed number of Spark actions
+    per call, however many levels there are.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
@@ -16,17 +19,19 @@ Reference parity (SURVEY.md §1.4, §3):
     quirk we fix).
 
 Physical layout (designed for 100 TB):
-  points/   partitioned by ds_date (UTC day of ts). Within a
-            partition, rows are sorted by (dataset_id, ts) at write so
-            Parquet column stats make per-series range scans skip
-            row groups. At cluster scale add a dataset_id hash-bucket
-            partition column (bucket count sized to executor count);
-            locally day-partitioning suffices and keeps file counts
-            sane at test volumes.
-  rollup_<d>/ partitioned by bin_date; tiny relative to raw (≈1/d),
-            so read-merge-overwrite of touched partitions is cheap —
-            this is the unbounded-lateness upsert (SURVEY.md ST3)
-            that pure watermarked streaming cannot express.
+  points/   partitioned by ds_bucket (crc32 of dataset_id) and ds_date
+            (UTC day of ts). Within a partition, rows are sorted by
+            (dataset_id, ts) at write so Parquet column stats make
+            per-series range scans skip row groups.
+  rollup_<d>/ partitioned by bin_date (UTC day of the bin start);
+            tiny relative to raw (≈1/d), so read-merge-overwrite of
+            the touched partitions is cheap — this is the
+            unbounded-lateness upsert (SURVEY.md ST3) that pure
+            watermarked streaming cannot express.
+  datasets/ the catalog: one row per dataset_id ever written.
+
+Every read passes the table's known schema (the *_DDL constants), so
+no scan starts a Parquet schema-inference job.
 """
 
 from __future__ import annotations
@@ -36,13 +41,15 @@ import contextlib
 import os
 import threading
 import zlib
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_tlm_spark.functions.time import floor_to
 from open_tlm_spark.operators.rollup import (
     aggregate_points,
-    cascade_from_finer,
     recommended_fidelity,
     with_mean,
 )
@@ -50,8 +57,22 @@ from open_tlm_spark.schemas import (
     DATASET_ID_PATTERN,
     FIDELITIES,
     POINTS_SCHEMA,
-    ROLLUP_SCHEMA,
 )
+
+# On-disk schemas, partition columns last (see the layout above).
+_POINTS_DDL = (
+    "dataset_id string, ts timestamp, value double, ds_bucket int, ds_date date"
+)
+_ROLLUP_DDL = (
+    "dataset_id string, bin_ts bigint, min_value double, max_value double, "
+    "sum_values double, count bigint, bin_date date"
+)
+_CATALOG_DDL = "dataset_id string"
+
+
+def _bin_date(bin_ts: Column) -> Column:
+    """UTC day of a bin start: the rollup partition key."""
+    return F.to_date(F.timestamp_seconds(bin_ts))
 
 
 def _as_utc(d: _dt.datetime) -> _dt.datetime:
@@ -89,6 +110,7 @@ class TelemetryStore:
         self.base = base_path
         self.n_buckets = n_buckets
         self.points_path = os.path.join(base_path, "points")
+        self.catalog_path = os.path.join(base_path, "datasets")
         # Interactive warm cache: path -> pinned (cached+materialized)
         # DataFrame. Off by default; enable with warm(). Serving from
         # an InMemoryRelation skips file listing, parquet decode, and
@@ -110,18 +132,30 @@ class TelemetryStore:
     def _rollup_path(self, duration_s: int) -> str:
         return os.path.join(self.base, f"rollup_{duration_s}")
 
-    def _read(self, path: str, schema) -> DataFrame:
+    def _schema(self, path: str) -> str:
+        if path == self.points_path:
+            return _POINTS_DDL
+        if path == self.catalog_path:
+            return _CATALOG_DDL
+        return _ROLLUP_DDL
+
+    def _scan(self, path: str) -> DataFrame:
+        """Lazy scan of a stored table with its known schema (no
+        schema-inference job)."""
+        # Spark caches parquet file listings per path; after our own
+        # overwrites/appends a cached listing is stale and can silently
+        # drop files from the next read -> refresh before every read.
+        self.spark.catalog.refreshByPath(path)
+        return self.spark.read.schema(self._schema(path)).parquet(path)
+
+    def _read(self, path: str) -> DataFrame:
         if self._warm_enabled:
             hit = self._warm_frames.get(path)
             if hit is not None:
                 return hit
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
-        # Spark caches parquet file listings per path; after our own
-        # overwrites/appends a cached listing is stale and can silently
-        # drop files from the next read -> refresh before every read.
-        self.spark.catalog.refreshByPath(path)
-        df = self.spark.read.parquet(path)
+            return self.spark.createDataFrame([], self._schema(path))
+        df = self._scan(path)
         if self._warm_enabled:
             # lazily (re-)warm a level that was invalidated by ingest
             df = self._warm_layout(path, df).cache()
@@ -168,12 +202,12 @@ class TelemetryStore:
         they re-warm lazily on next read."""
         self._warm_enabled = True
         paths = [self._rollup_path(d) for d in (fidelities or FIDELITIES)]
-        paths.append(os.path.join(self.base, "datasets"))
+        paths.append(self.catalog_path)
         if points:
             paths.append(self.points_path)
         for p in paths:
             if os.path.exists(p):
-                self._read(p, None)  # populates the cache
+                self._read(p)  # populates the cache
 
     def _warm_view_name(self, path: str) -> str:
         """Deterministic temp-view name for a warm level: store tag
@@ -201,35 +235,51 @@ class TelemetryStore:
             self._retired_warm[path] = df
 
     # ------------------------------------------------------------ ingest
-    def validate(self, batch: DataFrame) -> DataFrame:
-        """P5/P6: drop NaN/null values and illegal dataset ids; ST5:
-        exact dedup on (dataset_id, ts) — a strict improvement over
-        the reference's double-counting (src/index.py:39-40)."""
-        return (
-            batch.filter(
-                F.col("value").isNotNull()
-                & ~F.isnan("value")
-                & F.col("dataset_id").rlike(DATASET_ID_PATTERN)
-                & ~F.col("dataset_id").contains("..")
-                & (F.col("ts") >= F.lit(_dt.datetime(1970, 1, 1)))
-            )
-            .dropDuplicates(["dataset_id", "ts"])
+    @staticmethod
+    def _valid_rows(batch: DataFrame) -> DataFrame:
+        """P5/P6: drop NaN/null values, illegal dataset ids and
+        points before the epoch."""
+        return batch.filter(
+            F.col("value").isNotNull()
+            & ~F.isnan("value")
+            & F.col("dataset_id").rlike(DATASET_ID_PATTERN)
+            & ~F.col("dataset_id").contains("..")
+            & (F.col("ts") >= F.lit(_dt.datetime(1970, 1, 1)))
         )
 
-    def put(self, batch: DataFrame, _count: bool = True) -> None:
-        """S6: append raw + upsert every rollup level.
+    def validate(self, batch: DataFrame) -> DataFrame:
+        """P5/P6 (_valid_rows), then ST5: exact dedup on (dataset_id,
+        ts) — a strict improvement over the reference's
+        double-counting (src/index.py:39-40)."""
+        return self._valid_rows(batch).dropDuplicates(["dataset_id", "ts"])
 
-        One pass over the batch for the 1 s level; each coarser level
-        re-aggregates the incoming batch (cheap — batch-local), then
-        merges into the stored table partition-locally.
+    def put(self, batch: DataFrame, _count: bool = True) -> None:
+        """S6: append raw points and upsert every rollup level, in a
+        fixed number of Spark actions that does not grow with the
+        number of levels:
+
+          1. one key collect over the valid rows: the touched raw
+             ds_dates, each level's touched bin_dates and the
+             dataset_ids the catalog lacks (empty -> nothing to do);
+          2. anti-join against the stored points of those dates, then
+             an eager checkpoint (the lineage cut before the append);
+          3. the raw append;
+          4. one plan aggregates the batch to the 1 s level, then
+             merges every level's partials with its stored rows in one
+             aggregation, then one eager checkpoint;
+          5. one dynamic-overwrite write per level from that checkpoint;
+          6. a catalog rewrite, only when the batch brings new ids.
 
         _count=False exempts internal writes (metric flushes) from the
         num_puts counter, so the published series counts client puts.
         """
         if _count:
             self.num_puts += 1
+        # duplicates add no key, so this collect skips validate's
+        # dedup shuffle
+        raw_dates, bin_dates, new_ids = self._touched_keys(self._valid_rows(batch))
         batch = self.validate(batch).select("dataset_id", "ts", "value")
-        if batch.isEmpty():
+        if not raw_dates:
             return  # nothing valid to ingest (also: empty micro-batches)
         # Cross-batch idempotence (ST5): anti-join against the stored
         # points of the touched date-partitions only (partition-pruned
@@ -237,25 +287,16 @@ class TelemetryStore:
         # duplicate raw storage nor double-count rollups. The
         # reference double-counts here (src/index.py:39-40).
         if os.path.exists(self.points_path):
-            dates = [
-                r[0]
-                for r in batch.select(F.to_date("ts").alias("d")).distinct().collect()
-            ]
-            self.spark.catalog.refreshByPath(self.points_path)
             existing = (
-                self.spark.read.schema(
-                    "dataset_id string, ts timestamp, value double, "
-                    "ds_bucket int, ds_date date"
-                )
-                .parquet(self.points_path)
-                .filter(F.col("ds_date").isin(dates))
+                self._scan(self.points_path)
+                .filter(F.col("ds_date").isin(raw_dates))
                 .select("dataset_id", "ts")
             )
             batch = batch.join(existing, ["dataset_id", "ts"], "left_anti")
         # Freeze the (validated, deduped) batch NOW: the anti-join above
         # must not re-evaluate after the append below, or it would see
         # the batch's own rows in storage and erase itself from the
-        # rollup passes.
+        # rollup merge.
         batch = batch.localCheckpoint(eager=True)
         (
             batch.withColumn(
@@ -270,21 +311,33 @@ class TelemetryStore:
             .parquet(self.points_path)
         )
         self._invalidate_warm(self.points_path)
-        # Rollup cascade (A3): only the finest level reads the raw
-        # batch; each coarser level re-aggregates the previous one
-        # (~1/10 the rows per step) — not six passes over raw.
-        level = None
-        for d in FIDELITIES:
-            level = (
-                aggregate_points(batch, d)
-                if level is None
-                else cascade_from_finer(level, d)
+        self._merge_rollups(batch, bin_dates)
+        if new_ids:
+            self._merge_catalog(new_ids)
+
+    def _touched_keys(
+        self, batch: DataFrame
+    ) -> tuple[list[_dt.date], dict[int, list[_dt.date]], list[str]]:
+        """One collect over the valid rows: the distinct raw
+        ds_dates, the distinct bin_dates per level duration and the
+        dataset_ids missing from the catalog. The bins are the ones
+        the merge assigns, so the touched partitions are exact."""
+        new_id = F.col("dataset_id")
+        if os.path.exists(self.catalog_path):
+            known = self._scan(self.catalog_path).select(
+                "dataset_id", F.lit(True).alias("_known")
             )
-            # cut lineage so the next cascade step and the merge read
-            # the computed frame, not a re-expanded plan over raw
-            level = level.localCheckpoint(eager=False)
-            self._merge_rollup(level, d)
-        self._merge_catalog(batch)
+            batch = batch.join(known, "dataset_id", "left")
+            new_id = F.when(F.col("_known").isNull(), new_id)
+        row = batch.agg(
+            F.collect_set(F.to_date("ts")).alias("raw"),
+            F.collect_set(new_id).alias("new_ids"),
+            *[
+                F.collect_set(_bin_date(floor_to("ts", d))).alias(str(d))
+                for d in FIDELITIES
+            ],
+        ).first()
+        return row["raw"], {d: row[str(d)] for d in FIDELITIES}, row["new_ids"]
 
     def flush_metrics(
         self, ts: _dt.datetime, prefix: str = "tlm.metrics"
@@ -303,67 +356,110 @@ class TelemetryStore:
             self.spark.createDataFrame(rows, POINTS_SCHEMA), _count=False
         )
 
-    def _merge_catalog(self, batch: DataFrame) -> None:
+    def _merge_catalog(self, new_ids: list[str]) -> None:
         """C1: maintain the dataset catalog as a tiny dimension table
         (the reference's catalog is the data/full/ directory listing,
         src/index.py:231-239). Search then scans a frame with one row
-        per series ever written — never the fact table."""
-        path = os.path.join(self.base, "datasets")
-        new_ids = batch.select("dataset_id").distinct()
+        per series ever written — never the fact table. Called only
+        with ids the catalog does not hold yet."""
+        path = self.catalog_path
+        # an Arrow table, not Python rows: no Python worker reads it
+        merged = self.spark.createDataFrame(
+            pa.table({"dataset_id": pa.array(sorted(new_ids), pa.string())})
+        )
         if os.path.exists(path):
-            self.spark.catalog.refreshByPath(path)
-            existing = self.spark.read.parquet(path)
             # eager checkpoint: the plan reads the path it overwrites
-            merged = existing.unionByName(new_ids).distinct().localCheckpoint(
-                eager=True
+            merged = (
+                self._scan(path).unionByName(merged).localCheckpoint(eager=True)
             )
-        else:
-            merged = new_ids
         merged.coalesce(1).write.mode("overwrite").parquet(path)
         self._invalidate_warm(path)
 
-    def _merge_rollup(self, new_agg: DataFrame, duration_s: int) -> None:
-        """A2/ST3: algebraic merge into the stored level — union the
-        incoming partial aggregates with the stored rows of the
-        touched date-partitions, re-aggregate, overwrite only those
-        partitions (partitionOverwriteMode=dynamic)."""
-        path = self._rollup_path(duration_s)
-        new_agg = new_agg.withColumn(
-            "bin_date", F.to_date(F.timestamp_seconds("bin_ts"))
+    def _merge_rollups(
+        self, points: DataFrame, bin_dates: dict[int, list[_dt.date]]
+    ) -> None:
+        """A1-A3/ST3: algebraic merge of every level in one plan.
+
+        The batch is aggregated once into the finest level (A1); each
+        1 s partial then enters every level at its bin, floor(bin_ts /
+        d) * d (exact integer arithmetic; validate drops pre-epoch
+        points), as a cascade inside the plan (A3). The stored rows of
+        each level's touched bin_date partitions join them in the same
+        union, and one aggregation on (level, dataset_id, bin_ts)
+        merges both — min(min), max(max), sum(sum), sum(count), so
+        combine(agg(A), agg(B)) == agg(A ∪ B). The result is
+        checkpointed once (it reads the paths about to be
+        overwritten), then each level overwrites only its touched
+        partitions (partitionOverwriteMode=dynamic). On a cluster with
+        Delta each level's write is a MERGE INTO rollup_d ON
+        (dataset_id, bin_ts)."""
+        fine = aggregate_points(points, FIDELITIES[0]).withColumnRenamed(
+            "bin_ts", "fine_ts"
         )
-        if os.path.exists(path):
-            dates = [r[0] for r in new_agg.select("bin_date").distinct().collect()]
-            self.spark.catalog.refreshByPath(path)
-            existing = self.spark.read.parquet(path).filter(
-                F.col("bin_date").isin(dates)
+        bins = F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(d).alias("level"),
+                        (F.col("fine_ts") - F.col("fine_ts") % d).alias("bin_ts"),
+                    )
+                    for d in FIDELITIES
+                ]
             )
-            merged = (
-                existing.unionByName(new_agg)
-                .groupBy("dataset_id", "bin_ts", "bin_date")
-                .agg(
-                    F.min("min_value").alias("min_value"),
-                    F.max("max_value").alias("max_value"),
-                    F.sum("sum_values").alias("sum_values"),
-                    F.sum("count").alias("count"),
+        )
+        parts = [
+            fine.select("*", bins).select(
+                "level",
+                "dataset_id",
+                "bin_ts",
+                "min_value",
+                "max_value",
+                "sum_values",
+                "count",
+            )
+        ]
+        for d in FIDELITIES:
+            path = self._rollup_path(d)
+            if os.path.exists(path):
+                parts.append(
+                    self._scan(path)
+                    .filter(F.col("bin_date").isin(bin_dates[d]))
+                    .select(
+                        F.lit(d).alias("level"),
+                        "dataset_id",
+                        "bin_ts",
+                        "min_value",
+                        "max_value",
+                        "sum_values",
+                        "count",
+                    )
                 )
+        merged = (
+            reduce(DataFrame.unionByName, parts)
+            .groupBy("level", "dataset_id", "bin_ts")
+            .agg(
+                F.min("min_value").alias("min_value"),
+                F.max("max_value").alias("max_value"),
+                F.sum("sum_values").alias("sum_values"),
+                F.sum("count").alias("count"),
             )
-            # The merged plan READS the same path the overwrite is
-            # about to truncate — materialize it first (lineage cut).
-            # On a cluster with Delta this whole branch is a single
-            # MERGE INTO rollup_d USING new_agg ON (dataset_id,
-            # bin_ts) WHEN MATCHED THEN UPDATE min/max/sum/count.
-            merged = merged.localCheckpoint(eager=True)
-        else:
-            merged = new_agg
-        (
-            merged.write.mode("overwrite")
-            # per-write dynamic overwrite: rewrite only the partitions
-            # this batch touches, without mutating session-global conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bin_date")
-            .parquet(path)
+            .withColumn("bin_date", _bin_date(F.col("bin_ts")))
+            .localCheckpoint(eager=True)
         )
-        self._invalidate_warm(path)
+        for d in FIDELITIES:
+            path = self._rollup_path(d)
+            (
+                merged.filter(F.col("level") == d)
+                .drop("level")
+                .write.mode("overwrite")
+                # per-write dynamic overwrite: rewrite only the
+                # partitions this batch touches, without mutating
+                # session-global conf
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bin_date")
+                .parquet(path)
+            )
+            self._invalidate_warm(path)
 
     # ------------------------------------------------------------- query
     # O4/T5: reject queries whose routed result would exceed this many
@@ -417,7 +513,7 @@ class TelemetryStore:
             warm_hit = (
                 self._warm_enabled and self.points_path in self._warm_frames
             )
-            df = self._read(self.points_path, POINTS_SCHEMA)
+            df = self._read(self.points_path)
             cond = F.col("ts").between(F.lit(start), F.lit(end))
             if ids is not None:
                 cond = cond & F.col("dataset_id").isin(ids)
@@ -444,7 +540,7 @@ class TelemetryStore:
         d = int(fidelity)
         rollup_path = self._rollup_path(d)
         warm_hit = self._warm_enabled and rollup_path in self._warm_frames
-        df = self._read(rollup_path, ROLLUP_SCHEMA)
+        df = self._read(rollup_path)
         # A bin labeled bin_ts covers [bin_ts, bin_ts+d): return every
         # bin whose window overlaps [start, end] — floor the lower
         # bound to the bin grid (the bin containing `start` counts).
@@ -639,8 +735,7 @@ class TelemetryStore:
         for path in targets:
             if not os.path.exists(path):
                 continue
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path).localCheckpoint(eager=True)
+            df = self._scan(path).localCheckpoint(eager=True)
             part_cols = (
                 ["ds_bucket", "ds_date"]
                 if path == self.points_path
@@ -664,13 +759,10 @@ class TelemetryStore:
         filter — quirk fixed, SURVEY.md §4). Served from the
         maintained dimension table (one row per series), falling back
         to a distinct scan of the fact table."""
-        cat_path = os.path.join(self.base, "datasets")
-        if os.path.exists(cat_path):
-            out = self._read(cat_path, None)  # warm-cache aware
+        if os.path.exists(self.catalog_path):
+            out = self._read(self.catalog_path)  # warm-cache aware
         else:
-            out = self._read(self.points_path, POINTS_SCHEMA).select(
-                "dataset_id"
-            ).distinct()
+            out = self._read(self.points_path).select("dataset_id").distinct()
         if query:
             out = out.filter(F.col("dataset_id").contains(query))
         return out.orderBy("dataset_id").limit(max_count)

@@ -23,8 +23,10 @@ Reference parity (SURVEY.md §2.9, §3.2):
     same sink.
 
 Scale notes: foreachBatch batches arrive pre-partitioned by the
-source; the put() path shuffles once per rollup level on
-(dataset_id, bin) — each level ~1/d the rows of the last. Checkpoint
+source; the put() path aggregates the batch once to the 1 s level,
+then shuffles once for all six rollup levels, on (level, dataset_id,
+bin), and runs a fixed number of Spark jobs per micro-batch however
+many levels there are. Checkpoint
 dirs make every stage restartable exactly-once (the store's ST5
 anti-join dedup additionally makes replays idempotent).
 """

@@ -98,6 +98,47 @@ def test_data_auto_fidelity(api):
     assert pts[0]["max_value"] == 3.0
 
 
+def test_post_builds_utc_instants_and_validates(api):
+    """The POST batch goes to Spark as an Arrow table: a naive date is
+    UTC and an offset date lands on its UTC instant; a NaN value and
+    an illegal dataset_id are dropped by validate. The message still
+    counts every point the request carried."""
+    status, body = _req(
+        f"{api}/api/data",
+        "POST",
+        {
+            "data": [
+                {
+                    "dataset_id": "api.arrow",
+                    "points": [
+                        {"date": "2024-01-01T03:00:00", "value": 1.0},
+                        {"date": "2024-01-01T07:00:01+04:00", "value": 2.0},
+                        {"date": "2024-01-01T03:00:02.250000", "value": float("nan")},
+                        {"date": "2023-12-31T22:30:03-04:30", "value": 4.5},
+                    ],
+                },
+                {
+                    "dataset_id": "api bad/id",
+                    "points": [{"date": "2024-01-01T03:00:00", "value": 9.0}],
+                },
+            ]
+        },
+    )
+    assert status == 200 and body["message"] == "5 datapoints were posted"
+
+    status, body = _req(
+        f"{api}/api/data/api.arrow?start=2024-01-01T02:59:00&end=2024-01-01T03:01:00"
+    )
+    assert status == 200
+    assert [(p["date"], p["value"]) for p in body["data"]["points"]] == [
+        ("2024-01-01T03:00:00", 1.0),
+        ("2024-01-01T03:00:01", 2.0),
+        ("2024-01-01T03:00:03", 4.5),
+    ]
+    status, names = _req(f"{api}/api/datasets?text=api")
+    assert status == 200 and names == ["api.arrow"]
+
+
 def test_post_validation_errors(api):
     status, body = _req(f"{api}/api/data", "POST", {"data": []})
     assert status == 400 and "nonempty" in body["message"]

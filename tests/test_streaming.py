@@ -236,7 +236,7 @@ def test_system_metrics_example_end_to_end(spark, tmp_path):
     landing.mkdir()
     proc = subprocess.run(
         [_sys.executable, "examples/monitor_system.py", str(landing), "3"],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=60,
         capture_output=True,
         text=True,

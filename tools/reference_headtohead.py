@@ -24,12 +24,13 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import os
 import pathlib
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, "/root/reference")  # reference runs in place, unmodified
 
 

@@ -4,7 +4,8 @@ record the numbers that show the design holds as data grows.
 Ingests N_BATCHES x (N_SERIES x POINTS_PER_SERIES_PER_BATCH) synthetic
 10 Hz points (one UTC day per batch -> multiple ds_date partitions),
 then measures:
-  * ingest throughput (raw append + 6 rollup merges + catalog),
+  * ingest throughput (raw append + one merge of all 6 rollup levels
+    + catalog),
   * routed query latency at every fidelity,
   * that the FULL-fidelity narrow scan prunes to one day partition
     (PartitionFilters in the plan).
@@ -17,11 +18,12 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
