@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_tlm_spark.plans.registry import register
+from open_tlm_spark.plans.shared_subtrees import BF_HI_K, BF_LO_NQ
 from open_tlm_spark.session import fan_out
 
 # DuckDB mirror of text.tokens(lower(text)) — same CTE as the other
@@ -848,7 +849,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- Matryoshka truncation recall
 _MRL_DIM = 16  # truncated prefix dims (of 64)
 _MRL_K = 5
-_MRL_NQ = 5  # queries: vec_id < 5 (the recall-eval family convention)
+_MRL_NQ = BF_LO_NQ  # queries: the shared low brute-force query set
 
 
 def _mrl_oracle() -> str:
@@ -1340,7 +1341,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ IVF nprobe sweep
 _NPS_PROBES = (1, 2, 4, 8)
-_NPS_K = 5
+_NPS_K = BF_HI_K
 _NPS_PROBES_SQL = ", ".join(str(p) for p in _NPS_PROBES)
 
 

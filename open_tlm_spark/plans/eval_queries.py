@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from open_tlm_spark.plans.registry import register
+from open_tlm_spark.plans.shared_subtrees import BF_HI_K
 from open_tlm_spark.session import fan_out
 
 
@@ -565,7 +566,7 @@ def privacy_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- IVF recall eval
-_IVFR_K = 5
+_IVFR_K = BF_HI_K  # the shared ground truth's depth IS the eval's k
 
 
 def _ivf_recall_oracle() -> str:

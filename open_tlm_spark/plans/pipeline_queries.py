@@ -16,6 +16,7 @@ from open_tlm_spark.session import fan_out
 from open_tlm_spark.operators import similarity as S
 from open_tlm_spark.operators import text as T
 from open_tlm_spark.plans.registry import register
+from open_tlm_spark.plans.shared_subtrees import SIMHASH_BITS
 
 # Shared DuckDB CTE: the (doc_id, shingle) relation (3-word shingles
 # of lowercased whitespace tokens, distinct per doc) — mirrors
@@ -213,7 +214,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------- SimHash
-_SIMHASH_BITS = 16
+_SIMHASH_BITS = SIMHASH_BITS
 
 # Per-doc fingerprint CTE chain (ends in `fp(doc_id, simhash)`),
 # shared by the dedup_simhash gate and the Hamming refinement gate.

@@ -28,8 +28,6 @@ class QueryDef:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, or None -> rows-only check
     bench: bool = True  # False: correctness-only (e.g. writes state)
-    module: str = ""  # defining module (for evidence freshness)
-    func_name: str = ""  # defining function name in that module
     # True: the builder DELIBERATELY runs driver-side actions while
     # being built (iterative convergence loops, store round-trips,
     # self-telemetry harnesses). Exempted — explicitly, by name — from
@@ -40,12 +38,6 @@ class QueryDef:
 
 REGISTRY: dict[str, QueryDef] = {}
 
-# The driver's per-round correctness gate checks the first ~50 entries
-# of queries() in dict order; tests/test_evidence_freshness.py uses
-# this to demand that any query whose definition changed since its
-# last green driver row re-enters the checked window.
-CHECK_WINDOW = 50
-
 
 def register(
     name: str,
@@ -53,332 +45,27 @@ def register(
     bench: bool = True,
     stateful: bool = False,
 ):
-    """Register a query under SURVEY.md §2's inventory name."""
+    """Register a query under SURVEY.md §2's inventory name; each name
+    registers once, and queries() lists them in registration order."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
 
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_tables(spark, sf_dir)
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = QueryDef(
-            wrapped, oracle, bench, fn.__module__, fn.__name__, stateful
-        )
+        REGISTRY[name] = QueryDef(wrapped, oracle, bench, stateful)
         return fn
 
     return deco
 
 
-# The driver checks ~50 queries per round in dict order, so the head
-# of this list chooses what gets an in-round correctness row.
-#
-# ROTATION SCHEDULE (the evidence ledger's round counts drive this;
-# "no green older than ~3 rounds" is the freshness line):
-#   r8  — the r4-era block (43 queries) + queries changed in r8
-#         (skyline de-serialization, exact_quantiles tie fix,
-#         shared-cache/tsdb ADVICE fixes) ≈ 48-50: consolidation
-#         round, ~2 new-query slots.
-#   r9  — the r5-era block (48 queries) + changed: ZERO new slots.
-#   r10 — the r6-era block (48 queries) + changed: ZERO new slots.
-#   r11 — the r7-era block (44 queries) + changed + NEW: first free
-#         slots since r7 — spent on driver-gating the round-10
-#         serving surface (VERDICT r10 'What's missing' #2).
-#   r12 — the r8-era block + changed + 1 NEW. The block is 48 but
-#         the round-12 ivf_store work (per-cell auto-depth, attr
-#         contract/cache/build-order ADVICE fixes, the shared rank
-#         tail) stales all 4 ivf-store gates, and the new rerank
-#         gate takes 1 slot: 1 + 4 + 45 = 50, so THREE r8-era
-#         queries are deferred to r13 (docs_length_histogram,
-#         orders_pareto_share, ts_counter_rate — cheap, stable,
-#         code-untouched aggregates, and all 3 re-verified green
-#         against their DuckDB oracles locally in round 12
-#         (tools/diffcheck.py at sf0.01) so the deferral carries
-#         fresh local evidence; they head the r13 window next
-#         to the r9-era block's 47).
-#   r13 — DECLARED BEFORE the round's code work (VERDICT r12 "Next
-#         round" #2): the 3 r8-era queries deferred from r12
-#         (docs_length_histogram, orders_pareto_share,
-#         ts_counter_rate — 5 rounds since their last driver green,
-#         they MUST head) + the 5 ivf-store gates re-staled by this
-#         round's ADVICE r12 fixes (the selectivity-memo pin state,
-#         the lease-leak try/finally, the snapshot caveats, the
-#         legacy read-only flag, the probed-cell scalar bound — all
-#         on ivf_store.py, whose symbol closure covers all 5 gates)
-#         + 42 of the 47-query r9-era block = 50 exactly. FIVE
-#         r9-era rows are therefore deferred to r14:
-#         stratified_split, events_hash_sample, vocab_doc_freq,
-#         cap_per_source, ts_seasonal_residual — chosen as the
-#         block's cheapest, simplest, code-untouched members
-#         (0.17-0.44 s sampling/aggregate queries), each re-verified
-#         green against its DuckDB oracle locally this round
-#         (tools/diffcheck.py at sf0.01) so the deferral carries
-#         fresh local evidence; they head the r14 window next to
-#         the r10-era block.
-#         REVISED mid-round — r13 became the first OPTIMIZATION
-#         round, and the shared-subtree work (dedup pair-stats,
-#         normalized corpus / IVF cells / LSH signatures / PQ codes)
-#         re-fingerprinted 27 more queries. Stale set = 32 (the 5
-#         ivf gates + the 27 optimization-touched); window = 3
-#         r8-era heads + 32 stale + 15 r9-era keepers = 50 exactly.
-#         FIFTEEN more r9-era rows defer to r14 (the untouched
-#         ts_* analytics family + lsh_scurve_table,
-#         mixture_temperature_allocation, text_rolling_fingerprint
-#         — cheap, code-untouched since r9, each re-verified green
-#         against its DuckDB oracle locally this round at sf0.01 so
-#         the deferral carries fresh local evidence; every
-#         optimization-touched query was ALSO oracle-verified at
-#         sf0.01 before its commit). r14 window: the 20 deferred
-#         r9-era rows head it, then the r10-era block.
-#         LATE-ROUND EXTENSION — the second optimization batch
-#         (shared BM25 ranking, shared brute-force ground truths,
-#         shared tokenized corpus / unigram / bigram counts)
-#         re-fingerprinted 13 of the 15 r9-era keepers plus
-#         docs_bm25_topk's and the GT evals' closures. The WINDOW
-#         LIST IS UNCHANGED: every query touched by the extension
-#         was already one of the 50 (keepers + stale set) — the
-#         batch was scoped to in-window queries precisely so no
-#         further rotation rows are displaced. Stale count rises
-#         to 45, still 0 outside the window; every oracle-backed
-#         one re-verified at sf0.01 before commit (full registry:
-#         194 ok, 0 failed, UTC and America/New_York), and the
-#         no-oracle sim_ivf_train A/B'd row-identical.
-#
-# Round-12 head, in priority order:
-#   1. NEW: sim_rerank_filtered_topk — the filtered/auto-depth
-#      rerank was the one serving surface still pytest-only
-#      (VERDICT r11 'What's missing' #2); its oracle replicates the
-#      ADC candidate stage, the per-query min-probed-cell depth
-#      rule, and the filtered exact refine bit-for-bit.
-#   2. Changed: the 4 ivf-store gates (ivf_store.py: per-cell
-#      selectivity + per-query depth, VERDICT r11 missing #3; the
-#      5 ADVICE r11 fixes; _rank_topk extraction, wrong #3; int8
-#      docstring honesty, wrong #2).
-#   3. The r8-era rotation block (45 of 48; last green row round 8,
-#      code unchanged since — enforced by
-#      tests/test_evidence_freshness.py + tools/evidence.py).
-#
-# Round-11 head, in priority order:
-#   1. NEW queries: sim_ivf_filtered_topk (topk(where=...) against a
-#      brute-force-over-the-filtered-corpus oracle at nprobe=2) and
-#      sim_sq8_topk (the int8 tier's serve path — the oracle
-#      replicates the max-abs scalar quantizer exactly, so the gate
-#      hash-compares the quantized ranking itself, not an overlap
-#      metric) — plus sim_sq8_filtered_topk, gating the COMPOSITION:
-#      the int8-domain probe (adopted this round) filters the RAW
-#      code scan, a different filter site from the flat tier's,
-#      previously only overlap-tested.
-#   2. Changed: sim_ivf_persisted_topk (ivf_store.py: full
-#      name+type intake validation and duplicate-vec_id guard on the
-#      attrs join, Observation-counted compaction, selectivity-
-#      scaled filtered rerank depth — ADVICE r10 #1-#4, VERDICT r10
-#      wrong #2 / missing #3).
-#   3. The r7-era rotation block (44 queries; last green row in
-#      round 7, code unchanged since — enforced by
-#      tests/test_evidence_freshness.py + tools/evidence.py).
-#
-# Round-10 head (ZERO new-query slots, per the schedule above):
-#   1. Queries whose code CHANGED this round: sim_ivf_persisted_topk
-#      (ivf_store rewritten around VERSIONED artifacts with an atomic
-#      CURRENT-pointer swap, VERDICT r9 #3; targeted compaction,
-#      VERDICT r9 #4; one-file-per-leaf artifact writes;
-#      ivf_assign_slim now enforces the 24-bit centroid_id bound,
-#      ADVICE r9 — all on the gate query's symbol closure. VERDICT r9
-#      #5 — unrolled-dot serve default — was wired, A/B-measured
-#      1.5-3.5x SLOWER at 200k-2M, and rejected; fold stays).
-#   2. The r6-era rotation block (48 queries; last green row in round
-#      6, code unchanged since — enforced by
-#      tests/test_evidence_freshness.py + tools/evidence.py).
-# Round-10 non-registry work (pytest-pinned, no window cost): the
-# rerank exact fetch pruned to the probed cells via the
-# (centroid_id, vec_id) join (VERDICT r9 "What's wrong" #1, plan-
-# pinned), crash-mid-compaction consistency, rebuild_and_swap as the
-# consumer of the drift signal, maintenance moved out of the intake
-# sink, explicit-codebook radix validation + Hadoop-FS checkpoint
-# identity (ADVICE r9). Also new, tests/test_ivf_sq8.py: the SQ8
-# int8 middle tier (IVFSQ8Index — one _storage_rows hook, the whole
-# versioned build/intake/compact/delete/serve machinery inherited;
-# near-flat recall at a fraction of the fp64 bytes, also accepted as
-# topk_rerank's refine source) and FILTERED ANN (attribute columns
-# persisted in the artifact at build; topk(where=...) pre-filters
-# inside the parquet scan — PushedFilters + the DPP cell subquery on
-# one scan, full-fanout filtered == brute force over the filtered
-# corpus). Semantic dedup was NOT re-added: `sem_dedup_cells`
-# (plans/vector_queries.py) has covered SemDeDup since its round,
-# oracle-gated — a second variant would be padding.
-#
-# Round-9 head (for the record): sim_ivf_persisted_topk (changed) +
-# the r5-era rotation block (48 queries) — all green in
-# CORRECTNESS_r09.json except sim_ivf_train (no_oracle by design).
-#
-# Round-8 head, in priority order:
-#   1. Queries whose code CHANGED this round: parts_skyline_pareto
-#      (two-level range-partitioned skyline sweep, VERDICT r7 #2),
-#      lineitem_equidepth_histogram (exact_quantiles tie-recursion,
-#      VERDICT r7 #3), dedup_clusters (shared_cache memo kept on its
-#      (id(spark), view) key with a tableExists guard pruning stale
-#      id-reuse entries, ADVICE r7), metrics_loop_series
-#      + store_roundtrip_rollup (tsdb per-session AQE guard, ADVICE r7).
-#   2. Queries NEW in round 8 (IVF index persist/serve path).
-#   3. The r4-era rotation block (last green row in round 4, code
-#      unchanged since — enforced by tests/test_evidence_freshness.py
-#      + tools/evidence.py fingerprints).
-#   r14 — DECLARED at round start (VERDICT r13 "Next round" #2):
-#         1. the 3 queries the round-14 evidence-closure extension
-#            (tools/evidence.py now follows plans-module composition
-#            — query-builder→query-builder and shared-subtree calls)
-#            proves were restructured by r13 WITHOUT a driver row:
-#            sim_pq_recall_eval (composes the rewired
-#            sim_pq_adc_topk — VERDICT r13 "What's wrong" #1) and
-#            quality_filter_funnel / dedup_cluster_size_histogram
-#            (both compose dedup_clusters, whose CC chain was rewired
-#            onto the shared token/signature views in r13).
-#         2. queries whose code the r14 optimization batches touch
-#            (each oracle-verified at sf0.01 before its commit).
-#         3. the 20 r9-era rows deferred from r13 (schedule above).
-#         4. remaining slots: the oldest r10-era block rows; the rest
-#            of that 45-row block defers to the next window on the
-#            same cheap/stable/code-untouched criterion, each
-#            re-verified green against its DuckDB oracle locally this
-#            round (tools/diffcheck.py at sf0.01).
-_CHECK_FIRST = [
-    # 0. TelemetryStore.put now merges all rollup levels in one plan
-    "store_roundtrip_rollup",
-    "metrics_loop_series",
-    # 1. restructured-in-r13 without a driver row (closure catch)
-    "sim_pq_recall_eval",
-    "quality_filter_funnel",
-    "dedup_cluster_size_histogram",
-    # 2. touched by the r14 optimization batches
-    "quality_gopher_rules",
-    "curation_yield_by_source",
-    "text_langid",
-    "text_quality_score",
-    "docs_clean_pipeline",
-    "dedup_winnowing",
-    "customers_fuzzy_linkage",
-    "embedding_label_cohesion",
-    "sim_ivf_train",
-    "basket_part_pairs",  # batch 2: shared order-basket view (the
-    # 50th slot; its co-consumer orders_association_rules and the
-    # other batch-2 rewires are already window rows below)
-    # 3. r9-era rows deferred from r13 (5 rounds since last green)
-    "cap_per_source",
-    "events_hash_sample",
-    "lsh_scurve_table",
-    "mixture_temperature_allocation",
-    "stratified_split",
-    "text_rolling_fingerprint",
-    "ts_anomaly_mad",
-    "ts_anomaly_zscore",
-    "ts_cusum_changepoints",
-    "ts_dft_power",
-    "ts_downsample_lttb",
-    "ts_downsample_m4",
-    "ts_histogram_per_series",
-    "ts_incremental_merge",
-    "ts_ohlc_bars",
-    "ts_pairwise_corr",
-    "ts_percentile_bands",
-    "ts_seasonal_residual",
-    "ts_seasonality_strength",
-    "vocab_doc_freq",
-    # 4. r10-era block heads (oldest remaining evidence)
-    "customers_kanonymity_audit",
-    "customers_without_orders",
-    "dedup_exact",
-    "docs_heaps_law_fit",
-    "embedding_sq8_error",
-    "events_attribution_linear",
-    "events_json_props",
-    "interval_join_error_windows",
-    "multimodal_decode",
-    "orders_association_rules",
-    "orders_benford_audit",
-    "parts_above_brand_average",
-    "pivot_event_type_daily",
-    "sample_weighted_hash",
-    "sessionize_events",
-    "set_ops_purchasers_vs_errors",
-    "shards_assignment_balance",
-]
-
-# Round-13 head, for the record:
-_CHECK_FIRST_R13 = [
-    # 1. r8-era queries deferred from the r12 window (5 rounds
-    #    since their last driver green — they head, per VERDICT
-    #    r12 'Next round' #1)
-    "docs_length_histogram",
-    "orders_pareto_share",
-    "ts_counter_rate",
-    # 2. changed in round 13 (ivf_store: the 5 ADVICE r12 fixes
-    #    — all five gates share the ivf_store.py symbol closure)
-    "sim_ivf_persisted_topk",
-    "sim_ivf_filtered_topk",
-    "sim_sq8_topk",
-    "sim_sq8_filtered_topk",
-    "sim_rerank_filtered_topk",
-    # 3. re-staled by the r13 OPTIMIZATION shared-subtree work
-    #    (plans/shared_subtrees.py: shingle/MinHash pair stats,
-    #    normalized corpus, IVF cells, LSH signatures, PQ codes —
-    #    each oracle-verified at sf0.01 before its commit)
-    "decontaminate_minhash_fuzzy",
-    "dedup_clusters",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_incremental_minhash",
-    "dedup_minhash_est_vs_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_hamming",
-    "dedup_threshold_yield",
-    "docs_ngram_novelty",
-    "pq_quantize",
-    "retrieval_rrf_fusion",
-    "sem_dedup_cells",
-    "sim_ivf_assign",
-    "sim_ivf_balance_audit",
-    "sim_ivf_nprobe_sweep",
-    "sim_ivf_recall_eval",
-    "sim_ivf_topk",
-    "sim_ivfpq_topk",
-    "sim_lsh_recall_eval",
-    "sim_lsh_topk",
-    "sim_matryoshka_recall_eval",
-    "sim_pq_adc_topk",
-    "sim_topk_bruteforce",
-    "source_overlap_matrix",
-    # 4. r9-era rotation block keepers (15 of the 30 unchanged;
-    #    15 more deferred to r14, see the schedule note above)
-    "bpe_pair_counts",
-    "decontaminate_ngrams",
-    "dedup_fingerprint",
-    "docs_bm25_topk",
-    "docs_ccnet_lm_buckets",
-    "docs_collocations_pmi",
-    "docs_dsir_importance",
-    "docs_rake_keyphrases",
-    "docs_tfidf_topk",
-    "embedding_pca_covariance",
-    "event_funnel",
-    "quality_bigram_logprob",
-    "quality_repetition",
-    "quality_unigram_logprob",
-    "sim_ivf_train",
-]
-
-
-def _ordered() -> list[str]:
-    head = [n for n in _CHECK_FIRST if n in REGISTRY]
-    return head + [n for n in REGISTRY if n not in set(head)]
-
-
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _ordered()}
+    return {name: q.fn for name, q in REGISTRY.items()}
 
 
 def oracle_queries() -> dict[str, str]:
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered()
-        if REGISTRY[name].oracle is not None
+        name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None
     }

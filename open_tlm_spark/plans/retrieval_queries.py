@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from open_tlm_spark.operators import similarity as S
 from open_tlm_spark.plans.registry import register
+from open_tlm_spark.plans.shared_subtrees import IVF_NCELLS
 from open_tlm_spark.session import fan_out
 
 # ------------------------------------------------------------- BM25
@@ -268,7 +269,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------ IVF+PQ
-_IVFPQ_NCELLS = 8  # centroids: the 8 lowest vec_ids (sim_ivf convention)
+_IVFPQ_NCELLS = IVF_NCELLS  # centroids: the shared IVF cell layout's
 _IVFPQ_NPROBE = 2
 _IVFPQ_NQ_LO = 8  # queries: vec_ids 8..11
 _IVFPQ_NQ_HI = 12

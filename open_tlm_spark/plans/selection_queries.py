@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_tlm_spark.plans.registry import register
+from open_tlm_spark.plans.shared_subtrees import IVF_NCELLS
 from open_tlm_spark.session import fan_out
 
 # DuckDB mirror of text.tokens(lower(text)) — same CTE as the other
@@ -1252,7 +1253,7 @@ def dedup_threshold_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------- IVF balance audit
-_IVF_AUDIT_K = 8
+_IVF_AUDIT_K = IVF_NCELLS
 
 
 def _ivf_balance_oracle() -> str:

@@ -42,6 +42,16 @@ from pyspark.sql import functions as F
 from open_tlm_spark.operators import dedup as D
 from open_tlm_spark.operators.shared_cache import shared_view
 
+# Shape parameters of the shared vector and SimHash views. Consumers
+# that rank or filter against a view import these names, so a view and
+# the queries reading it cannot drift apart.
+IVF_NCELLS = 8  # IVF centroids: the IVF_NCELLS lowest vec_ids
+BF_LO_NQ = 5  # low brute-force query set: vec_id < BF_LO_NQ
+BF_LO_K = 10
+BF_HI_QUERIES = (8, 12)  # high brute-force query set: lo <= vec_id < hi
+BF_HI_K = 5
+SIMHASH_BITS = 16
+
 
 def shared_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, w) — tokens(lower(text)) per document, the
@@ -258,7 +268,7 @@ def shared_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = spark.table("embeddings")
-        centroids = emb.filter(F.col("vec_id") < 8).select(
+        centroids = emb.filter(F.col("vec_id") < IVF_NCELLS).select(
             F.col("vec_id").alias("centroid_id"),
             F.col("embedding").alias("cvec"),
         )
@@ -299,12 +309,15 @@ def shared_bruteforce_lo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = spark.table("embeddings")
-        queries = emb.filter(F.col("vec_id") < 5).select(
+        queries = emb.filter(F.col("vec_id") < BF_LO_NQ).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
         return S.brute_force_topk(
-            emb, queries, k=10, normed=shared_normed_embeddings(spark, sf_dir)
+            emb,
+            queries,
+            k=BF_LO_K,
+            normed=shared_normed_embeddings(spark, sf_dir),
         )
 
     return shared_view(spark, "bf_top_lo", sf_dir, build)
@@ -318,14 +331,18 @@ def shared_bruteforce_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = spark.table("embeddings")
+        lo, hi = BF_HI_QUERIES
         queries = emb.filter(
-            (F.col("vec_id") >= 8) & (F.col("vec_id") < 12)
+            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
         ).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
         return S.brute_force_topk(
-            emb, queries, k=5, normed=shared_normed_embeddings(spark, sf_dir)
+            emb,
+            queries,
+            k=BF_HI_K,
+            normed=shared_normed_embeddings(spark, sf_dir),
         )
 
     return shared_view(spark, "bf_top_hi", sf_dir, build)
@@ -424,5 +441,5 @@ def shared_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "simhash_fp",
         sf_dir,
-        lambda: D.simhash(shared_shingles(spark, sf_dir), bits=16),
+        lambda: D.simhash(shared_shingles(spark, sf_dir), bits=SIMHASH_BITS),
     )

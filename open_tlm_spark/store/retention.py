@@ -9,9 +9,7 @@ row scan.
 
 A maintenance-job module rather than a TelemetryStore method on
 purpose: like compaction on a real deployment, retention runs as a
-scheduled table service, and keeping it out of the store's module
-leaves the store's gated-query fingerprints (tools/evidence.py)
-untouched by retention-policy evolution.
+scheduled table service, separate from the write and read paths.
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ import duckdb
 import pytest
 
 from open_tlm_spark.plans import REGISTRY
-from tools.diffcheck import TABLES, compare
+from tools.diffcheck import TABLES, compare, oracle_type_problems
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -33,19 +33,30 @@ def test_query_matches_oracle(spark, oracle_con, name):
     assert not problems, f"{name}: {problems}"
 
 
-def test_check_first_names_all_registered():
-    """_ordered() silently drops _CHECK_FIRST entries that don't
-    exist in REGISTRY — a typo there would quietly burn one of the
-    driver's ~50 correctness-window slots. Pin exact membership, and
-    that the head has no duplicates (duplicates shift every later
-    query's window position)."""
-    from open_tlm_spark.plans import REGISTRY
-    from open_tlm_spark.plans.registry import _CHECK_FIRST
+def test_spark_entry_matches_registry():
+    """`__spark_entry__` is the public query contract: queries() hands
+    out every registered query and oracle_sql() every registered
+    oracle, by name, in registration order, with nothing extra."""
+    import __spark_entry__
 
-    missing = [n for n in _CHECK_FIRST if n not in REGISTRY]
-    assert not missing, f"_CHECK_FIRST names not in REGISTRY: {missing}"
-    dupes = [n for n in set(_CHECK_FIRST) if _CHECK_FIRST.count(n) > 1]
-    assert not dupes, f"_CHECK_FIRST duplicates: {dupes}"
+    qs = __spark_entry__.queries()
+    osql = __spark_entry__.oracle_sql()
+
+    assert list(qs) == list(REGISTRY)
+    assert all(qs[n] is REGISTRY[n].fn for n in qs)
+    assert list(osql) == [n for n, q in REGISTRY.items() if q.oracle is not None]
+    assert all(osql[n] == REGISTRY[n].oracle for n in osql)
+
+
+def test_register_rejects_a_duplicate_name():
+    """A second registration under a taken name would silently replace
+    the first query in REGISTRY and so in __spark_entry__'s lists."""
+    from open_tlm_spark.plans import register
+
+    before = REGISTRY["tpch_q1_pricing_summary"]
+    with pytest.raises(ValueError, match="tpch_q1_pricing_summary"):
+        register("tpch_q1_pricing_summary")(lambda spark, sf_dir: None)
+    assert REGISTRY["tpch_q1_pricing_summary"] is before
 
 
 def test_all_oracles_bind_with_safe_dtypes():
@@ -56,21 +67,8 @@ def test_all_oracles_bind_with_safe_dtypes():
     shipped twice (sessionize r1, multimodal/docs_clean r2) before
     the gate existed — it catches a bad new oracle in plain pytest
     without waiting for the full differential run."""
-    import os
-    import sys
-
-    import duckdb
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"),
-    )
-    import diffcheck
-
-    from open_tlm_spark.plans import REGISTRY
-
     con = duckdb.connect()
-    for t in diffcheck.TABLES:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"'/root/testdata/sf0.001/{t}.parquet'"
@@ -79,7 +77,7 @@ def test_all_oracles_bind_with_safe_dtypes():
     for name, q in REGISTRY.items():
         if q.oracle is None:
             continue
-        probs = diffcheck.oracle_type_problems(con.sql(q.oracle))
+        probs = oracle_type_problems(con.sql(q.oracle))
         if probs:
             bad[name] = probs
     assert not bad, f"oracles with unsafe output dtypes: {bad}"

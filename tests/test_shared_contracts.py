@@ -1,15 +1,12 @@
-"""Cross-module consistency contracts for the session-shared views
-(ADVICE r13 #1): the shared builders hardcode parameters that must
-stay compatible with the constants their consumers rank/filter by —
-a silent mismatch (e.g. bumping _IVFR_K past the shared ground
-truth's k) would truncate the GT frame and inflate recall with no
-error. The builders themselves are NOT edited to import the
-constants because every source change to a shared builder stales its
-whole consumer family in the evidence ledger (a dozen green window
-rows) — this test pins the contract from the outside instead: it
-asserts the literal parameters are still present in the builder
-source (so editing one forces updating the expected value here) and
-that every consumer constant remains compatible.
+"""Cross-module consistency contracts for the session-shared views.
+
+The shared vector and SimHash views take their shape (query sets,
+depths, cell count, fingerprint width) from names in
+plans/shared_subtrees.py, and the consuming queries import those names
+instead of repeating the numbers. The tests below check that each
+built view really has the shape its names declare, so a consumer that
+ranks or filters by them reads a complete frame: a ground truth cut
+short would truncate the recall join and inflate recall with no error.
 
 Also guards bench attribution: every shared_* builder in
 plans/shared_subtrees.py must be listed in bench.py's
@@ -22,60 +19,65 @@ from __future__ import annotations
 import ast
 import os
 
+from test_oracle_diff import SF_DIR
+
+from open_tlm_spark.plans import shared_subtrees as V
+from open_tlm_spark.session import load_tables
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SUBTREES = os.path.join(
     REPO, "open_tlm_spark", "plans", "shared_subtrees.py"
 )
 
 
-def _builder_source(name: str) -> str:
-    with open(_SUBTREES, encoding="utf-8") as f:
-        tree = ast.parse(f.read())
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name == name:
-            return ast.unparse(node)
-    raise AssertionError(f"no builder {name} in shared_subtrees.py")
+def _ranks_by_query(view) -> dict[int, list[int]]:
+    out: dict[int, list[int]] = {}
+    for r in view.select("query_id", "rank").collect():
+        out.setdefault(r.query_id, []).append(r.rank)
+    return {q: sorted(ranks) for q, ranks in out.items()}
 
 
-def test_bruteforce_hi_covers_its_consumers():
-    src = _builder_source("shared_bruteforce_hi")
-    # the literal contract: top-5 for queries 8 <= vec_id < 12
-    assert "k=5" in src, src
-    assert "8" in src and "12" in src
-    from open_tlm_spark.plans.audit_queries import _NPS_K
-    from open_tlm_spark.plans.eval_queries import _IVFR_K
-
-    assert _IVFR_K <= 5, "shared_bruteforce_hi k=5 no longer covers _IVFR_K"
-    assert _NPS_K <= 5, "shared_bruteforce_hi k=5 no longer covers _NPS_K"
+def test_bruteforce_hi_covers_its_consumers(spark):
+    """The IVF recall eval and the nprobe sweep take this view whole
+    as their top-k ground truth."""
+    load_tables(spark, SF_DIR)
+    got = _ranks_by_query(V.shared_bruteforce_hi(spark, SF_DIR))
+    lo, hi = V.BF_HI_QUERIES
+    expected = list(range(1, V.BF_HI_K + 1))
+    assert got == {q: expected for q in range(lo, hi)}
 
 
-def test_bruteforce_lo_covers_its_consumers():
-    src = _builder_source("shared_bruteforce_lo")
-    # the literal contract: top-10 for queries vec_id < 5
-    assert "k=10" in src, src
-    assert "vec_id') < 5" in src or '"vec_id") < 5' in src, src
-    from open_tlm_spark.plans.audit_queries import _MRL_K, _MRL_NQ
+def test_bruteforce_lo_covers_its_consumers(spark):
+    """The Matryoshka recall eval cuts its ground truth from this
+    view's rank prefix, so its k may not exceed the view's."""
+    from open_tlm_spark.plans.audit_queries import _MRL_K
 
-    assert _MRL_K <= 10, "shared_bruteforce_lo k=10 no longer covers _MRL_K"
-    assert _MRL_NQ <= 5, (
-        "shared_bruteforce_lo's vec_id < 5 query set no longer covers "
-        "_MRL_NQ"
+    assert _MRL_K <= V.BF_LO_K, (
+        "shared_bruteforce_lo's top-k no longer covers _MRL_K"
     )
+    load_tables(spark, SF_DIR)
+    got = _ranks_by_query(V.shared_bruteforce_lo(spark, SF_DIR))
+    expected = list(range(1, V.BF_LO_K + 1))
+    assert got == {q: expected for q in range(V.BF_LO_NQ)}
 
 
-def test_ivf_cells_and_simhash_match_consumer_constants():
-    from open_tlm_spark.plans.pipeline_queries import _SIMHASH_BITS
-    from open_tlm_spark.plans.retrieval_queries import _IVFPQ_NCELLS
-    from open_tlm_spark.plans.selection_queries import _IVF_AUDIT_K
+def test_ivf_cells_and_simhash_match_consumer_constants(spark):
+    load_tables(spark, SF_DIR)
+    cells = {
+        r.centroid_id
+        for r in V.shared_ivf_cells(spark, SF_DIR)
+        .select("centroid_id")
+        .distinct()
+        .collect()
+    }
+    assert cells == set(range(V.IVF_NCELLS))
 
-    src = _builder_source("shared_ivf_cells")
-    assert "< 8" in src, src  # 8 lowest-vec_id centroids
-    assert _IVFPQ_NCELLS == 8
-    assert _IVF_AUDIT_K == 8
-
-    src = _builder_source("shared_simhash")
-    assert "bits=16" in src, src
-    assert _SIMHASH_BITS == 16
+    fps = [
+        r.simhash
+        for r in V.shared_simhash(spark, SF_DIR).select("simhash").collect()
+    ]
+    assert min(fps) >= 0
+    assert max(fps).bit_length() == V.SIMHASH_BITS
 
 
 def test_every_shared_builder_is_bench_attributed():

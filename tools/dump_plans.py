@@ -1,8 +1,9 @@
 """Dump .explain("formatted") for registered queries to files.
 
-Optimization-round deliverable helper: writes
-plans/<tag>/<query>_<suffix>.txt for every requested query (default:
-all registered), so before/after plan diffs are committable evidence.
+Writes plans/<tag>/<query>_<suffix>.txt for every requested query
+(default: all registered), so a change's physical plans can be diffed
+before and after. The dumps are regenerable scratch: the repo's
+.gitignore keeps /plans/ out of version control.
 
 Usage:
   python tools/dump_plans.py --tag r13 --suffix before [query ...]
