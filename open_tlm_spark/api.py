@@ -32,28 +32,27 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import numpy as np
 import pyarrow as pa
 
 from open_tlm_spark.store import CommentStore, TelemetryStore
-from open_tlm_spark.store.tsdb import _as_utc
-
-
-_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-_ONE_US = _dt.timedelta(microseconds=1)
+from open_tlm_spark.store.tsdb import _EPOCH, _ONE_US, _as_utc
 
 
 def _iso(ts) -> str:
     return ts.isoformat()
 
 
-def _us_iso(us: int) -> str:
-    """Epoch-microseconds -> naive-UTC ISO string (the reference's
-    payload format, src/model/data.py:10)."""
-    return (
-        _dt.datetime.fromtimestamp(us / 1_000_000, tz=_dt.timezone.utc)
-        .replace(tzinfo=None)
-        .isoformat()
-    )
+def _iso_dates(us) -> list[str]:
+    """Epoch microseconds -> naive-UTC ISO strings exactly as
+    datetime.isoformat() writes them (the reference's payload format,
+    src/model/data.py:10): a whole second carries no fraction. One
+    vectorized call instead of a datetime per point."""
+    us = np.asarray(us, dtype=np.int64)
+    out = np.datetime_as_string(us.astype("datetime64[us]"), unit="us")
+    whole = us % 1_000_000 == 0
+    out[whole] = out[whole].astype("<U19")  # drop ".000000"
+    return out.tolist()
 
 
 class TlmHandler(BaseHTTPRequestHandler):
@@ -72,15 +71,16 @@ class TlmHandler(BaseHTTPRequestHandler):
     # mutations serialize on this lock (reads stay lock-free — single
     # node shim; a cluster deployment uses Delta's ACID instead).
     write_lock = threading.Lock()
-    # Memoized GET /api/data payloads (dashboards refetch identical
-    # windows on every refresh/pan-back — the reference effectively
-    # memoizes by holding all data in process RAM). Bounded, cleared
-    # under write_lock whenever new points are posted, and scoped
-    # PER SERVER: serve() installs a fresh dict + lock + generation
-    # counter in each BoundHandler, so two servers over different
-    # stores can never serve each other's cached payloads. These
+    # Memoized GET /api/data response bodies, JSON-encoded, so a hit
+    # skips json.dumps (dashboards refetch identical windows on every
+    # refresh/pan-back — the reference effectively memoizes by holding
+    # all data in process RAM). Bounded, cleared under write_lock
+    # whenever new points are posted, and scoped PER SERVER: serve()
+    # installs a fresh dict + lock + generation counter in each
+    # BoundHandler, so two servers over different stores can never
+    # serve each other's cached payloads. These
     # class-level defaults only back direct TlmHandler use.
-    _data_memo: dict[str, object] = {}
+    _data_memo: dict[str, bytes] = {}
     _DATA_MEMO_MAX = 256
     # Ingest generation, bumped under write_lock by every data POST.
     # A GET captures it before reading; a payload computed against a
@@ -92,7 +92,8 @@ class TlmHandler(BaseHTTPRequestHandler):
 
     # ------------------------------------------------------- plumbing
     def _send(self, code: int, payload) -> None:
-        body = json.dumps(payload).encode()
+        """payload: a JSON-able value, or an already-encoded body."""
+        body = payload if isinstance(payload, bytes) else json.dumps(payload).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -152,8 +153,7 @@ class TlmHandler(BaseHTTPRequestHandler):
                 return self._send_file(fs)
         if url.path == "/api/datasets":
             text = q.get("text", [""])[0]
-            rows = self.store.datasets(text).collect()
-            return self._send(200, [r.dataset_id for r in rows])
+            return self._send(200, self.store.list_datasets(text))
         m = re.fullmatch(r"/api/data/([^/]+)", url.path)
         if m:
             rng = self._range(q)
@@ -164,34 +164,37 @@ class TlmHandler(BaseHTTPRequestHandler):
             if hit is not None:
                 return self._send(200, hit)
             gen0 = self._gen[0]
-            # read_window: one-statement warm fast path, bounded rows
-            # sorted driver-side (a Spark range-exchange per
-            # interactive read would double the latency). Raw rows
-            # carry epoch micros (us) — formatting from the epoch
-            # avoids OS-local naive-datetime shifts on non-UTC hosts.
+            # read_window: on a warm store an in-memory lookup that
+            # runs no Spark job; rows come sorted by time. Dates are
+            # formatted from epoch instants, so a non-UTC host cannot
+            # shift them.
             rows = self.store.read_window(m.group(1), *rng)
+            # (rows unpack as tuples: a Row's by-name access is a
+            # Python-level lookup per field)
             if rows and "us" in rows[0].__fields__:
+                dates = _iso_dates([us for _, us, _ in rows])
                 points = [
-                    {"date": _us_iso(r.us), "value": r.value} for r in rows
+                    {"date": d, "value": v} for d, (_, _, v) in zip(dates, rows)
                 ]
             else:
+                dates = _iso_dates([t * 1_000_000 for _, t, *_ in rows])
                 points = [
-                    {
-                        "date": _us_iso(r.bin_ts * 1_000_000),
-                        "min_value": r.min_value,
-                        "mean_value": r.mean_value,
-                        "max_value": r.max_value,
-                    }
-                    for r in rows
+                    {"date": d, "min_value": lo, "mean_value": mean, "max_value": hi}
+                    for d, (_, _, lo, mean, hi, _, _) in zip(dates, rows)
                 ]
-            payload = {"data": {"dataset": m.group(1), "points": points}}
+            body = json.dumps(
+                {"data": {"dataset": m.group(1), "points": points}}
+            ).encode()
+            # Under write_lock, not a lock of its own: a reader then
+            # pauses behind an in-flight POST instead of competing with
+            # it for the GIL, which keeps ingest latency down.
             with self.write_lock:
                 if (
                     self._gen[0] == gen0
                     and len(self._data_memo) < self._DATA_MEMO_MAX
                 ):
-                    self._data_memo[memo_key] = payload
-            return self._send(200, payload)
+                    self._data_memo[memo_key] = body
+            return self._send(200, body)
         if url.path == "/api/comment":
             rng = self._range(q)
             if rng is None:
@@ -351,10 +354,10 @@ def serve(
     """Start the API server on a daemon thread; returns the server
     (server.server_address[1] is the bound port; shutdown() to stop).
 
-    warm=True pins the rollup levels + catalog (and raw points) in
-    memory so interactive reads serve from InMemoryRelation instead of
-    re-listing/re-decoding parquet — ingest invalidates touched levels
-    and they re-warm on next read (store.warm).
+    warm=True holds the rollup levels, the catalog and the raw points
+    as driver-side snapshots (store.warm), so a data read or a catalog
+    search runs no Spark job; ingest drops the touched paths'
+    snapshots and they rebuild on their next read.
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching

@@ -32,19 +32,29 @@ Physical layout (designed for 100 TB):
 
 Every read passes the table's known schema (the *_DDL constants), so
 no scan starts a Parquet schema-inference job.
+
+Interactive serving (read_window, list_datasets) on a warm store runs
+no Spark job: each warm path is held as one immutable driver-side
+snapshot (numpy columns sorted by (dataset_id, time) plus each
+series' row range), built by a single Arrow read of the stored table,
+so a window is two binary searches per series. Spark still does all
+storage, ingest and rollup work and builds every snapshot; get() and
+datasets() always read storage.
 """
 
 from __future__ import annotations
 
+import collections
 import datetime as _dt
-import contextlib
 import os
 import threading
 import zlib
 from functools import reduce
 
+import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from open_tlm_spark.functions.time import floor_to
@@ -68,6 +78,19 @@ _ROLLUP_DDL = (
     "sum_values double, count bigint, bin_date date"
 )
 _CATALOG_DDL = "dataset_id string"
+# Row fields of a rollup read (get and read_window).
+_ROLLUP_FIELDS = (
+    "dataset_id",
+    "bin_ts",
+    "min_value",
+    "mean_value",
+    "max_value",
+    "sum_values",
+    "count",
+)
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_ONE_US = _dt.timedelta(microseconds=1)
 
 
 def _bin_date(bin_ts: Column) -> Column:
@@ -94,9 +117,71 @@ def _ds_bucket(dataset_id: str, n_buckets: int) -> int:
     """Bucket id of a series — crc32, which Python's zlib and Spark's
     F.crc32 compute identically, so the query side can prune to one
     bucket without running a Spark job."""
-    import zlib
-
     return zlib.crc32(dataset_id.encode("utf-8")) % n_buckets
+
+
+class _Snapshot:
+    """An immutable in-memory copy of one stored points or rollup
+    table: numpy columns sorted by (dataset_id, time), where time is
+    fields[1] (epoch µs `us` for raw points, `bin_ts` for rollups),
+    and each series' [start, end) row range."""
+
+    __slots__ = ("row", "spans", "cols")
+
+    def __init__(self, fields, spans, cols):
+        self.row = Row(*fields)
+        self.spans: dict[str, tuple[int, int]] = spans
+        self.cols: dict[str, np.ndarray] = cols
+
+    @classmethod
+    def collect(cls, df: DataFrame, fields) -> "_Snapshot":
+        """Collect a (dataset_id, time, values...) frame as Arrow and
+        sort it by (dataset_id, time) without a Python object per row:
+        the ids are dictionary-encoded, so only the distinct ids become
+        Python strings. The Arrow batches, which hold every row's id,
+        are released before the sort."""
+        tbl = df.toArrow()
+        enc = pc.dictionary_encode(tbl.column("dataset_id")).combine_chunks()
+        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names[1:]}
+        del tbl
+        names = enc.dictionary.to_pylist()
+        by_name = sorted(range(len(names)), key=names.__getitem__)
+        rank = np.empty(len(names), np.int32)
+        rank[by_name] = np.arange(len(names), dtype=np.int32)
+        codes = rank[enc.indices.to_numpy()]
+        del enc
+        ends = np.cumsum(np.bincount(codes, minlength=len(names))).tolist()
+        spans = {n: (s, e) for n, s, e in zip(sorted(names), [0] + ends, ends)}
+        order = np.lexsort((cols[fields[1]], codes))
+        del codes
+        for c in cols:
+            cols[c] = cols[c][order]
+        return cls(fields, spans, cols)
+
+    def rows(self, ids: list[str] | None, lo: int, hi: int) -> list:
+        """Rows of the given series (None = all) with lo <= time <= hi,
+        sorted by (dataset_id, time); rollup rows gain mean_value =
+        sum_values / count, the float64 division Spark does."""
+        out = []
+        time = self.cols[self.row[1]]
+        for sid in self.spans if ids is None else sorted(set(ids)):
+            span = self.spans.get(sid)
+            if span is None:
+                continue
+            s, e = span
+            a = s + int(time[s:e].searchsorted(lo, "left"))
+            b = s + int(time[s:e].searchsorted(hi, "right"))
+            cols = {c: v[a:b] for c, v in self.cols.items()}
+            if "sum_values" in cols:
+                cols["mean_value"] = cols["sum_values"] / cols["count"]
+            out.extend(
+                map(
+                    self.row,
+                    [sid] * (b - a),
+                    *(cols[f].tolist() for f in self.row[1:]),
+                )
+            )
+        return out
 
 
 class TelemetryStore:
@@ -111,17 +196,14 @@ class TelemetryStore:
         self.n_buckets = n_buckets
         self.points_path = os.path.join(base_path, "points")
         self.catalog_path = os.path.join(base_path, "datasets")
-        # Interactive warm cache: path -> pinned (cached+materialized)
-        # DataFrame. Off by default; enable with warm(). Serving from
-        # an InMemoryRelation skips file listing, parquet decode, and
-        # footer reads — the difference between ~600 ms and tens of ms
-        # per read on a hot store (HEADTOHEAD.md).
-        self._warm_frames: dict[str, DataFrame] = {}
-        self._warm_views: dict[str, str] = {}
-        # Superseded warm frames awaiting unpersist (grace GC — see
-        # _invalidate_warm).
-        self._retired_warm: dict[str, DataFrame] = {}
+        # Interactive warm cache, off until warm(): path -> immutable
+        # _Snapshot (the catalog's is its sorted id list). A write
+        # drops the path's snapshot and bumps its generation; the next
+        # warm read rebuilds it (_snapshot).
         self._warm_enabled = False
+        self._snapshots: dict[str, object] = {}
+        self._warm_gen: collections.Counter[str] = collections.Counter()
+        self._warm_lock = threading.Lock()
         # A9/S12 self-telemetry counters (the reference's num_puts /
         # num_gets, src/metrics/loop.py:59-61) — sampled into the
         # store itself by flush_metrics().
@@ -149,90 +231,62 @@ class TelemetryStore:
         return self.spark.read.schema(self._schema(path)).parquet(path)
 
     def _read(self, path: str) -> DataFrame:
-        if self._warm_enabled:
-            hit = self._warm_frames.get(path)
-            if hit is not None:
-                return hit
         if not os.path.exists(path):
             return self.spark.createDataFrame([], self._schema(path))
-        df = self._scan(path)
-        if self._warm_enabled:
-            # lazily (re-)warm a level that was invalidated by ingest
-            df = self._warm_layout(path, df).cache()
-            df.count()
-            self._warm_frames[path] = df
-            # registered view backs read_window's single-statement
-            # fast path (one spark.sql call per interactive request
-            # instead of a py4j expression-tree build)
-            view = self._warm_view_name(path)
-            df.createOrReplaceTempView(view)
-            self._warm_views[path] = view
-        return df
+        return self._scan(path)
 
     # ------------------------------------------------- interactive cache
-    # Cached-partition count for the raw points frame. Small on
-    # purpose: an interactive job's wall time is dominated by task
-    # scheduling, and in-memory batch min/max stats (rows clustered by
-    # dataset_id, ts) prune the non-matching partitions' batches
-    # anyway. Measured on a 5M-point warm store: re-collecting an
-    # already-built plan takes ~55 ms; a FRESH interactive request
-    # adds ~35-50 ms of DataFrame build + Catalyst compile on top
-    # (~90 ms median end-to-end with the slim warm predicate —
-    # HEADTOHEAD.md), a fixed cost independent of store size.
-    WARM_POINTS_PARTITIONS = 4
-
-    def _warm_layout(self, path: str, df: DataFrame) -> DataFrame:
-        """Cluster a frame before pinning so in-memory batch stats
-        prune: points hash-clustered by series, everything else (tiny
-        rollup/catalog frames) a single sorted partition."""
-        if path == self.points_path:
-            return df.repartition(
-                self.WARM_POINTS_PARTITIONS, F.col("dataset_id")
-            ).sortWithinPartitions("dataset_id", "ts")
-        if "bin_ts" in df.columns:
-            return df.coalesce(1).sortWithinPartitions("dataset_id", "bin_ts")
-        return df.coalesce(1)
-
     def warm(self, fidelities: list[int] | None = None, points: bool = False) -> None:
-        """Pin hot read paths in memory for interactive serving (the
-        reference holds its whole store in process RAM; this is the
-        equivalent for the API shim, scoped to the levels a dashboard
-        actually hits). Rollup levels are tiny (≈raw/d rows); raw
-        points are opt-in. Ingest invalidates only the touched paths;
-        they re-warm lazily on next read."""
+        """Serve read_window and list_datasets from driver-side
+        snapshots (the reference holds its whole store in process RAM;
+        this is the equivalent for the API shim). Builds the snapshots
+        of the given rollup levels (default: all) and the catalog now,
+        and of raw points when points=True; any other path builds on
+        its first warm read. Each build is one Spark read of the
+        stored table; ingest drops only the touched paths' snapshots,
+        which rebuild on their next read."""
         self._warm_enabled = True
         paths = [self._rollup_path(d) for d in (fidelities or FIDELITIES)]
         paths.append(self.catalog_path)
         if points:
             paths.append(self.points_path)
         for p in paths:
-            if os.path.exists(p):
-                self._read(p)  # populates the cache
+            self._snapshot(p)
 
-    def _warm_view_name(self, path: str) -> str:
-        """Deterministic temp-view name for a warm level: store tag
-        (crc32 of the base dir, so several stores can share one
-        session) + the level's directory name."""
-        tag = zlib.crc32(self.base.encode()) & 0xFFFFFFFF
-        return f"tlm_warm_{tag:08x}_{os.path.basename(path)}"
+    def _snapshot(self, path: str):
+        """The path's snapshot, built if it was dropped. A build that
+        raced a write to its path (the generation moved on) serves the
+        read that made it but is not kept."""
+        snap = self._snapshots.get(path)
+        if snap is None:
+            gen = self._warm_gen[path]
+            snap = self._build_snapshot(path)
+            with self._warm_lock:
+                if self._warm_gen[path] == gen:
+                    self._snapshots[path] = snap
+        return snap
+
+    def _build_snapshot(self, path: str):
+        """One Spark read of a stored table, transferred as Arrow."""
+        if path == self.catalog_path:
+            return sorted(
+                self._read(path).toArrow().column("dataset_id").to_pylist()
+            )
+        if path == self.points_path:
+            fields = ("dataset_id", "us", "value")
+            cols = [F.unix_micros("ts").alias("us"), "value"]
+        else:
+            fields = _ROLLUP_FIELDS
+            cols = ["bin_ts", "min_value", "max_value", "sum_values", "count"]
+        return _Snapshot.collect(self._read(path).select("dataset_id", *cols), fields)
 
     def _invalidate_warm(self, path: str) -> None:
-        """Retire the pinned frame for a rewritten path WITHOUT
-        unpersisting it immediately: a lock-free reader that already
-        resolved this frame would otherwise recompute from lineage
-        against files the overwrite just replaced (missing-file
-        errors / partial results). The superseded frame stays cached
-        until the NEXT invalidation of the same path — one full
-        ingest cycle of grace — then is unpersisted. Costs at most
-        one extra pinned copy per recently-rewritten path; readers
-        racing TWO complete ingests remain the documented
-        single-writer-shim limitation."""
-        prev = self._retired_warm.pop(path, None)
-        if prev is not None:
-            prev.unpersist()
-        df = self._warm_frames.pop(path, None)
-        if df is not None:
-            self._retired_warm[path] = df
+        """Drop a rewritten path's snapshot. Nothing is released: a
+        reader that holds the old snapshot keeps a consistent view of
+        the table before the write."""
+        with self._warm_lock:
+            self._snapshots.pop(path, None)
+            self._warm_gen[path] += 1
 
     # ------------------------------------------------------------ ingest
     @staticmethod
@@ -469,28 +523,9 @@ class TelemetryStore:
     # fidelity overrides.
     MAX_RESULT_POINTS = 2_500_000
 
-    def get(
-        self,
-        dataset_id: str | list[str] | None,
-        start: _dt.datetime,
-        end: _dt.datetime,
-        fidelity: int | str | None = "auto",
-        max_result_points: int | None = MAX_RESULT_POINTS,
-        ordered: bool = True,
-    ) -> DataFrame:
-        """S1 + O2: exact time-range scan at an explicit or routed
-        fidelity. FULL -> raw points; otherwise rollup rows with
-        mean derived (A4).
-
-        dataset_id may be one id, a list of ids, or None (all series)
-        — multi-series reads are ONE Spark plan (isin predicate +
-        bucket-set pruning), never a driver-side per-series loop.
-
-        ordered=False skips the global sort (a range-exchange needs a
-        sampling pass — it roughly doubles warm interactive latency);
-        the API shim orders its bounded result driver-side instead.
-        """
-        self.num_gets += 1
+    def _route(self, dataset_id, start, end, fidelity, max_result_points):
+        """A read's id list (None = all series), UTC bounds and routed
+        fidelity (O2), after the fan-out guard (O4/T5)."""
         ids = (
             None
             if dataset_id is None
@@ -509,38 +544,53 @@ class TelemetryStore:
                     f"fidelity={fidelity} (> {max_result_points}); pick a "
                     "coarser fidelity or use auto-routing"
                 )
+        return ids, start, end, fidelity
+
+    def get(
+        self,
+        dataset_id: str | list[str] | None,
+        start: _dt.datetime,
+        end: _dt.datetime,
+        fidelity: int | str | None = "auto",
+        max_result_points: int | None = MAX_RESULT_POINTS,
+        ordered: bool = True,
+    ) -> DataFrame:
+        """S1 + O2: exact time-range scan at an explicit or routed
+        fidelity. FULL -> raw points; otherwise rollup rows with
+        mean derived (A4).
+
+        dataset_id may be one id, a list of ids, or None (all series)
+        — multi-series reads are ONE Spark plan (isin predicate +
+        bucket-set pruning), never a driver-side per-series loop.
+
+        ordered=False skips the global sort (a range-exchange needs a
+        sampling pass); read_window orders its bounded result
+        driver-side instead.
+        """
+        self.num_gets += 1
+        ids, start, end, fidelity = self._route(
+            dataset_id, start, end, fidelity, max_result_points
+        )
         if fidelity is None:
-            warm_hit = (
-                self._warm_enabled and self.points_path in self._warm_frames
-            )
             df = self._read(self.points_path)
             cond = F.col("ts").between(F.lit(start), F.lit(end))
             if ids is not None:
                 cond = cond & F.col("dataset_id").isin(ids)
-            # Explicit bound on the PARTITION column: Catalyst cannot
-            # derive ds_date limits from the ts predicate, and without
-            # them a narrow scan lists every day partition
-            # (PartitionFilters: [] — caught by tools/scale_smoke.py).
-            # Skipped on a warm hit: the partition columns are exactly
-            # derived from ts/dataset_id (redundant on an in-memory
-            # frame whose batch stats prune on those directly), and a
-            # leaner tree cuts ~35 ms of per-request plan compile —
-            # the fixed cost that dominates interactive latency.
-            if "ds_date" in df.columns and not warm_hit:
-                cond = cond & F.col("ds_date").between(
-                    F.lit(_utc_date(start)), F.lit(_utc_date(end))
-                )
-            if "ds_bucket" in df.columns and ids is not None and not warm_hit:
                 # driver-side crc32 == Spark's -> prune to the id set's buckets
                 cond = cond & F.col("ds_bucket").isin(
                     sorted({_ds_bucket(i, self.n_buckets) for i in ids})
                 )
+            # Explicit bound on the PARTITION column: Catalyst cannot
+            # derive ds_date limits from the ts predicate, and without
+            # them a narrow scan lists every day partition
+            # (PartitionFilters: [] — caught by tools/scale_smoke.py).
+            cond = cond & F.col("ds_date").between(
+                F.lit(_utc_date(start)), F.lit(_utc_date(end))
+            )
             out = df.filter(cond).select("dataset_id", "ts", "value")
             return out.orderBy("dataset_id", "ts") if ordered else out
         d = int(fidelity)
-        rollup_path = self._rollup_path(d)
-        warm_hit = self._warm_enabled and rollup_path in self._warm_frames
-        df = self._read(rollup_path)
+        df = self._read(self._rollup_path(d))
         # A bin labeled bin_ts covers [bin_ts, bin_ts+d): return every
         # bin whose window overlaps [start, end] — floor the lower
         # bound to the bin grid (the bin containing `start` counts).
@@ -548,27 +598,12 @@ class TelemetryStore:
         cond = (F.col("bin_ts") >= lo) & (F.col("bin_ts") <= int(end.timestamp()))
         if ids is not None:
             cond = cond & F.col("dataset_id").isin(ids)
-        # partition pruning (see FULL path; skipped on warm hits)
-        if "bin_date" in df.columns and not warm_hit:
-            cond = cond & F.col("bin_date").between(
-                F.lit(
-                    _dt.datetime.fromtimestamp(lo, tz=_dt.timezone.utc).date()
-                ),
-                F.lit(_utc_date(end)),
-            )
-        out = (
-            with_mean(df)
-            .filter(cond)
-            .select(
-                "dataset_id",
-                "bin_ts",
-                "min_value",
-                "mean_value",
-                "max_value",
-                "sum_values",
-                "count",
-            )
+        # partition pruning (see the FULL path)
+        cond = cond & F.col("bin_date").between(
+            F.lit(_dt.datetime.fromtimestamp(lo, tz=_dt.timezone.utc).date()),
+            F.lit(_utc_date(end)),
         )
+        out = with_mean(df).filter(cond).select(*_ROLLUP_FIELDS)
         return out.orderBy("dataset_id", "bin_ts") if ordered else out
 
     def read_window(
@@ -580,143 +615,31 @@ class TelemetryStore:
         max_result_points: int | None = MAX_RESULT_POINTS,
     ) -> list:
         """Interactive serving path (API GET /api/data, head-to-head
-        harness): the same rows as get(..., ordered=False) returned as
-        a DRIVER-SORTED list, engineered against the fixed per-request
-        floor that dominates bounded warm reads (HEADTOHEAD.md):
+        harness): the rows of get(), as a list sorted by (dataset_id,
+        time). Raw rows are (dataset_id, us, value), with `us` the
+        epoch-microsecond instant; rollup rows are get()'s.
 
-          * warm levels are pre-registered temp views, so a fresh
-            window is ONE spark.sql statement instead of a py4j-built
-            expression tree (~20 ms of driver chatter saved);
-          * AQE is toggled off around the micro-plan — an in-memory
-            scan+filter+project gains nothing from adaptive
-            re-planning and pays its per-query wrapper (measured
-            ~20-50 ms at 5M points). Session-scoped toggle: safe for
-            the single-writer API shim; a concurrent analytic query
-            in the same instant would only plan non-adaptively once;
-          * the bounded result (fan-out guard) sorts in the driver — a
-            Spark range-exchange would roughly double the latency.
-
-        Cold levels fall back to get().collect(). Raw rows carry an
-        extra `us` (epoch-microsecond) column so the API needn't build
-        a second projection."""
-        ids = (
-            None
-            if dataset_id is None
-            else [dataset_id]
-            if isinstance(dataset_id, str)
-            else list(dataset_id)
+        On a warm store the window is cut from the path's snapshot by
+        two binary searches per series and runs no Spark job (bounds
+        inclusive, as in get()); a dropped snapshot is rebuilt first.
+        A cold store collects get()."""
+        ids, start, end, fid = self._route(
+            dataset_id, start, end, fidelity, max_result_points
         )
-        start_u, end_u = _as_utc(start), _as_utc(end)
-        fid = fidelity
-        if fid == "auto":
-            fid = recommended_fidelity((end_u - start_u).total_seconds())
-        path = (
-            self.points_path if fid is None else self._rollup_path(int(fid))
-        )
-        warm_hit = (
-            self._warm_enabled
-            and path in self._warm_views
-            and path in self._warm_frames
-        )
-        if not warm_hit:
-            df = self.get(
-                dataset_id, start, end, fid, max_result_points, ordered=False
-            )
+        if not self._warm_enabled:
+            df = self.get(ids, start, end, fid, None, ordered=False)
             if fid is None:
-                rows = df.select(
-                    "dataset_id",
-                    "ts",
-                    F.unix_micros("ts").alias("us"),
-                    "value",
-                ).collect()
-                return sorted(rows, key=lambda r: (r.dataset_id, r.us))
-            return sorted(
-                df.collect(), key=lambda r: (r.dataset_id, r.bin_ts)
-            )
-        if max_result_points is not None and ids is not None:
-            span = (end_u - start_u).total_seconds() * len(ids)
-            est = span * 10 if fid is None else span / int(fid)
-            if est > max_result_points:
-                raise ValueError(
-                    f"range query would return ~{int(est)} points at "
-                    f"fidelity={fid} (> {max_result_points}); pick a "
-                    "coarser fidelity or use auto-routing"
-                )
+                df = df.select("dataset_id", F.unix_micros("ts").alias("us"), "value")
+            return sorted(df.collect(), key=lambda r: (r[0], r[1]))
         self.num_gets += 1
-        view = self._warm_views[path]
-        id_pred = ""
-        if ids is not None:
-            quoted = ", ".join(
-                "'" + i.replace("'", "''") + "'" for i in ids
-            )
-            id_pred = f" AND dataset_id IN ({quoted})"
         if fid is None:
-            # integer-microsecond literals: exact (timedelta floor
-            # division, no float round-trip), timezone-independent
-            # (no TIMESTAMP-string parsing in session tz), and ~75 ms
-            # faster per request than spark.sql parameter binding
-            # (measured at 5M points — the args path dominates the
-            # whole read)
-            epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            one_us = _dt.timedelta(microseconds=1)
-            s_us = (start_u - epoch) // one_us
-            e_us = (end_u - epoch) // one_us
-            sql = (
-                "SELECT dataset_id, ts, unix_micros(ts) AS us, value "
-                f"FROM {view} WHERE ts BETWEEN timestamp_micros({s_us}) "
-                f"AND timestamp_micros({e_us}){id_pred}"
-            )
-            key = lambda r: (r.dataset_id, r.us)  # noqa: E731
+            snap = self._snapshot(self.points_path)
+            lo, hi = (start - _EPOCH) // _ONE_US, (end - _EPOCH) // _ONE_US
         else:
             d = int(fid)
-            lo = int(start_u.timestamp()) // d * d
-            sql = (
-                "SELECT dataset_id, bin_ts, min_value, "
-                "sum_values / `count` AS mean_value, max_value, "
-                f"sum_values, `count` FROM {view} "
-                f"WHERE bin_ts BETWEEN {lo} AND {int(end_u.timestamp())}"
-                f"{id_pred}"
-            )
-            key = lambda r: (r.dataset_id, r.bin_ts)  # noqa: E731
-        with self._no_aqe():
-            rows = self.spark.sql(sql).collect()
-        return sorted(rows, key=key)
-
-    # ThreadingHTTPServer serves reads concurrently; a naive
-    # save/set/restore of the AQE flag races (reader B can snapshot
-    # reader A's temporary "false" as its restore value and disable
-    # AQE for the whole session). Depth-counted: only the outermost
-    # reader toggles and restores. spark.conf is PER-SESSION, so the
-    # depth/prev state is keyed by the SparkSession too (ADVICE r7:
-    # class-global state let stores bound to two sessions restore the
-    # wrong session with the wrong snapshot); entries evict when the
-    # outermost reader of that session exits.
-    _aqe_lock = threading.Lock()
-    _aqe_state: dict[int, list] = {}  # id(session) -> [depth, prev]
-
-    @contextlib.contextmanager
-    def _no_aqe(self):
-        cls = TelemetryStore
-        conf = self.spark.conf
-        sid = id(self.spark)
-        with cls._aqe_lock:
-            st = cls._aqe_state.get(sid)
-            if st is None:
-                st = cls._aqe_state[sid] = [
-                    0,
-                    conf.get("spark.sql.adaptive.enabled"),
-                ]
-                conf.set("spark.sql.adaptive.enabled", "false")
-            st[0] += 1
-        try:
-            yield
-        finally:
-            with cls._aqe_lock:
-                st = cls._aqe_state[sid]
-                st[0] -= 1
-                if st[0] == 0:
-                    conf.set("spark.sql.adaptive.enabled", st[1])
-                    del cls._aqe_state[sid]
+            snap = self._snapshot(self._rollup_path(d))
+            lo, hi = int(start.timestamp()) // d * d, int(end.timestamp())
+        return snap.rows(ids, lo, hi)
 
     # --------------------------------------------------------- maintenance
     def compact(self, max_records_per_file: int = 5_000_000) -> None:
@@ -760,9 +683,17 @@ class TelemetryStore:
         maintained dimension table (one row per series), falling back
         to a distinct scan of the fact table."""
         if os.path.exists(self.catalog_path):
-            out = self._read(self.catalog_path)  # warm-cache aware
+            out = self._scan(self.catalog_path)
         else:
             out = self._read(self.points_path).select("dataset_id").distinct()
         if query:
             out = out.filter(F.col("dataset_id").contains(query))
         return out.orderBy("dataset_id").limit(max_count)
+
+    def list_datasets(self, query: str = "", max_count: int = 300) -> list[str]:
+        """Serving counterpart of datasets() (API GET /api/datasets):
+        the same ids as a list. On a warm store with a catalog it is
+        answered from the catalog snapshot and runs no Spark job."""
+        if not (self._warm_enabled and os.path.exists(self.catalog_path)):
+            return [r.dataset_id for r in self.datasets(query, max_count).collect()]
+        return [i for i in self._snapshot(self.catalog_path) if query in i][:max_count]

@@ -1,12 +1,14 @@
 """End-to-end HTTP API tests: the reference's 8-route surface
 (server.py:47-175) over the Spark engine, driven through real HTTP."""
 
+import datetime as dt
 import json
 import urllib.request
 
+import numpy as np
 import pytest
 
-from open_tlm_spark.api import serve
+from open_tlm_spark.api import _iso_dates, serve
 from open_tlm_spark.store import CommentStore, TelemetryStore
 
 
@@ -30,6 +32,23 @@ def _req(url, method="GET", body=None):
             return resp.status, json.loads(resp.read())
     except urllib.error.HTTPError as e:
         return e.code, json.loads(e.read())
+
+
+def test_iso_dates_match_isoformat():
+    """The vectorized date formatter writes exactly what the per-point
+    datetime.isoformat() did: random instants from 1970 to 2100, whole
+    seconds (no fraction) and the microsecond edges."""
+    utc = dt.timezone.utc
+    hi = int(dt.datetime(2100, 1, 1, tzinfo=utc).timestamp()) * 1_000_000
+    draws = np.random.default_rng(7).integers(0, hi, 200_000)
+    us = [0, 1, 999_999, 1_000_000, hi] + draws.tolist()
+    us += [u // 1_000_000 * 1_000_000 for u in us[5:1000]]
+    want = [
+        dt.datetime.fromtimestamp(u / 1_000_000, tz=utc).replace(tzinfo=None).isoformat()
+        for u in us
+    ]
+    assert _iso_dates(us) == want
+    assert _iso_dates([]) == []
 
 
 def test_data_roundtrip(api):

@@ -353,95 +353,199 @@ def test_comment_gc_keeps_previous_version(spark, tmp_path):
     assert {r.text for r in cs._read().collect()} == {"one", "two", "three"}
 
 
+def _rw_store(spark, path):
+    """Two series over the 9 golden instants; the second is offset by
+    0.5 s and divided by 3, so the series interleave in time and their
+    means are not exact in binary."""
+    store = make_store(spark, path, "test_rw", PUT_GET_POINTS)
+    half = dt.timedelta(milliseconds=500)
+    store.put(
+        spark.createDataFrame(
+            [("test_rw.b", _dt(d) + half, v / 3) for d, v in PUT_GET_POINTS],
+            POINTS_SCHEMA,
+        )
+    )
+    return store
+
+
+# (ids, start, end, fidelity) windows: one id, all ids, an id list
+# with a repeat, bounds exactly on a point's instant and on a bin
+# edge, a lower bound inside a bin, an empty window, an unknown id, an
+# empty id list.
+RW_WINDOWS = [
+    ("test_rw", START, END, None),
+    ("test_rw", START, END, 100),
+    (None, START, END, None),
+    (None, START, END, 10),
+    (["test_rw.b", "test_rw", "test_rw.b"], START, END, None),
+    (["test_rw.b", "test_rw"], START, END, 1000),
+    (None, _dt("2024-01-01T02:00:00"), _dt("2024-01-01T03:00:00.100000"), None),
+    (None, _dt("2024-01-01T02:30:00"), _dt("2024-01-01T03:00:00"), 10),
+    ("test_rw", _dt("2024-01-01T02:30:09"), _dt("2024-01-01T02:59:59"), 10),
+    (None, _dt("2024-01-01T01:10:00"), _dt("2024-01-01T01:20:00"), None),
+    (None, _dt("2024-01-01T01:10:00"), _dt("2024-01-01T01:20:00"), 1),
+    ("nope", START, END, None),
+    ("nope", START, END, 100),
+    ([], START, END, None),
+    (None, START, END, 10000),  # a 7-point bin: the mean is inexact
+]
+
+
+def _as_tuples(rows):
+    return [(tuple(r.__fields__), tuple(r)) for r in rows]
+
+
 def test_read_window_matches_get_warm_and_cold(spark, tmp_path):
-    """read_window (the interactive serving fast path: registered
-    warm views, one-statement SQL, AQE-skipped micro-plan) must return
-    exactly get()'s rows — cold, warm, raw, and rollup — plus the
-    epoch-us column on raw rows."""
-    store = make_store(spark, tmp_path, "test_rw", PUT_GET_POINTS)
+    """read_window returns get()'s rows sorted by (dataset_id, time),
+    raw rows as (dataset_id, us, value). A warm store answers from its
+    snapshots with exactly the cold rows, field for field (mean_value
+    included), on every window of RW_WINDOWS."""
+    store = _rw_store(spark, tmp_path)
 
-    def raw_set(rows):
-        return {(r.dataset_id, r.us, r.value) for r in rows}
-
-    def agg_set(rows):
-        return {
-            (r.dataset_id, r.bin_ts, r.min_value, r.mean_value,
-             r.max_value, r.sum_values, r["count"])
-            for r in rows
-        }
-
-    want_raw = raw_set(
-        store.get("test_rw", START, END, fidelity=None)
+    want_raw = sorted(
+        tuple(r)
+        for r in store.get("test_rw", START, END, fidelity=None)
         .selectExpr("dataset_id", "unix_micros(ts) AS us", "value")
         .collect()
     )
-    want_agg = agg_set(store.get("test_rw", START, END, 100).collect())
+    want_agg = [tuple(r) for r in store.get("test_rw", START, END, 100).collect()]
     assert len(want_raw) == 9 and want_agg
+    assert [tuple(r) for r in store.read_window("test_rw", START, END, None)] == want_raw
+    assert [tuple(r) for r in store.read_window("test_rw", START, END, 100)] == want_agg
 
-    # cold
-    assert raw_set(store.read_window("test_rw", START, END, None)) == want_raw
-    assert agg_set(store.read_window("test_rw", START, END, 100)) == want_agg
+    cold = [_as_tuples(store.read_window(*w)) for w in RW_WINDOWS]
+    assert (len(cold[0]), len(cold[2]), len(cold[4])) == (9, 18, 18)
+    # inclusive bounds: 02:00:00 and 03:00:00.1 are points of test_rw
+    assert len(cold[6]) == 8
+    assert cold[7] and cold[8]
+    assert cold[9] == cold[10] == cold[11] == cold[12] == cold[13] == []
 
-    # warm: the registered-view SQL path
     store.warm(points=True)
-    got_raw = store.read_window("test_rw", START, END, None)
-    got_agg = store.read_window("test_rw", START, END, 100)
-    assert raw_set(got_raw) == want_raw
-    assert agg_set(got_agg) == want_agg
-    # driver-side sort contract
-    assert [r.us for r in got_raw] == sorted(r.us for r in got_raw)
-    assert [r.bin_ts for r in got_agg] == sorted(r.bin_ts for r in got_agg)
-    # AQE conf restored
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for w, want in zip(RW_WINDOWS, cold):
+        assert _as_tuples(store.read_window(*w)) == want, w
 
-    # post-warm ingest invalidates, next read re-warms + re-registers
+    # post-warm ingest drops the snapshot; the next read rebuilds it
     extra = spark.createDataFrame(
         [("test_rw", _dt("2024-01-01T03:10:00"), 42.0)], POINTS_SCHEMA
     )
     store.put(extra)
     got = store.read_window("test_rw", START, END, None)
     assert len(got) == 10 and any(r.value == 42.0 for r in got)
-
-    # a quote in the id must not break (or inject into) the SQL path
     assert store.read_window("o'brien", START, END, None) == []
 
 
-def test_read_window_concurrent_aqe_restore(spark, tmp_path):
-    """The AQE toggle is depth-counted: concurrent read_window calls
-    (the ThreadingHTTPServer serving pattern) must never snapshot each
-    other's temporary 'false' as the restore value — after any number
-    of overlapping reads, the session flag is back to its original."""
+def test_warm_reads_run_no_spark_job(spark, tmp_path):
+    """On a warm store, read_window and list_datasets are in-memory
+    lookups: 20 mixed reads plus catalog searches run no Spark job,
+    and the searches return datasets()'s ids."""
+    store = _rw_store(spark, tmp_path)
+    searches = (("", 300), ("rw.", 300), ("test", 1), ("zzz", 300))
+    want = {q: [r.dataset_id for r in store.datasets(q, n).collect()] for q, n in searches}
+    store.warm(points=True)
+    sc = spark.sparkContext
+    group = "test-warm-reads"
+    sc.setJobGroup(group, "warm reads under test")
+    try:
+        for i in range(20):
+            store.read_window(*RW_WINDOWS[i % len(RW_WINDOWS)])
+        got = {q: store.list_datasets(q, n) for q, n in searches}
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert got == want
+    assert got[""] == ["test_rw", "test_rw.b"]
+
+
+def test_snapshot_invalidated_during_build_is_not_kept(spark, tmp_path):
+    """A snapshot whose path is written while it builds serves the read
+    that built it but is not kept; the next read builds a fresh one."""
+    store = make_store(spark, tmp_path, "test_gen", PUT_GET_POINTS)
+    store.warm()
+    build = store._build_snapshot
+
+    def racing_build(path):
+        snap = build(path)
+        store._invalidate_warm(path)  # a write lands mid-build
+        return snap
+
+    store._build_snapshot = racing_build
+    assert len(store.read_window("test_gen", START, END, None)) == 9
+    assert store.points_path not in store._snapshots
+    store._build_snapshot = build
+    assert len(store.read_window("test_gen", START, END, None)) == 9
+    assert store.points_path in store._snapshots
+
+
+def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
+    """Concurrent read_window calls (the ThreadingHTTPServer serving
+    pattern), more readers than cores and a short switch interval, each
+    get the 9 rows and leave the session conf untouched. With a put
+    overlapping them, every read returns exactly the pre-put or the
+    post-put rows and none raises."""
+    import sys
     import threading
+    import time
 
     store = make_store(spark, tmp_path, "test_conc", PUT_GET_POINTS)
     store.warm(points=True)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    conf_before = spark.conf.get("spark.sql.adaptive.enabled")
+    pre = [tuple(r) for r in store.read_window("test_conc", START, END, None)]
+    assert len(pre) == 9
 
-    errors = []
+    errors, seen = [], []
+    stop = threading.Event()
 
-    def reader():
+    def reader(reads):
         try:
-            for _ in range(5):
+            for _ in range(reads):
                 rows = store.read_window("test_conc", START, END, None)
-                assert len(rows) == 9
+                seen.append([tuple(r) for r in rows])
+                if stop.is_set():
+                    return
+                time.sleep(0.002)
         except Exception as e:  # surfaced below
             errors.append(e)
 
-    threads = [threading.Thread(target=reader) for _ in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    def run(threads, during=None):
+        for t in threads:
+            t.start()
+        if during is not None:
+            during()
+            stop.set()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        run([threading.Thread(target=reader, args=(20,)) for _ in range(8)])
+        assert not errors, errors
+        assert len(seen) >= 8 and all(rows == pre for rows in seen)
+
+        seen.clear()
+        extra = spark.createDataFrame(
+            [("test_conc", _dt("2024-01-01T03:10:00"), 42.0)], POINTS_SCHEMA
+        )
+        run(
+            [threading.Thread(target=reader, args=(10**5,)) for _ in range(3)],
+            during=lambda: store.put(extra),
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    post = [tuple(r) for r in store.read_window("test_conc", START, END, None)]
     assert not errors, errors
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert len(post) == 10 and set(pre) < set(post)
+    assert seen and all(rows in (pre, post) for rows in seen)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == conf_before
 
 
-def test_read_window_two_sessions_restore_independently(spark, tmp_path):
-    """ADVICE r7: spark.conf is per-session, so the AQE depth/prev
-    state must be too. Overlapping read_window calls from stores bound
-    to two different SparkSessions must restore EACH session to ITS
-    OWN original flag — not the last exiter's value into the first
-    enterer's session."""
+def test_read_window_two_sessions_leave_conf_untouched(spark, tmp_path):
+    """Overlapping read_window calls from stores bound to two different
+    SparkSessions each get their 9 rows, and each session keeps its
+    own adaptive-execution setting."""
     import threading
 
     spark2 = spark.newSession()
@@ -473,6 +577,3 @@ def test_read_window_two_sessions_restore_independently(spark, tmp_path):
     assert not errors, errors
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark2.conf.get("spark.sql.adaptive.enabled") == "false"
-    from open_tlm_spark.store.tsdb import TelemetryStore
-
-    assert TelemetryStore._aqe_state == {}  # guard state fully evicted
