@@ -39,6 +39,9 @@ from open_tlm_spark.store import CommentStore, TelemetryStore
 from open_tlm_spark.store.tsdb import _EPOCH, _ONE_US, _as_utc
 
 
+_NOT_OBJECT = {"message": "the request body must be a JSON object"}
+
+
 def _iso(ts) -> str:
     return ts.isoformat()
 
@@ -100,9 +103,15 @@ class TlmHandler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    def _body(self):
-        n = int(self.headers.get("Content-Length", 0))
-        return json.loads(self.rfile.read(n)) if n else {}
+    def _body(self) -> dict | None:
+        """The request's JSON object ({} without a body); None when the
+        body is malformed or not an object."""
+        try:
+            n = int(self.headers.get("Content-Length", 0))
+            body = json.loads(self.rfile.read(n)) if n else {}
+        except ValueError:  # bad length, bad JSON or bad UTF-8
+            return None
+        return body if isinstance(body, dict) else None
 
     def log_message(self, *args) -> None:  # quiet test output
         pass
@@ -221,12 +230,13 @@ class TlmHandler(BaseHTTPRequestHandler):
     def do_POST(self):
         url = urlparse(self.path)
         if url.path == "/api/data":
-            body = self._body()
+            if (body := self._body()) is None:
+                return self._send(400, _NOT_OBJECT)
             data = body.get("data")
             if not isinstance(data, list) or not data:
                 return self._send(400, {"message": "'data' must be a nonempty list"})
             for ds in data:
-                if "dataset_id" not in ds:
+                if not isinstance(ds, dict) or "dataset_id" not in ds:
                     return self._send(
                         400, {"message": "One or more data fields was missing 'dataset_id'"}
                     )
@@ -278,7 +288,8 @@ class TlmHandler(BaseHTTPRequestHandler):
             # drops raw days before 'before', rollups keep serving
             from open_tlm_spark.store.retention import expire_raw
 
-            body = self._body()
+            if (body := self._body()) is None:
+                return self._send(400, _NOT_OBJECT)
             # the only route that irreversibly deletes data on an
             # unauthenticated shim: demand an explicit opt-in so a
             # single stray request can't destroy raw history
@@ -303,9 +314,10 @@ class TlmHandler(BaseHTTPRequestHandler):
                 {"message": f"{n} partitions expired", "partitions": n},
             )
         if url.path == "/api/comment/new":
-            body = self._body()
+            if (body := self._body()) is None:
+                return self._send(400, _NOT_OBJECT)
             c = body.get("comment")
-            if c is None:
+            if not isinstance(c, dict):
                 return self._send(400, {"message": "Missing required 'comment' key"})
             try:
                 ts = _dt.datetime.fromisoformat(c["date"])
@@ -318,9 +330,10 @@ class TlmHandler(BaseHTTPRequestHandler):
 
     def do_PUT(self):
         if urlparse(self.path).path == "/api/comment/edit":
-            body = self._body()
+            if (body := self._body()) is None:
+                return self._send(400, _NOT_OBJECT)
             c = body.get("comment")
-            if c is None or "id" not in c:
+            if not isinstance(c, dict) or "id" not in c:
                 return self._send(400, {"message": "Missing required 'comment' key"})
             try:
                 cid = int(c["id"])
@@ -354,16 +367,16 @@ def serve(
     """Start the API server on a daemon thread; returns the server
     (server.server_address[1] is the bound port; shutdown() to stop).
 
-    warm=True holds the rollup levels, the catalog and the raw points
-    as driver-side snapshots (store.warm), so a data read or a catalog
-    search runs no Spark job; ingest drops the touched paths'
-    snapshots and they rebuild on their next read.
+    warm=True holds the raw points, the rollups and the catalog as
+    driver-side snapshots (store.warm), so a data read or a catalog
+    search runs no Spark job; a write drops the snapshots of the
+    tables it changed and they rebuild on their next read.
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching
     path for stores migrated with tools/migrate_reference_store.py."""
     if warm:
-        store.warm(points=True)
+        store.warm()
     handler = type(
         "BoundHandler",
         (TlmHandler,),

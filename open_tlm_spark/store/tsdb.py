@@ -5,8 +5,8 @@ Reference parity (SURVEY.md §1.4, §3):
     append raw points (partitioned, sorted-within-partition for
     Parquet min/max locality) -> upsert all rollup levels. The
     reference rewrites its six levels in six passes; put() merges all
-    six in ONE aggregation and runs a fixed number of Spark actions
-    per call, however many levels there are.
+    six in ONE aggregation and ONE write and runs a fixed number of
+    Spark actions per call, however many levels there are.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
@@ -23,8 +23,9 @@ Physical layout (designed for 100 TB):
             (UTC day of ts). Within a partition, rows are sorted by
             (dataset_id, ts) at write so Parquet column stats make
             per-series range scans skip row groups.
-  rollup_<d>/ partitioned by bin_date (UTC day of the bin start);
-            tiny relative to raw (≈1/d), so read-merge-overwrite of
+  rollups/  every level in one table, partitioned by level (the bin
+            duration d in seconds) and bin_date (UTC day of the bin
+            start); level d is ≈1/d of raw, so read-merge-overwrite of
             the touched partitions is cheap — this is the
             unbounded-lateness upsert (SURVEY.md ST3) that pure
             watermarked streaming cannot express.
@@ -34,10 +35,10 @@ Every read passes the table's known schema (the *_DDL constants), so
 no scan starts a Parquet schema-inference job.
 
 Interactive serving (read_window, list_datasets) on a warm store runs
-no Spark job: each warm path is held as one immutable driver-side
+no Spark job: each stored table is held as an immutable driver-side
 snapshot (numpy columns sorted by (dataset_id, time) plus each
-series' row range), built by a single Arrow read of the stored table,
-so a window is two binary searches per series. Spark still does all
+series' row range; rollups get one per level), built by a single Arrow
+read of the table, so a window is two binary searches per series. Spark still does all
 storage, ingest and rollup work and builds every snapshot; get() and
 datasets() always read storage.
 """
@@ -75,10 +76,12 @@ _POINTS_DDL = (
 )
 _ROLLUP_DDL = (
     "dataset_id string, bin_ts bigint, min_value double, max_value double, "
-    "sum_values double, count bigint, bin_date date"
+    "sum_values double, count bigint, level int, bin_date date"
 )
 _CATALOG_DDL = "dataset_id string"
-# Row fields of a rollup read (get and read_window).
+# A rollup level's stored columns (without the partition columns),
+# and the row fields of a rollup read (get and read_window).
+_ROLLUP_COLS = ("dataset_id", "bin_ts", "min_value", "max_value", "sum_values", "count")
 _ROLLUP_FIELDS = (
     "dataset_id",
     "bin_ts",
@@ -121,10 +124,10 @@ def _ds_bucket(dataset_id: str, n_buckets: int) -> int:
 
 
 class _Snapshot:
-    """An immutable in-memory copy of one stored points or rollup
-    table: numpy columns sorted by (dataset_id, time), where time is
-    fields[1] (epoch µs `us` for raw points, `bin_ts` for rollups),
-    and each series' [start, end) row range."""
+    """An immutable in-memory copy of the stored points or of one
+    rollup level: numpy columns sorted by (dataset_id, time), where
+    time is fields[1] (epoch µs `us` for raw points, `bin_ts` for
+    rollups), and each series' [start, end) row range."""
 
     __slots__ = ("row", "spans", "cols")
 
@@ -134,29 +137,32 @@ class _Snapshot:
         self.cols: dict[str, np.ndarray] = cols
 
     @classmethod
-    def collect(cls, df: DataFrame, fields) -> "_Snapshot":
-        """Collect a (dataset_id, time, values...) frame as Arrow and
-        sort it by (dataset_id, time) without a Python object per row:
+    def collect(cls, tables: list[pa.Table], fields) -> list["_Snapshot"]:
+        """One snapshot per (dataset_id, time, values...) Arrow table,
+        sorted by (dataset_id, time) without a Python object per row:
         the ids are dictionary-encoded, so only the distinct ids become
-        Python strings. The Arrow batches, which hold every row's id,
-        are released before the sort."""
-        tbl = df.toArrow()
-        enc = pc.dictionary_encode(tbl.column("dataset_id")).combine_chunks()
-        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names[1:]}
-        del tbl
-        names = enc.dictionary.to_pylist()
-        by_name = sorted(range(len(names)), key=names.__getitem__)
-        rank = np.empty(len(names), np.int32)
-        rank[by_name] = np.arange(len(names), dtype=np.int32)
-        codes = rank[enc.indices.to_numpy()]
-        del enc
-        ends = np.cumsum(np.bincount(codes, minlength=len(names))).tolist()
-        spans = {n: (s, e) for n, s, e in zip(sorted(names), [0] + ends, ends)}
-        order = np.lexsort((cols[fields[1]], codes))
-        del codes
-        for c in cols:
-            cols[c] = cols[c][order]
-        return cls(fields, spans, cols)
+        Python strings. The list is consumed, so each table, which
+        holds every row's id, is released before its sort."""
+        out = []
+        while tables:
+            tbl = tables.pop(0)
+            enc = pc.dictionary_encode(tbl.column("dataset_id")).combine_chunks()
+            cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names[1:]}
+            del tbl
+            names = enc.dictionary.to_pylist()
+            by_name = sorted(range(len(names)), key=names.__getitem__)
+            rank = np.empty(len(names), np.int32)
+            rank[by_name] = np.arange(len(names), dtype=np.int32)
+            codes = rank[enc.indices.to_numpy()]
+            del enc
+            ends = np.cumsum(np.bincount(codes, minlength=len(names))).tolist()
+            spans = {n: (s, e) for n, s, e in zip(sorted(names), [0] + ends, ends)}
+            order = np.lexsort((cols[fields[1]], codes))
+            del codes
+            for c in cols:
+                cols[c] = cols[c][order]
+            out.append(cls(fields, spans, cols))
+        return out
 
     def rows(self, ids: list[str] | None, lo: int, hi: int) -> list:
         """Rows of the given series (None = all) with lo <= time <= hi,
@@ -195,11 +201,13 @@ class TelemetryStore:
         self.base = base_path
         self.n_buckets = n_buckets
         self.points_path = os.path.join(base_path, "points")
+        self.rollups_path = os.path.join(base_path, "rollups")
         self.catalog_path = os.path.join(base_path, "datasets")
-        # Interactive warm cache, off until warm(): path -> immutable
-        # _Snapshot (the catalog's is its sorted id list). A write
-        # drops the path's snapshot and bumps its generation; the next
-        # warm read rebuilds it (_snapshot).
+        # Interactive warm cache, off until warm(): table path ->
+        # immutable snapshot (points: a _Snapshot; rollups: level ->
+        # _Snapshot; catalog: its sorted id list). A write drops the
+        # table's snapshot and bumps its generation; the next warm read
+        # rebuilds it (_snapshot).
         self._warm_enabled = False
         self._snapshots: dict[str, object] = {}
         self._warm_gen: collections.Counter[str] = collections.Counter()
@@ -211,9 +219,6 @@ class TelemetryStore:
         self.num_gets = 0
 
     # ------------------------------------------------------------- paths
-    def _rollup_path(self, duration_s: int) -> str:
-        return os.path.join(self.base, f"rollup_{duration_s}")
-
     def _schema(self, path: str) -> str:
         if path == self.points_path:
             return _POINTS_DDL
@@ -236,21 +241,15 @@ class TelemetryStore:
         return self._scan(path)
 
     # ------------------------------------------------- interactive cache
-    def warm(self, fidelities: list[int] | None = None, points: bool = False) -> None:
+    def warm(self) -> None:
         """Serve read_window and list_datasets from driver-side
         snapshots (the reference holds its whole store in process RAM;
         this is the equivalent for the API shim). Builds the snapshots
-        of the given rollup levels (default: all) and the catalog now,
-        and of raw points when points=True; any other path builds on
-        its first warm read. Each build is one Spark read of the
-        stored table; ingest drops only the touched paths' snapshots,
-        which rebuild on their next read."""
+        of the rollups, the catalog and the raw points now, each by one
+        Spark read of the stored table; a write drops its table's
+        snapshot, which rebuilds on its next read."""
         self._warm_enabled = True
-        paths = [self._rollup_path(d) for d in (fidelities or FIDELITIES)]
-        paths.append(self.catalog_path)
-        if points:
-            paths.append(self.points_path)
-        for p in paths:
+        for p in (self.rollups_path, self.catalog_path, self.points_path):
             self._snapshot(p)
 
     def _snapshot(self, path: str):
@@ -267,18 +266,21 @@ class TelemetryStore:
         return snap
 
     def _build_snapshot(self, path: str):
-        """One Spark read of a stored table, transferred as Arrow."""
+        """One Spark read of a stored table, transferred as Arrow. The
+        rollups table is split by level while it is held."""
+        df = self._read(path)
         if path == self.catalog_path:
-            return sorted(
-                self._read(path).toArrow().column("dataset_id").to_pylist()
-            )
+            return sorted(df.toArrow().column("dataset_id").to_pylist())
         if path == self.points_path:
-            fields = ("dataset_id", "us", "value")
-            cols = [F.unix_micros("ts").alias("us"), "value"]
-        else:
-            fields = _ROLLUP_FIELDS
-            cols = ["bin_ts", "min_value", "max_value", "sum_values", "count"]
-        return _Snapshot.collect(self._read(path).select("dataset_id", *cols), fields)
+            df = df.select("dataset_id", F.unix_micros("ts").alias("us"), "value")
+            return _Snapshot.collect([df.toArrow()], ("dataset_id", "us", "value"))[0]
+        tbl = df.select(*_ROLLUP_COLS, "level").toArrow()
+        level = tbl.column("level")
+        parts = [
+            tbl.filter(pc.equal(level, d)).drop_columns(["level"]) for d in FIDELITIES
+        ]
+        del tbl, level
+        return dict(zip(FIDELITIES, _Snapshot.collect(parts, _ROLLUP_FIELDS)))
 
     def _invalidate_warm(self, path: str) -> None:
         """Drop a rewritten path's snapshot. Nothing is released: a
@@ -319,10 +321,17 @@ class TelemetryStore:
              an eager checkpoint (the lineage cut before the append);
           3. the raw append;
           4. one plan aggregates the batch to the 1 s level, then
-             merges every level's partials with its stored rows in one
-             aggregation, then one eager checkpoint;
-          5. one dynamic-overwrite write per level from that checkpoint;
+             merges every level's partials with the stored rows of the
+             touched (level, bin_date) partitions in one aggregation,
+             then one eager checkpoint;
+          5. one dynamic-overwrite write of rollups/ from that
+             checkpoint;
           6. a catalog rewrite, only when the batch brings new ids.
+
+        Replaying a put that completed is a no-op (step 2). Replaying a
+        put that failed after step 3 is not: its points are already in
+        raw storage, so the anti-join drops them and no rollup level
+        ever counts them (ROADMAP item 2: a per-put commit marker).
 
         _count=False exempts internal writes (metric flushes) from the
         num_puts counter, so the published series counts client puts.
@@ -335,11 +344,11 @@ class TelemetryStore:
         batch = self.validate(batch).select("dataset_id", "ts", "value")
         if not raw_dates:
             return  # nothing valid to ingest (also: empty micro-batches)
-        # Cross-batch idempotence (ST5): anti-join against the stored
-        # points of the touched date-partitions only (partition-pruned
-        # read — never a full-table scan), so re-sent points neither
-        # duplicate raw storage nor double-count rollups. The
-        # reference double-counts here (src/index.py:39-40).
+        # Cross-batch dedup (ST5): anti-join against the stored points
+        # of the touched date-partitions only (partition-pruned read —
+        # never a full-table scan), so re-sent points neither duplicate
+        # raw storage nor double-count rollups. The reference
+        # double-counts here (src/index.py:39-40).
         if os.path.exists(self.points_path):
             existing = (
                 self._scan(self.points_path)
@@ -432,21 +441,22 @@ class TelemetryStore:
     def _merge_rollups(
         self, points: DataFrame, bin_dates: dict[int, list[_dt.date]]
     ) -> None:
-        """A1-A3/ST3: algebraic merge of every level in one plan.
+        """A1-A3/ST3: algebraic merge of every level in one plan and one
+        write.
 
         The batch is aggregated once into the finest level (A1); each
         1 s partial then enters every level at its bin, floor(bin_ts /
         d) * d (exact integer arithmetic; validate drops pre-epoch
-        points), as a cascade inside the plan (A3). The stored rows of
-        each level's touched bin_date partitions join them in the same
-        union, and one aggregation on (level, dataset_id, bin_ts)
-        merges both — min(min), max(max), sum(sum), sum(count), so
-        combine(agg(A), agg(B)) == agg(A ∪ B). The result is
-        checkpointed once (it reads the paths about to be
-        overwritten), then each level overwrites only its touched
-        partitions (partitionOverwriteMode=dynamic). On a cluster with
-        Delta each level's write is a MERGE INTO rollup_d ON
-        (dataset_id, bin_ts)."""
+        points), as a cascade inside the plan (A3). One partition-pruned
+        scan of rollups/ reads the stored rows of each level's touched
+        bin_dates into the same union, and one aggregation on (level,
+        dataset_id, bin_ts) merges both — min(min), max(max), sum(sum),
+        sum(count), so combine(agg(A), agg(B)) == agg(A ∪ B). The result
+        is checkpointed (it reads the partitions about to be
+        overwritten), then one write overwrites only the touched
+        (level, bin_date) partitions (partitionOverwriteMode=dynamic).
+        On a cluster with Delta the write is one MERGE INTO rollups ON
+        (level, dataset_id, bin_ts)."""
         fine = aggregate_points(points, FIDELITIES[0]).withColumnRenamed(
             "bin_ts", "fine_ts"
         )
@@ -461,36 +471,19 @@ class TelemetryStore:
                 ]
             )
         )
-        parts = [
-            fine.select("*", bins).select(
-                "level",
-                "dataset_id",
-                "bin_ts",
-                "min_value",
-                "max_value",
-                "sum_values",
-                "count",
+        rows = fine.select("*", bins).select("level", *_ROLLUP_COLS)
+        if os.path.exists(self.rollups_path):
+            touched = reduce(
+                Column.__or__,
+                [
+                    (F.col("level") == d) & F.col("bin_date").isin(bin_dates[d])
+                    for d in FIDELITIES
+                ],
             )
-        ]
-        for d in FIDELITIES:
-            path = self._rollup_path(d)
-            if os.path.exists(path):
-                parts.append(
-                    self._scan(path)
-                    .filter(F.col("bin_date").isin(bin_dates[d]))
-                    .select(
-                        F.lit(d).alias("level"),
-                        "dataset_id",
-                        "bin_ts",
-                        "min_value",
-                        "max_value",
-                        "sum_values",
-                        "count",
-                    )
-                )
-        merged = (
-            reduce(DataFrame.unionByName, parts)
-            .groupBy("level", "dataset_id", "bin_ts")
+            stored = self._scan(self.rollups_path).filter(touched)
+            rows = rows.unionByName(stored.select("level", *_ROLLUP_COLS))
+        (
+            rows.groupBy("level", "dataset_id", "bin_ts")
             .agg(
                 F.min("min_value").alias("min_value"),
                 F.max("max_value").alias("max_value"),
@@ -499,21 +492,14 @@ class TelemetryStore:
             )
             .withColumn("bin_date", _bin_date(F.col("bin_ts")))
             .localCheckpoint(eager=True)
+            .write.mode("overwrite")
+            # per-write dynamic overwrite: rewrite only the partitions
+            # this batch touches, without mutating session-global conf
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("level", "bin_date")
+            .parquet(self.rollups_path)
         )
-        for d in FIDELITIES:
-            path = self._rollup_path(d)
-            (
-                merged.filter(F.col("level") == d)
-                .drop("level")
-                .write.mode("overwrite")
-                # per-write dynamic overwrite: rewrite only the
-                # partitions this batch touches, without mutating
-                # session-global conf
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bin_date")
-                .parquet(path)
-            )
-            self._invalidate_warm(path)
+        self._invalidate_warm(self.rollups_path)
 
     # ------------------------------------------------------------- query
     # O4/T5: reject queries whose routed result would exceed this many
@@ -590,7 +576,7 @@ class TelemetryStore:
             out = df.filter(cond).select("dataset_id", "ts", "value")
             return out.orderBy("dataset_id", "ts") if ordered else out
         d = int(fidelity)
-        df = self._read(self._rollup_path(d))
+        df = self._read(self.rollups_path)
         # A bin labeled bin_ts covers [bin_ts, bin_ts+d): return every
         # bin whose window overlaps [start, end] — floor the lower
         # bound to the bin grid (the bin containing `start` counts).
@@ -598,8 +584,8 @@ class TelemetryStore:
         cond = (F.col("bin_ts") >= lo) & (F.col("bin_ts") <= int(end.timestamp()))
         if ids is not None:
             cond = cond & F.col("dataset_id").isin(ids)
-        # partition pruning (see the FULL path)
-        cond = cond & F.col("bin_date").between(
+        # partition pruning on both partition columns (see the FULL path)
+        cond = cond & (F.col("level") == d) & F.col("bin_date").between(
             F.lit(_dt.datetime.fromtimestamp(lo, tz=_dt.timezone.utc).date()),
             F.lit(_utc_date(end)),
         )
@@ -619,7 +605,7 @@ class TelemetryStore:
         time). Raw rows are (dataset_id, us, value), with `us` the
         epoch-microsecond instant; rollup rows are get()'s.
 
-        On a warm store the window is cut from the path's snapshot by
+        On a warm store the window is cut from the table's snapshot by
         two binary searches per series and runs no Spark job (bounds
         inclusive, as in get()); a dropped snapshot is rebuilt first.
         A cold store collects get()."""
@@ -637,7 +623,9 @@ class TelemetryStore:
             lo, hi = (start - _EPOCH) // _ONE_US, (end - _EPOCH) // _ONE_US
         else:
             d = int(fid)
-            snap = self._snapshot(self._rollup_path(d))
+            snap = self._snapshot(self.rollups_path).get(d)
+            if snap is None:
+                return []  # not a stored level: get() finds no rows either
             lo, hi = int(start.timestamp()) // d * d, int(end.timestamp())
         return snap.rows(ids, lo, hi)
 
@@ -651,22 +639,16 @@ class TelemetryStore:
         restores (dataset_id, ts)-sorted files whose parquet min/max
         stats make per-series range scans skip whole row groups.
         """
-        targets = [self.points_path] + [
-            self._rollup_path(d) for d in FIDELITIES
-        ]
-        sort_keys = {self.points_path: ["dataset_id", "ts"]}
-        for path in targets:
+        for path, part_cols, keys in (
+            (self.points_path, ["ds_bucket", "ds_date"], ["dataset_id", "ts"]),
+            (self.rollups_path, ["level", "bin_date"], ["dataset_id", "bin_ts"]),
+        ):
             if not os.path.exists(path):
                 continue
-            df = self._scan(path).localCheckpoint(eager=True)
-            part_cols = (
-                ["ds_bucket", "ds_date"]
-                if path == self.points_path
-                else ["bin_date"]
-            )
-            keys = sort_keys.get(path, ["dataset_id", "bin_ts"])
             (
-                df.repartition(*[F.col(c) for c in part_cols])
+                self._scan(path)
+                .localCheckpoint(eager=True)
+                .repartition(*part_cols)
                 .sortWithinPartitions(*keys)
                 .write.mode("overwrite")
                 .option("maxRecordsPerFile", max_records_per_file)

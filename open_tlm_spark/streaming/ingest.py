@@ -25,10 +25,13 @@ Reference parity (SURVEY.md §2.9, §3.2):
 Scale notes: foreachBatch batches arrive pre-partitioned by the
 source; the put() path aggregates the batch once to the 1 s level,
 then shuffles once for all six rollup levels, on (level, dataset_id,
-bin), and runs a fixed number of Spark jobs per micro-batch however
-many levels there are. Checkpoint
-dirs make every stage restartable exactly-once (the store's ST5
-anti-join dedup additionally makes replays idempotent).
+bin), writes them to the one rollups/ table in one write, and runs a
+fixed number of Spark jobs per micro-batch however many levels there
+are. Checkpoint dirs make the source offsets restartable. A replayed
+micro-batch whose put completed is a no-op (the store's ST5 anti-join
+drops its points), but one whose put failed after the raw append
+loses its points from every rollup level: the anti-join drops them
+before the merge (see TelemetryStore.put).
 """
 
 from __future__ import annotations

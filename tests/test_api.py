@@ -158,11 +158,46 @@ def test_post_builds_utc_instants_and_validates(api):
     assert status == 200 and names == ["api.arrow"]
 
 
+def _raw_req(url, method, data: bytes):
+    """_req with a body sent as given, not JSON-encoded."""
+    req = urllib.request.Request(url, data=data, method=method)
+    try:
+        with urllib.request.urlopen(req) as resp:
+            return resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
 def test_post_validation_errors(api):
     status, body = _req(f"{api}/api/data", "POST", {"data": []})
     assert status == 400 and "nonempty" in body["message"]
     status, body = _req(f"{api}/api/data", "POST", {"data": [{"points": []}]})
     assert status == 400 and "dataset_id" in body["message"]
+    status, body = _req(f"{api}/api/data", "POST", {"data": [1]})
+    assert status == 400 and "dataset_id" in body["message"]
+
+
+@pytest.mark.parametrize(
+    "method, route",
+    [
+        ("POST", "/api/data"),
+        ("POST", "/api/admin/expire"),
+        ("POST", "/api/comment/new"),
+        ("PUT", "/api/comment/edit"),
+    ],
+)
+def test_malformed_body_is_a_400(api, method, route):
+    """A truncated body, a top-level array or non-UTF-8 bytes get a 400
+    response, not a dropped connection."""
+    for data in (b'{"data": [', b"[1]", b'"text"', b"\xff"):
+        status, body = _raw_req(f"{api}{route}", method, data)
+        assert status == 400 and "JSON object" in body["message"], data
+    if route.startswith("/api/comment"):  # a comment that is no object
+        status, _ = _req(f"{api}{route}", method, {"comment": 5})
+        assert status == 400
+    # the server still answers
+    status, _ = _req(f"{api}/api/datasets")
+    assert status == 200
 
 
 def test_comment_crud(api):

@@ -1,6 +1,6 @@
 """TelemetryStore.put: a fixed Spark-job budget per put, exact
-touched rollup partitions across a UTC midnight, and idempotent
-replay."""
+touched rollup partitions across a UTC midnight, idempotent replay of
+a completed put, and the known gap in replaying a failed one."""
 
 import contextlib
 import datetime as dt
@@ -44,16 +44,17 @@ def points(spark, ids, start, n, step_s):
 
 def test_put_job_budget(spark, tmp_path):
     """A put into a non-empty store runs a fixed handful of Spark jobs
-    (54 when each rollup level had its own pass). The second put also
-    brings a new series, so the catalog rewrite is counted too."""
+    (11), with one rollup write for all six levels. A put that brings
+    a new series adds the catalog rewrite's two jobs (a checkpoint and
+    a write)."""
     store = TelemetryStore(spark, str(tmp_path))
     t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
     store.put(points(spark, ["budget.a", "budget.b"], t0, 500, 0.1))
     counts = []
-    for k in range(2):
+    for k, new in enumerate((["budget.new0"], ["budget.new1"], [])):
         batch = points(
             spark,
-            ["budget.a", "budget.b", f"budget.new{k}"],
+            ["budget.a", "budget.b", *new],
             t0 + dt.timedelta(minutes=5 * (k + 1)),
             500,
             0.1,
@@ -61,8 +62,8 @@ def test_put_job_budget(spark, tmp_path):
         with job_group(spark) as jobs:
             store.put(batch)
             counts.append(len(jobs()))
-    assert 0 < counts[0] <= 20, counts
-    assert counts[0] == counts[1], counts
+    assert 0 < counts[2] <= 11, counts
+    assert counts[0] == counts[1] <= counts[2] + 2, counts
 
 
 def _levels_match_raw(store):
@@ -90,9 +91,8 @@ def _levels_match_raw(store):
 
 
 def _bin_date_dirs(store, d):
-    return sorted(
-        n for n in os.listdir(store._rollup_path(d)) if n.startswith("bin_date=")
-    )
+    level = os.path.join(store.rollups_path, f"level={d}")
+    return sorted(n for n in os.listdir(level) if n.startswith("bin_date="))
 
 
 def test_put_merges_bins_that_start_a_day_earlier_and_replays(spark, tmp_path):
@@ -109,6 +109,7 @@ def test_put_merges_bins_that_start_a_day_earlier_and_replays(spark, tmp_path):
     straddle = points(spark, ids, jan1 + dt.timedelta(hours=23, minutes=40), 400, 61.0)
     store.put(straddle)
     _levels_match_raw(store)
+    assert sorted(os.listdir(tmp_path)) == ["datasets", "points", "rollups"]
     # the 100000 s bin holding every point so far runs to 01-02 12:53
     assert _bin_date_dirs(store, 100_000) == ["bin_date=2024-01-01"]
     for d in (1000, 10_000):
@@ -136,4 +137,36 @@ def test_put_merges_bins_that_start_a_day_earlier_and_replays(spark, tmp_path):
     )
     store.put(late)
     assert store.get(None, LO, HI, None).count() == n_raw + 6
+    _levels_match_raw(store)
+
+    store.compact()  # rewrites both tables' files, keeps every row
+    assert store.get(None, LO, HI, None).count() == n_raw + 6
+    _levels_match_raw(store)
+    assert _bin_date_dirs(store, 100_000) == ["bin_date=2024-01-01"]
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="a put that fails after the raw append loses its batch from "
+    "every rollup level on replay: the anti-join drops the stored points "
+    "(ROADMAP item 2, per-put commit marker)",
+)
+def test_replay_after_failed_rollup_merge(spark, tmp_path):
+    """A put that fails after the raw append, then is replayed, leaves
+    every level equal to aggregate_points over raw."""
+    store = TelemetryStore(spark, str(tmp_path))
+    t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
+    store.put(points(spark, ["crash.a"], t0, 20, 0.5))
+    batch = points(spark, ["crash.a"], t0 + dt.timedelta(seconds=10), 20, 0.5)
+    merge = store._merge_rollups
+
+    def crash(*args):
+        store._merge_rollups = merge
+        raise RuntimeError("killed after the raw append")
+
+    store._merge_rollups = crash
+    with pytest.raises(RuntimeError):
+        store.put(batch)
+    store.put(batch)  # the replay
+    assert store.get(None, LO, HI, None).count() == 40
     _levels_match_raw(store)

@@ -65,7 +65,7 @@ def test_file_ingest_with_late_backfill(spark, tmp_path):
         # just the raw append — stopping the query mid-merge would
         # interrupt it.
         def _merged():
-            rows = spark.read.parquet(store._rollup_path(1)).collect()
+            rows = spark.read.parquet(store.rollups_path).filter("level = 1").collect()
             return any(r["count"] == 3 for r in rows)
 
         assert _wait(_merged), "late batch rollup merge never completed"

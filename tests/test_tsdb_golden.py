@@ -420,17 +420,19 @@ def test_read_window_matches_get_warm_and_cold(spark, tmp_path):
     assert cold[7] and cold[8]
     assert cold[9] == cold[10] == cold[11] == cold[12] == cold[13] == []
 
-    store.warm(points=True)
+    store.warm()
     for w, want in zip(RW_WINDOWS, cold):
         assert _as_tuples(store.read_window(*w)) == want, w
 
-    # post-warm ingest drops the snapshot; the next read rebuilds it
+    # post-warm ingest drops the snapshots; the next read rebuilds them
     extra = spark.createDataFrame(
         [("test_rw", _dt("2024-01-01T03:10:00"), 42.0)], POINTS_SCHEMA
     )
     store.put(extra)
     got = store.read_window("test_rw", START, END, None)
     assert len(got) == 10 and any(r.value == 42.0 for r in got)
+    want_agg = [tuple(r) for r in store.get("test_rw", START, END, 100).collect()]
+    assert [tuple(r) for r in store.read_window("test_rw", START, END, 100)] == want_agg
     assert store.read_window("o'brien", START, END, None) == []
 
 
@@ -441,7 +443,13 @@ def test_warm_reads_run_no_spark_job(spark, tmp_path):
     store = _rw_store(spark, tmp_path)
     searches = (("", 300), ("rw.", 300), ("test", 1), ("zzz", 300))
     want = {q: [r.dataset_id for r in store.datasets(q, n).collect()] for q, n in searches}
-    store.warm(points=True)
+    store.warm()
+    # one snapshot per stored table
+    assert set(store._snapshots) == {
+        store.points_path,
+        store.rollups_path,
+        store.catalog_path,
+    }
     sc = spark.sparkContext
     group = "test-warm-reads"
     sc.setJobGroup(group, "warm reads under test")
@@ -459,8 +467,9 @@ def test_warm_reads_run_no_spark_job(spark, tmp_path):
 
 
 def test_snapshot_invalidated_during_build_is_not_kept(spark, tmp_path):
-    """A snapshot whose path is written while it builds serves the read
-    that built it but is not kept; the next read builds a fresh one."""
+    """A snapshot whose table is written while it builds serves the
+    read that built it but is not kept; the next read builds a fresh
+    one. Checked for the raw points and the rollups tables."""
     store = make_store(spark, tmp_path, "test_gen", PUT_GET_POINTS)
     store.warm()
     build = store._build_snapshot
@@ -470,12 +479,14 @@ def test_snapshot_invalidated_during_build_is_not_kept(spark, tmp_path):
         store._invalidate_warm(path)  # a write lands mid-build
         return snap
 
-    store._build_snapshot = racing_build
-    assert len(store.read_window("test_gen", START, END, None)) == 9
-    assert store.points_path not in store._snapshots
-    store._build_snapshot = build
-    assert len(store.read_window("test_gen", START, END, None)) == 9
-    assert store.points_path in store._snapshots
+    for path, fid, n in ((store.points_path, None, 9), (store.rollups_path, 100, 4)):
+        store._invalidate_warm(path)  # warm() built it: drop it first
+        store._build_snapshot = racing_build
+        assert len(store.read_window("test_gen", START, END, fid)) == n
+        assert path not in store._snapshots
+        store._build_snapshot = build
+        assert len(store.read_window("test_gen", START, END, fid)) == n
+        assert path in store._snapshots
 
 
 def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
@@ -489,7 +500,7 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
     import time
 
     store = make_store(spark, tmp_path, "test_conc", PUT_GET_POINTS)
-    store.warm(points=True)
+    store.warm()
     conf_before = spark.conf.get("spark.sql.adaptive.enabled")
     pre = [tuple(r) for r in store.read_window("test_conc", START, END, None)]
     assert len(pre) == 9
@@ -551,8 +562,8 @@ def test_read_window_two_sessions_leave_conf_untouched(spark, tmp_path):
     spark2 = spark.newSession()
     store1 = make_store(spark, tmp_path / "s1", "test_ms", PUT_GET_POINTS)
     store2 = make_store(spark2, tmp_path / "s2", "test_ms", PUT_GET_POINTS)
-    store1.warm(points=True)
-    store2.warm(points=True)
+    store1.warm()
+    store2.warm()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark2.conf.set("spark.sql.adaptive.enabled", "false")
 

@@ -185,10 +185,10 @@ def run_ours(series: int, points: int, batches: int, day0: dt.datetime):
     out = {"ingest_s": t_ingest}
     # cold: every read lists + decodes parquet from disk
     out.update(_reads(""))
-    # warm: the API serving configuration (serve(warm=True)) — rollup
-    # levels, catalog and raw points held as driver-side snapshots
+    # warm: the API serving configuration (serve(warm=True)) — raw
+    # points, rollups and catalog held as driver-side snapshots
     t0 = time.perf_counter()
-    store.warm(points=True)
+    store.warm()
     out["warm_setup_s"] = time.perf_counter() - t0
     out.update(_reads("_warm"))
     return out
@@ -246,7 +246,7 @@ def main() -> int:
     print(
         f"Warm = serve(warm=True): rollups + catalog + raw points held as "
         f"driver-side snapshots (one-time setup {ours['warm_setup_s']:.1f} s after "
-        f"ingest; ingest drops the touched levels' snapshots, which rebuild on "
+        f"ingest; ingest drops the written tables' snapshots, which rebuild on "
         f"their next read). Cold rows kept for honesty — they are what a fresh process "
         f"pays on first read."
     )

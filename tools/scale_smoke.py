@@ -93,7 +93,7 @@ def main() -> int:
         n = store.get(
             sid, day0, day0 + dt.timedelta(days=args.batches), fidelity=fid
         ).count()
-        print(f"| rollup_{fid} full-range ({n} rows) | {time.perf_counter() - t0:.2f} s |")
+        print(f"| level {fid} full-range ({n} rows) | {time.perf_counter() - t0:.2f} s |")
 
     # auto-routed wide query
     t0 = time.perf_counter()
