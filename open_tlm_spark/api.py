@@ -36,7 +36,7 @@ import numpy as np
 import pyarrow as pa
 
 from open_tlm_spark.store import CommentStore, TelemetryStore
-from open_tlm_spark.store.tsdb import _EPOCH, _ONE_US, _as_utc
+from open_tlm_spark.store.tsdb import _epoch_us, _points_table
 
 
 _NOT_OBJECT = {"message": "the request body must be a JSON object"}
@@ -56,6 +56,39 @@ def _iso_dates(us) -> list[str]:
     whole = us % 1_000_000 == 0
     out[whole] = out[whole].astype("<U19")  # drop ".000000"
     return out.tolist()
+
+
+def _json_floats(x: np.ndarray) -> list:
+    """A float64 column as json.dumps writes each value: str() of a
+    float is float.__repr__, and a non-finite value is NaN, Infinity or
+    -Infinity (_valid_rows drops NaN but not ±inf, and a rollup mean of
+    ±inf partials can be NaN)."""
+    out = x.tolist()
+    for i in np.flatnonzero(~np.isfinite(x)).tolist():
+        v = out[i]
+        out[i] = "NaN" if v != v else "Infinity" if v > 0 else "-Infinity"
+    return out
+
+
+def _data_body(dataset: str, table: pa.Table) -> bytes:
+    """The GET /api/data body for a read_window table, byte for byte
+    json.dumps({"data": {"dataset": dataset, "points": points}}) with
+    points the reference's dicts: (date, value) for raw rows, (date,
+    min_value, mean_value, max_value) for rollup rows. Built from the
+    columns by one %-format over every point: no dict per point."""
+    if "us" in table.column_names:
+        us = table.column("us").to_numpy()
+        keys = ("value",)
+    else:
+        us = table.column("bin_ts").to_numpy() * 1_000_000
+        keys = ("min_value", "mean_value", "max_value")
+    cols = [_iso_dates(us)] + [_json_floats(table.column(k).to_numpy()) for k in keys]
+    args = [None] * (len(cols) * len(us))
+    for i, col in enumerate(cols):
+        args[i :: len(cols)] = col
+    point = '{"date": "%s"' + "".join(f', "{k}": %s' for k in keys) + "}"
+    points = ", ".join([point] * len(us)) % tuple(args)
+    return f'{{"data": {{"dataset": {json.dumps(dataset)}, "points": [{points}]}}}}'.encode()
 
 
 class TlmHandler(BaseHTTPRequestHandler):
@@ -174,26 +207,12 @@ class TlmHandler(BaseHTTPRequestHandler):
                 return self._send(200, hit)
             gen0 = self._gen[0]
             # read_window: on a warm store an in-memory lookup that
-            # runs no Spark job; rows come sorted by time. Dates are
+            # runs no Spark job, returning Arrow columns sorted by
+            # time; the body is encoded from the columns. Dates are
             # formatted from epoch instants, so a non-UTC host cannot
             # shift them.
-            rows = self.store.read_window(m.group(1), *rng)
-            # (rows unpack as tuples: a Row's by-name access is a
-            # Python-level lookup per field)
-            if rows and "us" in rows[0].__fields__:
-                dates = _iso_dates([us for _, us, _ in rows])
-                points = [
-                    {"date": d, "value": v} for d, (_, _, v) in zip(dates, rows)
-                ]
-            else:
-                dates = _iso_dates([t * 1_000_000 for _, t, *_ in rows])
-                points = [
-                    {"date": d, "min_value": lo, "mean_value": mean, "max_value": hi}
-                    for d, (_, _, lo, mean, hi, _, _) in zip(dates, rows)
-                ]
-            body = json.dumps(
-                {"data": {"dataset": m.group(1), "points": points}}
-            ).encode()
+            window = self.store.read_window(m.group(1), *rng)
+            body = _data_body(m.group(1), window)
             # Under write_lock, not a lock of its own: a reader then
             # pauses behind an in-flight POST instead of competing with
             # it for the GIL, which keeps ingest latency down.
@@ -249,25 +268,13 @@ class TlmHandler(BaseHTTPRequestHandler):
                 for ds in data:
                     ids += [str(ds["dataset_id"])] * len(ds["points"])
                     for p in ds["points"]:
-                        # naive ISO dates are UTC by engine convention;
-                        # integer epoch micros are exact, while pyarrow
-                        # can keep an offset-aware datetime's wall
-                        # clock instead of its UTC instant
-                        d = _as_utc(_dt.datetime.fromisoformat(p["date"]))
-                        stamps.append((d - _EPOCH) // _ONE_US)
+                        # naive ISO dates are UTC by engine convention
+                        d = _dt.datetime.fromisoformat(p["date"])
+                        stamps.append(_epoch_us(d))
                         values.append(float(p["value"]))
             except (KeyError, ValueError, TypeError) as e:
                 return self._send(400, {"message": f"invalid point: {e}"})
-            # An Arrow table goes to the JVM as one columnar stream; a
-            # list of Python rows would be pickled and re-read by
-            # Python workers on every scan of the batch.
-            batch = pa.table(
-                {
-                    "dataset_id": pa.array(ids, pa.string()),
-                    "ts": pa.array(stamps, pa.timestamp("us", tz="UTC")),
-                    "value": pa.array(values, pa.float64()),
-                }
-            )
+            batch = _points_table(ids, stamps, values)
             with self.write_lock:
                 self.store.put(self.store.spark.createDataFrame(batch))
                 self._gen[0] += 1  # in-flight GETs must not memoize
@@ -370,7 +377,9 @@ def serve(
     warm=True holds the raw points, the rollups and the catalog as
     driver-side snapshots (store.warm), so a data read or a catalog
     search runs no Spark job; a write drops the snapshots of the
-    tables it changed and they rebuild on their next read.
+    tables it changed and they rebuild on their next read. A data
+    read's window comes back as Arrow columns, from which the JSON
+    body is encoded without a dict per point (_data_body).
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching

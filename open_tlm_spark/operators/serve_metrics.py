@@ -218,19 +218,18 @@ class ServeMetrics:
         `tlm.metrics.num_puts`. Returns the number of series
         published. Wire it into the maintenance cadence (or the
         metrics stream's foreachBatch) on a serving host."""
-        from open_tlm_spark.store.tsdb import POINTS_SCHEMA, _as_utc
+        from open_tlm_spark.store.tsdb import _epoch_us, _points_table
 
-        snap = self.snapshot()
-        rows = [
-            (f"{prefix}.{name}", _as_utc(ts), float(value))
-            for name, value in sorted(snap.items())
-        ]
-        if not rows:
+        snap = sorted(self.snapshot().items())
+        if not snap:
             return 0
-        store.put(
-            store.spark.createDataFrame(rows, POINTS_SCHEMA), _count=False
+        batch = _points_table(
+            [f"{prefix}.{name}" for name, _ in snap],
+            [_epoch_us(ts)] * len(snap),
+            [float(value) for _, value in snap],
         )
-        return len(rows)
+        store.put(store.spark.createDataFrame(batch), _count=False)
+        return len(snap)
 
 
 SERVE_METRICS = ServeMetrics()

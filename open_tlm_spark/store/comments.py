@@ -16,11 +16,12 @@ import datetime as _dt
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_tlm_spark.schemas import COMMENTS_SCHEMA
-from open_tlm_spark.store.tsdb import _as_utc
+from open_tlm_spark.store.tsdb import _as_utc, _epoch_us
 
 
 class CommentStore:
@@ -82,8 +83,16 @@ class CommentStore:
         """C3 create; id generation mirrors the reference's
         time.time_ns() (src/marks.py:82)."""
         cid = time.time_ns()
+        # an Arrow table, not a Python row: no Python worker reads it
         new = self.spark.createDataFrame(
-            [(cid, _as_utc(ts), text, tags)], COMMENTS_SCHEMA
+            pa.table(
+                {
+                    "id": pa.array([cid], pa.int64()),
+                    "ts": pa.array([_epoch_us(ts)], pa.timestamp("us", tz="UTC")),
+                    "text": pa.array([text], pa.string()),
+                    "tags": pa.array([tags], pa.list_(pa.string())),
+                }
+            )
         )
         self._write(self._read().unionByName(new))
         return cid

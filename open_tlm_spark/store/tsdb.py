@@ -38,9 +38,11 @@ Interactive serving (read_window, list_datasets) on a warm store runs
 no Spark job: each stored table is held as an immutable driver-side
 snapshot (numpy columns sorted by (dataset_id, time) plus each
 series' row range; rollups get one per level), built by a single Arrow
-read of the table, so a window is two binary searches per series. Spark still does all
-storage, ingest and rollup work and builds every snapshot; get() and
-datasets() always read storage.
+read of the table, so a window is two binary searches per series.
+read_window returns the window as an Arrow table of the snapshot's
+slices, with no Python object per row. Spark still does all storage,
+ingest and rollup work and builds every snapshot; get() and datasets()
+always read storage.
 """
 
 from __future__ import annotations
@@ -55,7 +57,7 @@ from functools import reduce
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_tlm_spark.functions.time import floor_to
@@ -64,11 +66,7 @@ from open_tlm_spark.operators.rollup import (
     recommended_fidelity,
     with_mean,
 )
-from open_tlm_spark.schemas import (
-    DATASET_ID_PATTERN,
-    FIDELITIES,
-    POINTS_SCHEMA,
-)
+from open_tlm_spark.schemas import DATASET_ID_PATTERN, FIDELITIES
 
 # On-disk schemas, partition columns last (see the layout above).
 _POINTS_DDL = (
@@ -80,17 +78,20 @@ _ROLLUP_DDL = (
 )
 _CATALOG_DDL = "dataset_id string"
 # A rollup level's stored columns (without the partition columns),
-# and the row fields of a rollup read (get and read_window).
+# and the columns of a rollup read (get and read_window).
 _ROLLUP_COLS = ("dataset_id", "bin_ts", "min_value", "max_value", "sum_values", "count")
-_ROLLUP_FIELDS = (
-    "dataset_id",
-    "bin_ts",
-    "min_value",
-    "mean_value",
-    "max_value",
-    "sum_values",
-    "count",
+_ROLLUP_READ = pa.schema(
+    [
+        ("dataset_id", pa.string()),
+        ("bin_ts", pa.int64()),
+        ("min_value", pa.float64()),
+        ("mean_value", pa.float64()),
+        ("max_value", pa.float64()),
+        ("sum_values", pa.float64()),
+        ("count", pa.int64()),
+    ]
 )
+_ROLLUP_FIELDS = tuple(_ROLLUP_READ.names)
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 _ONE_US = _dt.timedelta(microseconds=1)
@@ -116,6 +117,27 @@ def _utc_date(d: _dt.datetime) -> _dt.date:
     return _as_utc(d).astimezone(_dt.timezone.utc).date()
 
 
+def _epoch_us(d: _dt.datetime) -> int:
+    """Epoch microseconds of a datetime (naive = UTC)."""
+    return (_as_utc(d) - _EPOCH) // _ONE_US
+
+
+def _points_table(ids, us, values) -> pa.Table:
+    """A batch of points as an Arrow table for createDataFrame: it
+    reaches the JVM as one columnar stream (a local table scan), where
+    a list of Python rows is pickled and re-read by Python workers on
+    every scan of the batch. Timestamps are given as integer epoch
+    microseconds tagged UTC: exact, where pyarrow can keep an
+    offset-aware datetime's wall clock instead of its UTC instant."""
+    return pa.table(
+        {
+            "dataset_id": pa.array(ids, pa.string()),
+            "ts": pa.array(us, pa.timestamp("us", tz="UTC")),
+            "value": pa.array(values, pa.float64()),
+        }
+    )
+
+
 def _ds_bucket(dataset_id: str, n_buckets: int) -> int:
     """Bucket id of a series — crc32, which Python's zlib and Spark's
     F.crc32 compute identically, so the query side can prune to one
@@ -129,10 +151,10 @@ class _Snapshot:
     time is fields[1] (epoch µs `us` for raw points, `bin_ts` for
     rollups), and each series' [start, end) row range."""
 
-    __slots__ = ("row", "spans", "cols")
+    __slots__ = ("fields", "spans", "cols")
 
     def __init__(self, fields, spans, cols):
-        self.row = Row(*fields)
+        self.fields: tuple[str, ...] = fields
         self.spans: dict[str, tuple[int, int]] = spans
         self.cols: dict[str, np.ndarray] = cols
 
@@ -164,30 +186,40 @@ class _Snapshot:
             out.append(cls(fields, spans, cols))
         return out
 
-    def rows(self, ids: list[str] | None, lo: int, hi: int) -> list:
-        """Rows of the given series (None = all) with lo <= time <= hi,
-        sorted by (dataset_id, time); rollup rows gain mean_value =
+    def window(self, ids: list[str] | None, lo: int, hi: int) -> pa.Table:
+        """The rows of the given series (None = all) with lo <= time <=
+        hi, sorted by (dataset_id, time), as columns: each series' range
+        is cut by two binary searches and the slices are concatenated,
+        with no Python object per row. The id column is dictionary
+        encoded from the run lengths; rollup rows gain mean_value =
         sum_values / count, the float64 division Spark does."""
-        out = []
-        time = self.cols[self.row[1]]
+        time = self.cols[self.fields[1]]
+        names, cuts = [], []
         for sid in self.spans if ids is None else sorted(set(ids)):
             span = self.spans.get(sid)
             if span is None:
                 continue
             s, e = span
-            a = s + int(time[s:e].searchsorted(lo, "left"))
-            b = s + int(time[s:e].searchsorted(hi, "right"))
-            cols = {c: v[a:b] for c, v in self.cols.items()}
-            if "sum_values" in cols:
-                cols["mean_value"] = cols["sum_values"] / cols["count"]
-            out.extend(
-                map(
-                    self.row,
-                    [sid] * (b - a),
-                    *(cols[f].tolist() for f in self.row[1:]),
+            names.append(sid)
+            cuts.append(
+                slice(
+                    s + int(time[s:e].searchsorted(lo, "left")),
+                    s + int(time[s:e].searchsorted(hi, "right")),
                 )
             )
-        return out
+        runs = np.repeat(
+            np.arange(len(names), dtype=np.int32), [c.stop - c.start for c in cuts]
+        )
+        cols = {
+            "dataset_id": pa.DictionaryArray.from_arrays(
+                runs, pa.array(names, pa.string())
+            )
+        }
+        for c, v in self.cols.items():
+            cols[c] = np.concatenate([v[cut] for cut in cuts] or [v[:0]])
+        if "sum_values" in cols:
+            cols["mean_value"] = cols["sum_values"] / cols["count"]
+        return pa.table([cols[f] for f in self.fields], names=list(self.fields))
 
 
 class TelemetryStore:
@@ -411,13 +443,12 @@ class TelemetryStore:
         flush interval and posts them through the normal ingest path
         (src/metrics/loop.py:59-61). The flush put itself is exempt
         from num_puts (client-call semantics)."""
-        rows = [
-            (f"{prefix}.num_puts", _as_utc(ts), float(self.num_puts)),
-            (f"{prefix}.num_gets", _as_utc(ts), float(self.num_gets)),
-        ]
-        self.put(
-            self.spark.createDataFrame(rows, POINTS_SCHEMA), _count=False
+        batch = _points_table(
+            [f"{prefix}.num_puts", f"{prefix}.num_gets"],
+            [_epoch_us(ts)] * 2,
+            [float(self.num_puts), float(self.num_gets)],
         )
+        self.put(self.spark.createDataFrame(batch), _count=False)
 
     def _merge_catalog(self, new_ids: list[str]) -> None:
         """C1: maintain the dataset catalog as a tiny dimension table
@@ -599,16 +630,18 @@ class TelemetryStore:
         end: _dt.datetime,
         fidelity: int | str | None = "auto",
         max_result_points: int | None = MAX_RESULT_POINTS,
-    ) -> list:
+    ) -> pa.Table:
         """Interactive serving path (API GET /api/data, head-to-head
-        harness): the rows of get(), as a list sorted by (dataset_id,
-        time). Raw rows are (dataset_id, us, value), with `us` the
-        epoch-microsecond instant; rollup rows are get()'s.
+        harness): the rows of get() as an Arrow table, sorted by
+        (dataset_id, time), with get()'s column names and values. Raw
+        rows are (dataset_id, us, value), with `us` the
+        epoch-microsecond instant; rollup rows are get()'s. The
+        dataset_id column may be dictionary encoded.
 
         On a warm store the window is cut from the table's snapshot by
         two binary searches per series and runs no Spark job (bounds
         inclusive, as in get()); a dropped snapshot is rebuilt first.
-        A cold store collects get()."""
+        A cold store transfers get() as Arrow and sorts it."""
         ids, start, end, fid = self._route(
             dataset_id, start, end, fidelity, max_result_points
         )
@@ -616,18 +649,20 @@ class TelemetryStore:
             df = self.get(ids, start, end, fid, None, ordered=False)
             if fid is None:
                 df = df.select("dataset_id", F.unix_micros("ts").alias("us"), "value")
-            return sorted(df.collect(), key=lambda r: (r[0], r[1]))
+            keys = df.columns[:2]
+            return df.toArrow().sort_by([(k, "ascending") for k in keys])
         self.num_gets += 1
         if fid is None:
             snap = self._snapshot(self.points_path)
-            lo, hi = (start - _EPOCH) // _ONE_US, (end - _EPOCH) // _ONE_US
+            lo, hi = _epoch_us(start), _epoch_us(end)
         else:
             d = int(fid)
             snap = self._snapshot(self.rollups_path).get(d)
             if snap is None:
-                return []  # not a stored level: get() finds no rows either
+                # not a stored level: get() finds no rows either
+                return _ROLLUP_READ.empty_table()
             lo, hi = int(start.timestamp()) // d * d, int(end.timestamp())
-        return snap.rows(ids, lo, hi)
+        return snap.window(ids, lo, hi)
 
     # --------------------------------------------------------- maintenance
     def compact(self, max_records_per_file: int = 5_000_000) -> None:

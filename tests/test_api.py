@@ -6,10 +6,12 @@ import json
 import urllib.request
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from open_tlm_spark.api import _iso_dates, serve
+from open_tlm_spark.api import _data_body, _iso_dates, serve
 from open_tlm_spark.store import CommentStore, TelemetryStore
+from open_tlm_spark.store.tsdb import _ROLLUP_COLS, _ROLLUP_FIELDS, _ROLLUP_READ, _Snapshot
 
 
 @pytest.fixture()
@@ -49,6 +51,108 @@ def test_iso_dates_match_isoformat():
     ]
     assert _iso_dates(us) == want
     assert _iso_dates([]) == []
+
+
+def _json_dumps_body(dataset, table):
+    """The GET /api/data body as the handler used to build it: a dict
+    per point, a datetime.isoformat() per date, one json.dumps."""
+    rows = list(zip(*(c.to_pylist() for c in table.columns)))
+    epoch = dt.datetime(1970, 1, 1)
+
+    def date(us):
+        return (epoch + dt.timedelta(microseconds=us)).isoformat()
+
+    if "us" in table.column_names:
+        points = [{"date": date(us), "value": v} for _, us, v in rows]
+    else:
+        points = [
+            {"date": date(t * 10**6), "min_value": lo, "mean_value": mean, "max_value": hi}
+            for _, t, lo, mean, hi, _, _ in rows
+        ]
+    return json.dumps({"data": {"dataset": dataset, "points": points}}).encode()
+
+
+_EDGE_FLOATS = [-0.0, 5e-324, 1e22, 0.1, np.inf, -np.inf, np.nan, 1e16, 1e-5, -2.5]
+
+
+def _random_floats(rng, n):
+    """Values of every magnitude and sign, with the edge values mixed in."""
+    x = rng.standard_normal(n) * 10.0 ** rng.integers(-320, 300, n)
+    edge = rng.random(n) < 0.1
+    x[edge] = rng.choice(_EDGE_FLOATS, edge.sum())
+    return x
+
+
+def test_data_body_matches_json_dumps():
+    """_data_body writes exactly the bytes of json.dumps over a dict per
+    point: raw and rollup tables, empty tables, an id that needs
+    escaping, the float edge cases (signed zero, the smallest
+    subnormal, exponent forms, ±inf, NaN), and a few hundred random
+    windows cut from snapshots, also as multi-chunk tables with plain
+    string ids (the cold path's shape)."""
+    ts0 = 1_704_067_200_000_000  # 2024-01-01T00:00:00
+    day = 86_400_000_000
+    n = len(_EDGE_FLOATS)
+    edges = np.array(_EDGE_FLOATS)
+    raw = pa.table(
+        {
+            "dataset_id": ["s"] * n,
+            "us": ts0 + np.arange(n) * 250_000,  # whole seconds and fractions
+            "value": edges,
+        }
+    )
+    agg = pa.table(
+        {
+            "dataset_id": ["s"] * n,
+            "bin_ts": ts0 // 10**6 + np.arange(n) * 100,
+            "min_value": edges,
+            "mean_value": edges[::-1],
+            "max_value": np.roll(edges, 3),
+            "sum_values": edges,
+            "count": np.ones(n, np.int64),
+        }
+    )
+    for dataset in ("api.x", 'we"ird\\ id\u00e9\n\u2028'):
+        for table in (raw, agg, raw.slice(0, 0), _ROLLUP_READ.empty_table()):
+            assert _data_body(dataset, table) == _json_dumps_body(dataset, table)
+
+    rng = np.random.default_rng(11)
+    ids = [f"s{i}" for i in range(5)]
+    m = 4000
+    off = rng.integers(0, day, m)
+    whole = rng.random(m) < 0.3
+    off[whole] = off[whole] // 10**6 * 10**6
+    pts = pa.table(
+        {
+            "dataset_id": rng.choice(ids, m),
+            "us": ts0 + off,
+            "value": _random_floats(rng, m),
+        }
+    )
+    rolls = pa.table(
+        {
+            "dataset_id": rng.choice(ids, m),
+            "bin_ts": ts0 // 10**6 + rng.permutation(m) * 10,
+            "min_value": _random_floats(rng, m),
+            "max_value": _random_floats(rng, m),
+            "sum_values": _random_floats(rng, m),
+            "count": rng.integers(1, 1000, m),
+        }
+    )
+    snaps = (
+        (_Snapshot.collect([pts], ("dataset_id", "us", "value"))[0], 1),
+        (_Snapshot.collect([rolls.select(list(_ROLLUP_COLS))], _ROLLUP_FIELDS)[0], 10**6),
+    )
+    for i in range(300):
+        snap, unit = snaps[i % 2]
+        lo, hi = np.sort(rng.integers(ts0, ts0 + day, 2)) // unit
+        want = None if rng.random() < 0.2 else list(rng.choice(ids, rng.integers(0, 3)))
+        window = snap.window(want, int(lo), int(hi))
+        plain = window.set_column(0, "dataset_id", window.column(0).cast(pa.string()))
+        cold = pa.Table.from_batches(plain.to_batches(max_chunksize=7), plain.schema)
+        body = _json_dumps_body("s", window)
+        assert _data_body("s", window) == body
+        assert _data_body("s", cold) == body
 
 
 def test_data_roundtrip(api):

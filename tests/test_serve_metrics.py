@@ -141,7 +141,8 @@ def test_flush_publishes_queryable_series(spark, serving_pair, tmp_path):
         dt.datetime(2024, 6, 2, tzinfo=dt.timezone.utc),
         fidelity=None,
     )
-    assert [p.value for p in pts] == [1.0]
+    assert pts.column_names == ["dataset_id", "us", "value"]
+    assert pts.column("value").to_pylist() == [1.0]
 
 
 def test_never_collected_plan_stays_pending(spark, serving_pair):

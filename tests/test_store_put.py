@@ -1,6 +1,7 @@
 """TelemetryStore.put: a fixed Spark-job budget per put, exact
 touched rollup partitions across a UTC midnight, idempotent replay of
-a completed put, and the known gap in replaying a failed one."""
+a completed put, the known gap in replaying a failed one, and the
+store's own small frames built from Arrow."""
 
 import contextlib
 import datetime as dt
@@ -170,3 +171,51 @@ def test_replay_after_failed_rollup_merge(spark, tmp_path):
     store.put(batch)  # the replay
     assert store.get(None, LO, HI, None).count() == 40
     _levels_match_raw(store)
+
+
+def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch):
+    """The frames the store builds itself (the metrics flush, the serve
+    counters' flush, a new comment) come from Arrow tables: their
+    executed plans scan a local table, never a Python RDD (Scan
+    ExistingRDD), so no Python worker reads them. The flushed points
+    keep their instants and values."""
+    from open_tlm_spark.operators.serve_metrics import ServeMetrics
+    from open_tlm_spark.store import CommentStore
+
+    frames = []
+    store = TelemetryStore(spark, str(tmp_path / "store"))
+    put = store.put
+
+    def capture_put(batch, _count=True):
+        frames.append(batch)
+        put(batch, _count)
+
+    monkeypatch.setattr(store, "put", capture_put)
+    store.num_puts, store.num_gets = 3, 4
+    ts = dt.datetime(2024, 1, 1, 12)  # naive = UTC
+    store.flush_metrics(ts)
+    counters = ServeMetrics()
+    counters.inc("rerank.batches", 2.0)
+    assert counters.flush_to_store(store, ts.replace(tzinfo=UTC)) == 1
+
+    comments = CommentStore(spark, str(tmp_path / "comments"))
+    comments.create(ts, "first", [])
+    write = comments._write
+    monkeypatch.setattr(
+        comments, "_write", lambda df: (frames.append(df), write(df))[1]
+    )
+    comments.create(ts, "second", ["a"])
+
+    assert len(frames) == 3
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    us = int(ts.replace(tzinfo=UTC).timestamp()) * 10**6
+    got = store.read_window(None, ts, ts, fidelity=None)
+    assert list(zip(*(c.to_pylist() for c in got.columns))) == [
+        ("tlm.metrics.num_gets", us, 4.0),
+        ("tlm.metrics.num_puts", us, 3.0),
+        ("tlm.serve.rerank.batches", us, 2.0),
+    ]
+    stored = comments._read().orderBy("id").selectExpr("text", "unix_micros(ts)")
+    assert [tuple(r) for r in stored.collect()] == [("first", us), ("second", us)]

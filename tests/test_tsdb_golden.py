@@ -371,7 +371,7 @@ def _rw_store(spark, path):
 # (ids, start, end, fidelity) windows: one id, all ids, an id list
 # with a repeat, bounds exactly on a point's instant and on a bin
 # edge, a lower bound inside a bin, an empty window, an unknown id, an
-# empty id list.
+# empty id list, a level outside the ladder.
 RW_WINDOWS = [
     ("test_rw", START, END, None),
     ("test_rw", START, END, 100),
@@ -388,11 +388,14 @@ RW_WINDOWS = [
     ("nope", START, END, 100),
     ([], START, END, None),
     (None, START, END, 10000),  # a 7-point bin: the mean is inexact
+    ("test_rw", START, END, 7),
 ]
+RAW_COLS = ("dataset_id", "us", "value")
 
 
-def _as_tuples(rows):
-    return [(tuple(r.__fields__), tuple(r)) for r in rows]
+def _as_tuples(table):
+    """A read_window table as (column names, row tuples)."""
+    return tuple(table.column_names), list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 def test_read_window_matches_get_warm_and_cold(spark, tmp_path):
@@ -402,23 +405,26 @@ def test_read_window_matches_get_warm_and_cold(spark, tmp_path):
     included), on every window of RW_WINDOWS."""
     store = _rw_store(spark, tmp_path)
 
-    want_raw = sorted(
-        tuple(r)
-        for r in store.get("test_rw", START, END, fidelity=None)
-        .selectExpr("dataset_id", "unix_micros(ts) AS us", "value")
-        .collect()
+    raw = store.get("test_rw", START, END, fidelity=None).selectExpr(
+        "dataset_id", "unix_micros(ts) AS us", "value"
     )
-    want_agg = [tuple(r) for r in store.get("test_rw", START, END, 100).collect()]
-    assert len(want_raw) == 9 and want_agg
-    assert [tuple(r) for r in store.read_window("test_rw", START, END, None)] == want_raw
-    assert [tuple(r) for r in store.read_window("test_rw", START, END, 100)] == want_agg
+    want_raw = (RAW_COLS, sorted(tuple(r) for r in raw.collect()))
+    agg = store.get("test_rw", START, END, 100)
+    want_agg = (tuple(agg.columns), [tuple(r) for r in agg.collect()])
+    assert len(want_raw[1]) == 9 and want_agg[1]
+    assert _as_tuples(store.read_window("test_rw", START, END, None)) == want_raw
+    assert _as_tuples(store.read_window("test_rw", START, END, 100)) == want_agg
 
     cold = [_as_tuples(store.read_window(*w)) for w in RW_WINDOWS]
-    assert (len(cold[0]), len(cold[2]), len(cold[4])) == (9, 18, 18)
+    # get()'s columns on every window, empty ones included
+    for w, (names, _) in zip(RW_WINDOWS, cold):
+        assert names == (RAW_COLS if w[3] is None else want_agg[0]), w
+    rows = [r for _, r in cold]
+    assert (len(rows[0]), len(rows[2]), len(rows[4])) == (9, 18, 18)
     # inclusive bounds: 02:00:00 and 03:00:00.1 are points of test_rw
-    assert len(cold[6]) == 8
-    assert cold[7] and cold[8]
-    assert cold[9] == cold[10] == cold[11] == cold[12] == cold[13] == []
+    assert len(rows[6]) == 8
+    assert rows[7] and rows[8]
+    assert rows[9] == rows[10] == rows[11] == rows[12] == rows[13] == rows[15] == []
 
     store.warm()
     for w, want in zip(RW_WINDOWS, cold):
@@ -430,10 +436,11 @@ def test_read_window_matches_get_warm_and_cold(spark, tmp_path):
     )
     store.put(extra)
     got = store.read_window("test_rw", START, END, None)
-    assert len(got) == 10 and any(r.value == 42.0 for r in got)
-    want_agg = [tuple(r) for r in store.get("test_rw", START, END, 100).collect()]
-    assert [tuple(r) for r in store.read_window("test_rw", START, END, 100)] == want_agg
-    assert store.read_window("o'brien", START, END, None) == []
+    assert got.num_rows == 10 and 42.0 in got.column("value").to_pylist()
+    agg = store.get("test_rw", START, END, 100)
+    want_agg = (tuple(agg.columns), [tuple(r) for r in agg.collect()])
+    assert _as_tuples(store.read_window("test_rw", START, END, 100)) == want_agg
+    assert _as_tuples(store.read_window("o'brien", START, END, None)) == (RAW_COLS, [])
 
 
 def test_warm_reads_run_no_spark_job(spark, tmp_path):
@@ -482,10 +489,10 @@ def test_snapshot_invalidated_during_build_is_not_kept(spark, tmp_path):
     for path, fid, n in ((store.points_path, None, 9), (store.rollups_path, 100, 4)):
         store._invalidate_warm(path)  # warm() built it: drop it first
         store._build_snapshot = racing_build
-        assert len(store.read_window("test_gen", START, END, fid)) == n
+        assert store.read_window("test_gen", START, END, fid).num_rows == n
         assert path not in store._snapshots
         store._build_snapshot = build
-        assert len(store.read_window("test_gen", START, END, fid)) == n
+        assert store.read_window("test_gen", START, END, fid).num_rows == n
         assert path in store._snapshots
 
 
@@ -502,8 +509,8 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
     store = make_store(spark, tmp_path, "test_conc", PUT_GET_POINTS)
     store.warm()
     conf_before = spark.conf.get("spark.sql.adaptive.enabled")
-    pre = [tuple(r) for r in store.read_window("test_conc", START, END, None)]
-    assert len(pre) == 9
+    pre = _as_tuples(store.read_window("test_conc", START, END, None))
+    assert len(pre[1]) == 9
 
     errors, seen = [], []
     stop = threading.Event()
@@ -511,8 +518,7 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
     def reader(reads):
         try:
             for _ in range(reads):
-                rows = store.read_window("test_conc", START, END, None)
-                seen.append([tuple(r) for r in rows])
+                seen.append(_as_tuples(store.read_window("test_conc", START, END, None)))
                 if stop.is_set():
                     return
                 time.sleep(0.002)
@@ -546,9 +552,9 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
         )
     finally:
         sys.setswitchinterval(interval)
-    post = [tuple(r) for r in store.read_window("test_conc", START, END, None)]
+    post = _as_tuples(store.read_window("test_conc", START, END, None))
     assert not errors, errors
-    assert len(post) == 10 and set(pre) < set(post)
+    assert len(post[1]) == 10 and set(pre[1]) < set(post[1])
     assert seen and all(rows in (pre, post) for rows in seen)
     assert spark.conf.get("spark.sql.adaptive.enabled") == conf_before
 
@@ -573,7 +579,7 @@ def test_read_window_two_sessions_leave_conf_untouched(spark, tmp_path):
         try:
             for _ in range(4):
                 rows = store.read_window("test_ms", START, END, None)
-                assert len(rows) == 9
+                assert rows.num_rows == 9
         except Exception as e:
             errors.append(e)
 

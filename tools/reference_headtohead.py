@@ -140,7 +140,8 @@ def run_ours(series: int, points: int, batches: int, day0: dt.datetime):
         # (api.py GET /api/data and /api/datasets): bounded results
         # sorted by (dataset_id, time), like the reference's get(). On
         # a warm store they answer from driver-side snapshots and run
-        # no Spark job; cold, they collect get() / datasets(). Each rep
+        # no Spark job; cold, they read get() as Arrow / collect
+        # datasets(). read_window returns an Arrow table. Each rep
         # binds a FRESH window (shifted per rep): this measures the
         # serving path for a new window, not a memoized payload.
         reps = [0]
@@ -175,9 +176,9 @@ def run_ours(series: int, points: int, batches: int, day0: dt.datetime):
         found, t_search = _median_timed(lambda: store.list_datasets("series"))
         return {
             f"narrow_s{tag}": t_narrow,
-            "narrow_rows": len(narrow),
+            "narrow_rows": narrow.num_rows,
             f"wide_s{tag}": t_wide,
-            "wide_rows": len(wide),
+            "wide_rows": wide.num_rows,
             f"search_s{tag}": t_search,
             "search_hits": len(found),
         }
