@@ -276,7 +276,7 @@ class TlmHandler(BaseHTTPRequestHandler):
                 return self._send(400, {"message": f"invalid point: {e}"})
             batch = _points_table(ids, stamps, values)
             with self.write_lock:
-                self.store.put(self.store.spark.createDataFrame(batch))
+                self.store.put(batch)
                 self._gen[0] += 1  # in-flight GETs must not memoize
                 self._data_memo.clear()  # new points invalidate windows
             return self._send(
@@ -379,7 +379,10 @@ def serve(
     search runs no Spark job; a write drops the snapshots of the
     tables it changed and they rebuild on their next read. A data
     read's window comes back as Arrow columns, from which the JSON
-    body is encoded without a dict per point (_data_body).
+    body is encoded without a dict per point (_data_body). A data
+    POST hands store.put its points as an Arrow table, so validation,
+    the touched keys and the dedup run on the driver, and a put
+    without new series runs 6 Spark jobs.
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching

@@ -228,7 +228,7 @@ class ServeMetrics:
             [_epoch_us(ts)] * len(snap),
             [float(value) for _, value in snap],
         )
-        store.put(store.spark.createDataFrame(batch), _count=False)
+        store.put(batch, _count=False)
         return len(snap)
 
 

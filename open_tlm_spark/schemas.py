@@ -58,5 +58,9 @@ COMMENTS_SCHEMA = StructType(
 FIDELITIES: list[int] = [1, 10, 100, 1000, 10_000, 100_000]
 
 # Dataset-id validity (src/index.py:60,112-115): kept as a data-quality
-# ingest check (no path-traversal concern under Spark).
-DATASET_ID_PATTERN = r"^[a-zA-Z0-9._-]+$"
+# ingest check (no path-traversal concern under Spark). Anchored with
+# \z, not $: Java's $ (Spark rlike) also matches before a trailing line
+# terminator ("abc\n", "abc\u2028"), which the reference's re.fullmatch
+# rejects. Java and RE2 (pyarrow.compute) agree on \z, so both ingest
+# front ends use this one constant.
+DATASET_ID_PATTERN = r"^[a-zA-Z0-9._-]+\z"

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -75,6 +75,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of a StructType or DDL schema, built from an empty
+    Arrow table so that it plans a LocalTableScan; createDataFrame([],
+    schema) plans a Python RDD scan (Scan ExistingRDD) instead."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
 
 
 def _nanos_ts_columns(path: str) -> list[str]:

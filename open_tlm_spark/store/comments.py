@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_tlm_spark.schemas import COMMENTS_SCHEMA
+from open_tlm_spark.session import empty_frame
 from open_tlm_spark.store.tsdb import _as_utc, _epoch_us
 
 
@@ -49,7 +50,7 @@ class CommentStore:
     def _read(self) -> DataFrame:
         d = self._current_dir()
         if d is None:
-            return self.spark.createDataFrame([], COMMENTS_SCHEMA)
+            return empty_frame(self.spark, COMMENTS_SCHEMA)
         return self.spark.read.parquet(d)
 
     def _write(self, df: DataFrame) -> None:

@@ -6,7 +6,12 @@ Reference parity (SURVEY.md §1.4, §3):
     Parquet min/max locality) -> upsert all rollup levels. The
     reference rewrites its six levels in six passes; put() merges all
     six in ONE aggregation and ONE write and runs a fixed number of
-    Spark actions per call, however many levels there are.
+    Spark actions per call, however many levels there are. A batch
+    held on the driver as a pyarrow Table (an API POST, a metrics
+    flush) is validated, keyed and deduped there with
+    pyarrow.compute, against one pruned collect of the stored keys; a
+    DataFrame batch (bulk loads, the streaming sink) does the same
+    steps in Spark, so it never passes through the driver.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
@@ -57,6 +62,7 @@ from functools import reduce
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,6 +73,7 @@ from open_tlm_spark.operators.rollup import (
     with_mean,
 )
 from open_tlm_spark.schemas import DATASET_ID_PATTERN, FIDELITIES
+from open_tlm_spark.session import empty_frame
 
 # On-disk schemas, partition columns last (see the layout above).
 _POINTS_DDL = (
@@ -95,6 +102,8 @@ _ROLLUP_FIELDS = tuple(_ROLLUP_READ.names)
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 _ONE_US = _dt.timedelta(microseconds=1)
+_DAY_US = 86_400 * 10**6
+_TS_TYPE = pa.timestamp("us", tz="UTC")
 
 
 def _bin_date(bin_ts: Column) -> Column:
@@ -122,17 +131,29 @@ def _epoch_us(d: _dt.datetime) -> int:
     return (_as_utc(d) - _EPOCH) // _ONE_US
 
 
+def _from_us(us: int) -> _dt.datetime:
+    """The UTC datetime of epoch microseconds (exact)."""
+    return _EPOCH + _dt.timedelta(microseconds=us)
+
+
+def _dates(days: np.ndarray) -> list[_dt.date]:
+    """The distinct UTC dates of epoch day numbers, sorted."""
+    day0 = _dt.date(1970, 1, 1)
+    return [day0 + _dt.timedelta(days=d) for d in np.unique(days).tolist()]
+
+
 def _points_table(ids, us, values) -> pa.Table:
-    """A batch of points as an Arrow table for createDataFrame: it
-    reaches the JVM as one columnar stream (a local table scan), where
-    a list of Python rows is pickled and re-read by Python workers on
-    every scan of the batch. Timestamps are given as integer epoch
-    microseconds tagged UTC: exact, where pyarrow can keep an
-    offset-aware datetime's wall clock instead of its UTC instant."""
+    """A batch of points as an Arrow table, as put takes it on the
+    driver; createDataFrame turns it into one columnar stream (a local
+    table scan), where a list of Python rows is pickled and re-read by
+    Python workers on every scan of the batch. Timestamps are given as
+    integer epoch microseconds tagged UTC: exact, where pyarrow can
+    keep an offset-aware datetime's wall clock instead of its UTC
+    instant."""
     return pa.table(
         {
             "dataset_id": pa.array(ids, pa.string()),
-            "ts": pa.array(us, pa.timestamp("us", tz="UTC")),
+            "ts": pa.array(us, _TS_TYPE),
             "value": pa.array(values, pa.float64()),
         }
     )
@@ -140,9 +161,19 @@ def _points_table(ids, us, values) -> pa.Table:
 
 def _ds_bucket(dataset_id: str, n_buckets: int) -> int:
     """Bucket id of a series — crc32, which Python's zlib and Spark's
-    F.crc32 compute identically, so the query side can prune to one
-    bucket without running a Spark job."""
+    F.crc32 compute identically (_bucket_col), so the query side can
+    prune to one bucket without running a Spark job."""
     return zlib.crc32(dataset_id.encode("utf-8")) % n_buckets
+
+
+def _bucket_col(n_buckets: int) -> Column:
+    """_ds_bucket of the dataset_id column, in Spark. A string cast to
+    binary is its UTF-8 bytes, as encode(dataset_id, 'UTF-8') gives,
+    at a fraction of encode's cost per row."""
+    return (
+        F.pmod(F.crc32(F.col("dataset_id").cast("binary")), F.lit(n_buckets))
+        .cast("int")
+    )
 
 
 class _Snapshot:
@@ -269,7 +300,7 @@ class TelemetryStore:
 
     def _read(self, path: str) -> DataFrame:
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], self._schema(path))
+            return empty_frame(self.spark, self._schema(path))
         return self._scan(path)
 
     # ------------------------------------------------- interactive cache
@@ -341,17 +372,36 @@ class TelemetryStore:
         double-counting (src/index.py:39-40)."""
         return self._valid_rows(batch).dropDuplicates(["dataset_id", "ts"])
 
-    def put(self, batch: DataFrame, _count: bool = True) -> None:
+    def put(self, batch: DataFrame | pa.Table, _count: bool = True) -> None:
         """S6: append raw points and upsert every rollup level, in a
         fixed number of Spark actions that does not grow with the
-        number of levels:
+        number of levels. The batch's type picks how steps 1-2 run.
 
+        A pyarrow Table (API POSTs, metric flushes) is handled on the
+        driver until the write (_arrow_front):
+          1. pyarrow.compute applies _valid_rows' rules and keeps the
+             first of each in-batch (dataset_id, ts) key; the touched
+             keys come from epoch µs by integer arithmetic (raw
+             ds_dates, each level's bin_dates, the ids, their
+             ds_buckets, [min ts, max ts]), the new ids from the
+             catalog (its snapshot on a warm store);
+          2. one collect of the stored keys inside those buckets,
+             dates, ids and ts range, then an anti-join in pyarrow.
+             The new points are a local scan of the driver-held
+             result: nothing re-reads storage, so no checkpoint.
+
+        A DataFrame (bulk loads, the streaming sink) stays in Spark, so
+        a large batch never passes through the driver (_spark_front):
           1. one key collect over the valid rows: the touched raw
-             ds_dates, each level's touched bin_dates and the
-             dataset_ids the catalog lacks (empty -> nothing to do);
-          2. anti-join against the stored points of those dates, then
-             an eager checkpoint (the lineage cut before the append);
-          3. the raw append;
+             ds_dates and ds_buckets, [min ts, max ts], each level's
+             touched bin_dates and the ids the catalog lacks;
+          2. anti-join against the stored points inside those buckets,
+             dates and ts range, then an eager checkpoint (the lineage
+             cut before the append).
+
+        Then, for both:
+          3. the raw append (skipped when no valid row is left, or for
+             an Arrow batch no new one);
           4. one plan aggregates the batch to the 1 s level, then
              merges every level's partials with the stored rows of the
              touched (level, bin_date) partitions in one aggregation,
@@ -370,53 +420,142 @@ class TelemetryStore:
         """
         if _count:
             self.num_puts += 1
-        # duplicates add no key, so this collect skips validate's
-        # dedup shuffle
-        raw_dates, bin_dates, new_ids = self._touched_keys(self._valid_rows(batch))
-        batch = self.validate(batch).select("dataset_id", "ts", "value")
-        if not raw_dates:
-            return  # nothing valid to ingest (also: empty micro-batches)
-        # Cross-batch dedup (ST5): anti-join against the stored points
-        # of the touched date-partitions only (partition-pruned read —
-        # never a full-table scan), so re-sent points neither duplicate
-        # raw storage nor double-count rollups. The reference
-        # double-counts here (src/index.py:39-40).
-        if os.path.exists(self.points_path):
-            existing = (
-                self._scan(self.points_path)
-                .filter(F.col("ds_date").isin(raw_dates))
-                .select("dataset_id", "ts")
+        front = self._arrow_front if isinstance(batch, pa.Table) else self._spark_front
+        points, bin_dates, new_ids = front(batch)
+        if points is not None:
+            (
+                points.withColumn("ds_bucket", _bucket_col(self.n_buckets))
+                .withColumn("ds_date", F.to_date("ts"))
+                .sortWithinPartitions("dataset_id", "ts")
+                .write.mode("append")
+                .partitionBy("ds_bucket", "ds_date")
+                .parquet(self.points_path)
             )
-            batch = batch.join(existing, ["dataset_id", "ts"], "left_anti")
-        # Freeze the (validated, deduped) batch NOW: the anti-join above
-        # must not re-evaluate after the append below, or it would see
-        # the batch's own rows in storage and erase itself from the
-        # rollup merge.
-        batch = batch.localCheckpoint(eager=True)
-        (
-            batch.withColumn(
-                "ds_bucket",
-                F.pmod(F.crc32(F.encode("dataset_id", "UTF-8")), F.lit(self.n_buckets))
-                .cast("int"),
-            )
-            .withColumn("ds_date", F.to_date("ts"))
-            .sortWithinPartitions("dataset_id", "ts")
-            .write.mode("append")
-            .partitionBy("ds_bucket", "ds_date")
-            .parquet(self.points_path)
-        )
-        self._invalidate_warm(self.points_path)
-        self._merge_rollups(batch, bin_dates)
+            self._invalidate_warm(self.points_path)
+            self._merge_rollups(points, bin_dates)
         if new_ids:
             self._merge_catalog(new_ids)
 
-    def _touched_keys(
-        self, batch: DataFrame
-    ) -> tuple[list[_dt.date], dict[int, list[_dt.date]], list[str]]:
-        """One collect over the valid rows: the distinct raw
-        ds_dates, the distinct bin_dates per level duration and the
-        dataset_ids missing from the catalog. The bins are the ones
-        the merge assigns, so the touched partitions are exact."""
+    def _spark_front(self, batch: DataFrame):
+        """put's steps 1-2 for a DataFrame: (the frozen new points or
+        None, each level's touched bin_dates, the new ids)."""
+        # duplicates add no key, so this collect skips validate's
+        # dedup shuffle
+        keys = self._touched_keys(self._valid_rows(batch))
+        if keys is None:
+            return None, {}, []  # nothing valid (also: empty micro-batches)
+        raw_dates, buckets, lo, hi, bin_dates, new_ids = keys
+        batch = self.validate(batch).select("dataset_id", "ts", "value")
+        # Cross-batch dedup (ST5): anti-join against the stored points
+        # the batch can collide with (a pruned read — never a
+        # full-table scan), so re-sent points neither duplicate raw
+        # storage nor double-count rollups. The reference
+        # double-counts here (src/index.py:39-40).
+        if os.path.exists(self.points_path):
+            stored = self._stored_keys(buckets, raw_dates, lo, hi)
+            batch = batch.join(stored, ["dataset_id", "ts"], "left_anti")
+        # Freeze the (validated, deduped) batch NOW: the anti-join above
+        # must not re-evaluate after the append, or it would see the
+        # batch's own rows in storage and erase itself from the rollup
+        # merge.
+        return batch.localCheckpoint(eager=True), bin_dates, new_ids
+
+    def _arrow_front(self, batch: pa.Table):
+        """put's steps 1-2 for a driver-held Arrow batch, with the
+        result of _spark_front. Dates and bins come from epoch µs, so
+        the host's time zone cannot move a partition."""
+        ids = batch.column("dataset_id").cast(pa.string())
+        us = batch.column("ts").cast(_TS_TYPE).cast(pa.int64())
+        value = batch.column("value").cast(pa.float64())
+        # _valid_rows' rules; a null in any column nulls the mask, and
+        # filter drops a null
+        ok = reduce(
+            pc.and_,
+            [
+                pc.invert(pc.is_nan(value)),
+                pc.match_substring_regex(ids, DATASET_ID_PATTERN),
+                pc.invert(pc.match_substring(ids, "..")),
+                pc.greater_equal(us, 0),
+            ],
+        )
+        rows = pa.table({"dataset_id": ids, "us": us, "value": value}).filter(ok)
+        if rows.num_rows == 0:
+            return None, {}, []
+        # ST5 within the batch: keep the first row of each key
+        first = (
+            rows.append_column("_row", pa.array(np.arange(rows.num_rows)))
+            .group_by(["dataset_id", "us"])
+            .aggregate([("_row", "min")])
+        )
+        if first.num_rows < rows.num_rows:
+            rows = rows.take(np.sort(first.column("_row_min").to_numpy()))
+        t = rows.column("us").to_numpy()
+        names = pc.unique(rows.column("dataset_id")).to_pylist()
+        raw_dates = _dates(t // _DAY_US)
+        # floor_to's bin, then its UTC day: _bin_date(floor_to(ts, d))
+        bin_dates = {d: _dates(t // (d * 10**6) * d // 86_400) for d in FIDELITIES}
+        new_ids = sorted(set(names).difference(self._catalog_ids()))
+        # ST5 across batches: the stored keys the batch can collide with
+        if os.path.exists(self.points_path):
+            buckets = sorted({_ds_bucket(i, self.n_buckets) for i in names})
+            stored = (
+                self._stored_keys(buckets, raw_dates, int(t.min()), int(t.max()), names)
+                .select("dataset_id", F.unix_micros("ts").alias("us"))
+                .toArrow()
+            )
+            if stored.num_rows:
+                rows = rows.join(stored, ["dataset_id", "us"], join_type="left anti")
+                if rows.num_rows == 0:
+                    return None, {}, new_ids  # an exact replay
+        points = self.spark.createDataFrame(
+            pa.table(
+                {
+                    "dataset_id": rows.column("dataset_id"),
+                    "ts": rows.column("us").cast(_TS_TYPE),
+                    "value": rows.column("value"),
+                }
+            )
+        )
+        return points, bin_dates, new_ids
+
+    def _catalog_ids(self) -> list[str]:
+        """The catalog's ids: its snapshot on a warm store, else a
+        driver-side Parquet read of the (tiny) table, with no Spark
+        job."""
+        if not os.path.exists(self.catalog_path):
+            return []
+        if self._warm_enabled:
+            return self._snapshot(self.catalog_path)
+        return pq.read_table(self.catalog_path).column("dataset_id").to_pylist()
+
+    def _stored_keys(
+        self,
+        buckets: list[int],
+        dates: list[_dt.date],
+        lo: int,
+        hi: int,
+        ids: list[str] | None = None,
+    ) -> DataFrame:
+        """The (dataset_id, ts) of the stored points a batch can
+        collide with: those in its ds_bucket and ds_date partitions,
+        between its first and last epoch µs (lo, hi) and, when given,
+        of its ids. The range is on ts itself, not on an expression of
+        it, so Parquet row-group stats prune it."""
+        cond = (
+            F.col("ds_bucket").isin(buckets)
+            & F.col("ds_date").isin(dates)
+            & F.col("ts").between(F.lit(_from_us(lo)), F.lit(_from_us(hi)))
+        )
+        if ids is not None:
+            cond = cond & F.col("dataset_id").isin(ids)
+        return self._scan(self.points_path).filter(cond).select("dataset_id", "ts")
+
+    def _touched_keys(self, batch: DataFrame):
+        """One collect over the valid rows, or None when there are
+        none: the distinct raw ds_dates and ds_buckets, the first and
+        last epoch µs, the distinct bin_dates per level duration and
+        the dataset_ids missing from the catalog. The bins are the
+        ones the merge assigns, so the touched partitions are exact."""
         new_id = F.col("dataset_id")
         if os.path.exists(self.catalog_path):
             known = self._scan(self.catalog_path).select(
@@ -424,15 +563,28 @@ class TelemetryStore:
             )
             batch = batch.join(known, "dataset_id", "left")
             new_id = F.when(F.col("_known").isNull(), new_id)
+        us = F.unix_micros("ts")
         row = batch.agg(
             F.collect_set(F.to_date("ts")).alias("raw"),
+            F.collect_set(_bucket_col(self.n_buckets)).alias("buckets"),
+            F.min(us).alias("lo"),
+            F.max(us).alias("hi"),
             F.collect_set(new_id).alias("new_ids"),
             *[
                 F.collect_set(_bin_date(floor_to("ts", d))).alias(str(d))
                 for d in FIDELITIES
             ],
         ).first()
-        return row["raw"], {d: row[str(d)] for d in FIDELITIES}, row["new_ids"]
+        if not row["raw"]:
+            return None
+        return (
+            row["raw"],
+            row["buckets"],
+            row["lo"],
+            row["hi"],
+            {d: row[str(d)] for d in FIDELITIES},
+            row["new_ids"],
+        )
 
     def flush_metrics(
         self, ts: _dt.datetime, prefix: str = "tlm.metrics"
@@ -448,7 +600,7 @@ class TelemetryStore:
             [_epoch_us(ts)] * 2,
             [float(self.num_puts), float(self.num_gets)],
         )
-        self.put(self.spark.createDataFrame(batch), _count=False)
+        self.put(batch, _count=False)
 
     def _merge_catalog(self, new_ids: list[str]) -> None:
         """C1: maintain the dataset catalog as a tiny dimension table

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_tlm_spark.operators import dedup as D
+from open_tlm_spark.session import empty_frame
 
 # Encodes arrival order into one sortable key: epoch*1e9 + doc_id
 # (same encoding as the batch gate query's first_partner_key).
@@ -137,7 +138,7 @@ class IncrementalDeduper:
         first_partner_key) — directly comparable to the batch gate
         query when epochs align."""
         if not os.path.exists(self.flags_path):
-            return self.spark.createDataFrame([], FLAG_SCHEMA)
+            return empty_frame(self.spark, FLAG_SCHEMA)
         return self.spark.read.schema(FLAG_SCHEMA).parquet(self.flags_path)
 
 

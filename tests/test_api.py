@@ -222,10 +222,11 @@ def test_data_auto_fidelity(api):
 
 
 def test_post_builds_utc_instants_and_validates(api):
-    """The POST batch goes to Spark as an Arrow table: a naive date is
+    """The POST hands put its batch as an Arrow table: a naive date is
     UTC and an offset date lands on its UTC instant; a NaN value and
-    an illegal dataset_id are dropped by validate. The message still
-    counts every point the request carried."""
+    illegal dataset_ids (one ends in a newline, which Java's $ would
+    accept) are dropped by put's validation. The message still counts
+    every point the request carried."""
     status, body = _req(
         f"{api}/api/data",
         "POST",
@@ -244,10 +245,14 @@ def test_post_builds_utc_instants_and_validates(api):
                     "dataset_id": "api bad/id",
                     "points": [{"date": "2024-01-01T03:00:00", "value": 9.0}],
                 },
+                {
+                    "dataset_id": "api.arrow\n",
+                    "points": [{"date": "2024-01-01T03:00:00", "value": 8.0}],
+                },
             ]
         },
     )
-    assert status == 200 and body["message"] == "5 datapoints were posted"
+    assert status == 200 and body["message"] == "6 datapoints were posted"
 
     status, body = _req(
         f"{api}/api/data/api.arrow?start=2024-01-01T02:59:00&end=2024-01-01T03:01:00"

@@ -1,6 +1,7 @@
 """TelemetryStore.put: a fixed Spark-job budget per put, exact
 touched rollup partitions across a UTC midnight, idempotent replay of
-a completed put, the known gap in replaying a failed one, and the
+a completed put, the known gap in replaying a failed one, the same
+stored result from an Arrow batch as from a DataFrame, and the
 store's own small frames built from Arrow."""
 
 import contextlib
@@ -8,11 +9,13 @@ import datetime as dt
 import itertools
 import os
 
+import pyarrow as pa
 import pytest
 
 from open_tlm_spark.operators.rollup import aggregate_points
 from open_tlm_spark.schemas import FIDELITIES, POINTS_SCHEMA
 from open_tlm_spark.store import TelemetryStore
+from open_tlm_spark.store.tsdb import _epoch_us, _points_table
 
 UTC = dt.timezone.utc
 LO = dt.datetime(2023, 12, 31, tzinfo=UTC)
@@ -34,23 +37,38 @@ def job_group(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
-def points(spark, ids, start, n, step_s):
+FRONTS = ("dataframe", "arrow")
+
+
+def as_front(spark, table, front):
+    """An Arrow batch as put takes it on the given front end."""
+    return table if front == "arrow" else spark.createDataFrame(table)
+
+
+def _batch(rows):
+    """(dataset_id, datetime, value) rows as an Arrow batch; a value
+    may be None."""
+    ids, stamps, values = zip(*rows)
+    return _points_table(ids, [_epoch_us(t) for t in stamps], values)
+
+
+def points(spark, ids, start, n, step_s, front="dataframe"):
     rows = [
         (sid, start + dt.timedelta(seconds=i * step_s), float(i % 17) + j / 8)
         for j, sid in enumerate(ids)
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, POINTS_SCHEMA)
+    if front == "dataframe":
+        return spark.createDataFrame(rows, POINTS_SCHEMA)
+    return _batch(rows)
 
 
-def test_put_job_budget(spark, tmp_path):
-    """A put into a non-empty store runs a fixed handful of Spark jobs
-    (11), with one rollup write for all six levels. A put that brings
-    a new series adds the catalog rewrite's two jobs (a checkpoint and
-    a write)."""
+def _put_job_counts(spark, tmp_path, front):
+    """Spark jobs of three puts into a non-empty store: two that each
+    bring a new series, then one that brings none."""
     store = TelemetryStore(spark, str(tmp_path))
     t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
-    store.put(points(spark, ["budget.a", "budget.b"], t0, 500, 0.1))
+    store.put(points(spark, ["budget.a", "budget.b"], t0, 500, 0.1, front))
     counts = []
     for k, new in enumerate((["budget.new0"], ["budget.new1"], [])):
         batch = points(
@@ -59,12 +77,36 @@ def test_put_job_budget(spark, tmp_path):
             t0 + dt.timedelta(minutes=5 * (k + 1)),
             500,
             0.1,
+            front,
         )
         with job_group(spark) as jobs:
             store.put(batch)
             counts.append(len(jobs()))
+    return counts
+
+
+def test_put_job_budget(spark, tmp_path):
+    """A put into a non-empty store runs a fixed handful of Spark jobs
+    (11), with one rollup write for all six levels. A put that brings
+    a new series adds the catalog rewrite's two jobs (a checkpoint and
+    a write)."""
+    counts = _put_job_counts(spark, tmp_path, "dataframe")
     assert 0 < counts[2] <= 11, counts
     assert counts[0] == counts[1] <= counts[2] + 2, counts
+
+
+def test_put_job_budget_arrow(spark, tmp_path):
+    """From an Arrow batch, validation, the touched keys and the dedup
+    run on the driver: a put runs at most 6 Spark jobs (the stored-key
+    collect, the raw append, the rollup merge and its write), and a
+    new series adds the catalog rewrite's two."""
+    counts = _put_job_counts(spark, tmp_path, "arrow")
+    assert 0 < counts[2] <= 6, counts
+    assert counts[0] == counts[1] <= counts[2] + 2, counts
+
+
+def _bins(rows):
+    return {(r.dataset_id, r.bin_ts): r for r in rows}
 
 
 def _levels_match_raw(store):
@@ -72,23 +114,25 @@ def _levels_match_raw(store):
     point: counts and min/max exact, sums within rel 1e-9."""
     raw = store.get(None, LO, HI, fidelity=None)
     for d in FIDELITIES:
-        want = {
-            (r.dataset_id, r.bin_ts): r
-            for r in aggregate_points(raw, d).collect()
-        }
-        got = {
-            (r.dataset_id, r.bin_ts): r
-            for r in store.get(None, LO, HI, fidelity=d).collect()
-        }
-        assert got.keys() == want.keys(), d
-        for k, w in want.items():
-            g = got[k]
-            assert (g["count"], g.min_value, g.max_value) == (
-                w["count"],
-                w.min_value,
-                w.max_value,
-            ), (d, k)
-            assert g.sum_values == pytest.approx(w.sum_values, rel=1e-9), (d, k)
+        _same_bins(
+            _bins(store.get(None, LO, HI, fidelity=d).collect()),
+            _bins(aggregate_points(raw, d).collect()),
+            d,
+        )
+
+
+def _same_bins(got, want, d):
+    """Two levels' bins: the same keys, counts and min/max exact, sums
+    within rel 1e-9 (float sums folded in another order)."""
+    assert got.keys() == want.keys(), d
+    for k, w in want.items():
+        g = got[k]
+        assert (g["count"], g.min_value, g.max_value) == (
+            w["count"],
+            w.min_value,
+            w.max_value,
+        ), (d, k)
+        assert g.sum_values == pytest.approx(w.sum_values, rel=1e-9), (d, k)
 
 
 def _bin_date_dirs(store, d):
@@ -146,19 +190,129 @@ def test_put_merges_bins_that_start_a_day_earlier_and_replays(spark, tmp_path):
     assert _bin_date_dirs(store, 100_000) == ["bin_date=2024-01-01"]
 
 
+# Ids the id rule rejects: Java's $ would accept the first four (a
+# trailing line terminator), the reference's re.fullmatch does not.
+BAD_IDS = ["abc\n", "abc\r\n", "abc\x85", "abc\u2028", "a b", "a..b", "", "x/y"]
+
+
+def _raw(store):
+    """Every stored raw point as (dataset_id, epoch µs, value), sorted;
+    the range reaches back before the epoch."""
+    lo = dt.datetime(1969, 1, 1, tzinfo=UTC)
+    got = store.read_window(None, lo, HI, fidelity=None)
+    return list(zip(*(c.to_pylist() for c in got.columns)))
+
+
+def _front_batches():
+    """Three batches: points across the 2024-01-02 UTC midnight mixed
+    with rows validation drops and in-batch duplicates; its exact
+    replay; then a new series, a partial replay and next-day points
+    whose coarse bins start the day before."""
+    jan1 = dt.datetime(2024, 1, 1, tzinfo=UTC)
+    night = jan1 + dt.timedelta(hours=23, minutes=40)
+    good = [
+        (sid, night + dt.timedelta(seconds=37 * i, microseconds=i), float(i % 23) - j)
+        for j, sid in enumerate(["eq.a", "eq.b"])
+        for i in range(120)
+    ]
+    h = dt.timedelta(hours=1)
+    first = good + [
+        ("eq.a", jan1 + h, float("nan")),
+        ("eq.a", jan1 + 2 * h, None),
+        ("eq.a", jan1 + 3 * h, float("inf")),
+        ("eq.b", jan1 + 3 * h, float("-inf")),
+        ("eq.a", dt.datetime(1969, 12, 31, 23, 59, 59, tzinfo=UTC), 1.0),
+        *[(bad, jan1 + 4 * h, 2.0) for bad in BAD_IDS],
+        *good[:30],
+    ]
+    jan2 = jan1 + dt.timedelta(days=1)
+    later = (
+        [("eq.c", jan2 + dt.timedelta(seconds=3 * i), 0.25 * i) for i in range(50)]
+        + good[100:120]
+        + [
+            ("eq.b", jan2 + dt.timedelta(minutes=m, microseconds=7), v)
+            for m, v in ((5, -3.0), (30, 40.0), (360, 0.5))
+        ]
+        + [("eq.c", jan2, 0.0)]
+    )
+    return [first, first, later]
+
+
+def test_arrow_and_dataframe_fronts_store_the_same(spark, tmp_path):
+    """The same batches put as Arrow tables into one store and as
+    DataFrames into another leave the same raw points and catalog,
+    exactly, and the same rollup levels: counts and min/max exact, sums
+    within rel 1e-9 (the fronts fold float sums in a different order).
+    NaN, null, pre-epoch points and every id of BAD_IDS are dropped;
+    duplicates, in a batch or already stored, are stored once. The
+    Arrow front computes dates from epoch integers and Spark in the
+    session zone, so a non-UTC host must not move a partition either."""
+    stores = {f: TelemetryStore(spark, str(tmp_path / f)) for f in FRONTS}
+    for rows in _front_batches():
+        for front, store in stores.items():
+            store.put(as_front(spark, _batch(rows), front))
+    arrow, frame = stores["arrow"], stores["dataframe"]
+    raw = _raw(arrow)
+    assert raw == _raw(frame)
+    assert len(raw) == 240 + 2 + 50 + 3
+    assert {r[0] for r in raw} == {"eq.a", "eq.b", "eq.c"}
+    assert arrow.list_datasets() == frame.list_datasets() == ["eq.a", "eq.b", "eq.c"]
+    for d in FIDELITIES:
+        _same_bins(
+            _bins(arrow.get(None, LO, HI, fidelity=d).collect()),
+            _bins(frame.get(None, LO, HI, fidelity=d).collect()),
+            d,
+        )
+    for store in stores.values():
+        _levels_match_raw(store)
+    assert _bin_date_dirs(arrow, 10_000) == _bin_date_dirs(frame, 10_000) == [
+        "bin_date=2024-01-01",
+        "bin_date=2024-01-02",
+    ]
+
+
+@pytest.mark.parametrize("front", FRONTS)
+def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
+    """A key sent three times in one batch with different values is
+    stored once with one of them (the Arrow front keeps the first),
+    and every level counts it once. A later batch with a new value for
+    a stored key adds nothing."""
+    store = TelemetryStore(spark, str(tmp_path))
+    t = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
+    us = _epoch_us(t)
+    rows = [
+        ("dup.a", t, 1.0),
+        ("dup.a", t + dt.timedelta(seconds=1), 5.0),
+        ("dup.a", t, 2.0),
+        ("dup.b", t, 3.0),
+        ("dup.a", t, 4.0),
+    ]
+    store.put(as_front(spark, _batch(rows), front))
+    raw = _raw(store)
+    kept = [v for sid, u, v in raw if (sid, u) == ("dup.a", us)]
+    assert len(raw) == 3 and len(kept) == 1 and kept[0] in (1.0, 2.0, 4.0)
+    if front == "arrow":
+        assert kept == [1.0]
+    _levels_match_raw(store)
+    store.put(as_front(spark, _batch([("dup.a", t, 9.0)]), front))
+    assert _raw(store) == raw
+    _levels_match_raw(store)
+
+
 @pytest.mark.xfail(
     strict=True,
     reason="a put that fails after the raw append loses its batch from "
     "every rollup level on replay: the anti-join drops the stored points "
     "(ROADMAP item 2, per-put commit marker)",
 )
-def test_replay_after_failed_rollup_merge(spark, tmp_path):
+@pytest.mark.parametrize("front", FRONTS)
+def test_replay_after_failed_rollup_merge(spark, tmp_path, front):
     """A put that fails after the raw append, then is replayed, leaves
     every level equal to aggregate_points over raw."""
     store = TelemetryStore(spark, str(tmp_path))
     t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
-    store.put(points(spark, ["crash.a"], t0, 20, 0.5))
-    batch = points(spark, ["crash.a"], t0 + dt.timedelta(seconds=10), 20, 0.5)
+    store.put(points(spark, ["crash.a"], t0, 20, 0.5, front))
+    batch = points(spark, ["crash.a"], t0 + dt.timedelta(seconds=10), 20, 0.5, front)
     merge = store._merge_rollups
 
     def crash(*args):
@@ -174,39 +328,53 @@ def test_replay_after_failed_rollup_merge(spark, tmp_path):
 
 
 def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch):
-    """The frames the store builds itself (the metrics flush, the serve
-    counters' flush, a new comment) come from Arrow tables: their
+    """The frames the store builds itself come from Arrow tables: their
     executed plans scan a local table, never a Python RDD (Scan
-    ExistingRDD), so no Python worker reads them. The flushed points
-    keep their instants and values."""
+    ExistingRDD), so no Python worker reads them. They are an empty
+    store's stand-ins (get(), datasets()), the points a put builds
+    from the metrics flush and the serve counters' flush (which hand
+    put an Arrow batch), and the first and second new comment (the
+    first unions the empty comments stand-in). The flushed points keep
+    their instants and values."""
     from open_tlm_spark.operators.serve_metrics import ServeMetrics
     from open_tlm_spark.store import CommentStore
 
-    frames = []
     store = TelemetryStore(spark, str(tmp_path / "store"))
-    put = store.put
+    frames = [
+        store.get(None, LO, HI, fidelity=None),
+        store.get(None, LO, HI, fidelity=10),
+        store.datasets(),
+    ]
+    batches = []
+    put, merge = store.put, store._merge_rollups
 
     def capture_put(batch, _count=True):
-        frames.append(batch)
+        batches.append(batch)
         put(batch, _count)
 
+    def capture_merge(points, bin_dates):
+        frames.append(points)
+        merge(points, bin_dates)
+
     monkeypatch.setattr(store, "put", capture_put)
+    monkeypatch.setattr(store, "_merge_rollups", capture_merge)
     store.num_puts, store.num_gets = 3, 4
     ts = dt.datetime(2024, 1, 1, 12)  # naive = UTC
     store.flush_metrics(ts)
     counters = ServeMetrics()
     counters.inc("rerank.batches", 2.0)
     assert counters.flush_to_store(store, ts.replace(tzinfo=UTC)) == 1
+    assert [type(b) for b in batches] == [pa.Table, pa.Table]
 
     comments = CommentStore(spark, str(tmp_path / "comments"))
-    comments.create(ts, "first", [])
     write = comments._write
     monkeypatch.setattr(
         comments, "_write", lambda df: (frames.append(df), write(df))[1]
     )
+    comments.create(ts, "first", [])
     comments.create(ts, "second", ["a"])
 
-    assert len(frames) == 3
+    assert len(frames) == 7
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # One-command verification: replicates every gate the driver runs.
 #   tests    — full pytest suite (includes per-query oracle diff at sf0.001)
-#   serving  — the read_window and GET /api/data payload and date tests
-#              again under a non-UTC TZ (dates are formatted from epoch
-#              instants, so the host zone must not change a byte)
+#   serving  — the read_window and GET /api/data payload and date tests,
+#              and the Arrow-vs-DataFrame put equivalence test, again
+#              under a non-UTC TZ (dates are formatted and partitions
+#              keyed from epoch instants, so the host zone must not
+#              change a byte or move a partition)
 #   gate     — tools/diffcheck.py at sf0.01 (the driver's correctness pass),
 #              repeated under a non-UTC TZ (driver env may differ)
 #   contract — fresh-process __spark_entry__ smoke (plain SparkSession)
@@ -14,8 +16,9 @@ cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
 
-echo "== serving payload tests (TZ=America/New_York) =="
+echo "== serving payload and put front-end tests (TZ=America/New_York) =="
 TZ=America/New_York python -m pytest -q tests/test_tsdb_golden.py \
+  tests/test_store_put.py::test_arrow_and_dataframe_fronts_store_the_same \
   tests/test_api.py::test_iso_dates_match_isoformat \
   tests/test_api.py::test_data_body_matches_json_dumps \
   tests/test_api.py::test_data_roundtrip tests/test_api.py::test_data_auto_fidelity
