@@ -383,8 +383,8 @@ class TelemetryStore:
              first of each in-batch (dataset_id, ts) key; the touched
              keys come from epoch µs by integer arithmetic (raw
              ds_dates, each level's bin_dates, the ids, their
-             ds_buckets, [min ts, max ts]), the new ids from the
-             catalog (its snapshot on a warm store);
+             ds_buckets, [min ts, max ts]), the new ids from a
+             driver-side Parquet read of the catalog (no Spark job);
           2. one collect of the stored keys inside those buckets,
              dates, ids and ts range, then an anti-join in pyarrow.
              The new points are a local scan of the driver-held
@@ -519,13 +519,10 @@ class TelemetryStore:
         return points, bin_dates, new_ids
 
     def _catalog_ids(self) -> list[str]:
-        """The catalog's ids: its snapshot on a warm store, else a
-        driver-side Parquet read of the (tiny) table, with no Spark
-        job."""
+        """The catalog's ids, by a driver-side Parquet read of the
+        (tiny) table: no Spark job, warm or cold."""
         if not os.path.exists(self.catalog_path):
             return []
-        if self._warm_enabled:
-            return self._snapshot(self.catalog_path)
         return pq.read_table(self.catalog_path).column("dataset_id").to_pylist()
 
     def _stored_keys(
