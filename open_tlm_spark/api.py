@@ -381,8 +381,8 @@ def serve(
     read's window comes back as Arrow columns, from which the JSON
     body is encoded without a dict per point (_data_body). A data
     POST hands store.put its points as an Arrow table, so validation,
-    the touched keys and the dedup run on the driver, and a put
-    without new series runs 6 Spark jobs.
+    the dedup and the rollup merge run on the driver, and a put
+    without new series runs 2 Spark jobs, its two writes.
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching

@@ -8,15 +8,16 @@ Reference parity (SURVEY.md §1.4, §3):
     six in ONE aggregation and ONE write and runs a fixed number of
     Spark actions per call, however many levels there are. A batch
     held on the driver as a pyarrow Table (an API POST, a metrics
-    flush) is validated, keyed and deduped there with
-    pyarrow.compute, against one pruned collect of the stored keys; a
-    DataFrame batch (bulk loads, the streaming sink) does the same
-    steps in Spark, so it never passes through the driver.
+    flush) is validated, deduped and merged into every level there,
+    reading only its touched partitions with pyarrow, so Spark runs
+    just its two writes; a DataFrame batch (bulk loads, the streaming
+    sink) does the same steps in Spark, so it never passes through the
+    driver.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
-    Catalyst partition pruning + Parquet row-group skipping replace
-    the reference's arithmetic file enumeration (_subpaths,
+    Catalyst partition pruning (plus row-group skipping on dataset_id)
+    replaces the reference's arithmetic file enumeration (_subpaths,
     src/index.py:408-458) wholesale.
   * Index.datasets (src/index.py:219-239) -> datasets(): substring
     search over the dataset catalog, limit applied AFTER the filter
@@ -26,8 +27,10 @@ Reference parity (SURVEY.md §1.4, §3):
 Physical layout (designed for 100 TB):
   points/   partitioned by ds_bucket (crc32 of dataset_id) and ds_date
             (UTC day of ts). Within a partition, rows are sorted by
-            (dataset_id, ts) at write so Parquet column stats make
-            per-series range scans skip row groups.
+            (dataset_id, ts) at write so Parquet's dataset_id stats let
+            a per-series scan skip row groups. Spark stores ts as
+            INT96, which carries no row-group stats, so a time range
+            prunes by day partition only.
   rollups/  every level in one table, partitioned by level (the bin
             duration d in seconds) and bin_date (UTC day of the bin
             start); level d is ≈1/d of raw, so read-merge-overwrite of
@@ -45,9 +48,9 @@ snapshot (numpy columns sorted by (dataset_id, time) plus each
 series' row range; rollups get one per level), built by a single Arrow
 read of the table, so a window is two binary searches per series.
 read_window returns the window as an Arrow table of the snapshot's
-slices, with no Python object per row. Spark still does all storage,
-ingest and rollup work and builds every snapshot; get() and datasets()
-always read storage.
+slices, with no Python object per row. Spark does every write and
+builds every snapshot; an Arrow put reads its touched partitions with
+pyarrow; get() and datasets() always read storage.
 """
 
 from __future__ import annotations
@@ -62,6 +65,7 @@ from functools import reduce
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +103,26 @@ _ROLLUP_READ = pa.schema(
     ]
 )
 _ROLLUP_FIELDS = tuple(_ROLLUP_READ.names)
+# How stored and new partials of a bin merge: (column, aggregation).
+_ROLLUP_MERGE = (
+    ("min_value", "min"),
+    ("max_value", "max"),
+    ("sum_values", "sum"),
+    ("count", "sum"),
+)
+
+# Driver-side reads of stored partitions (put's Arrow path): the hive
+# partition columns' types as Spark writes them, and ts, which Spark
+# stores as INT96, read as microseconds.
+_PARQUET = pads.ParquetFileFormat(
+    read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+_POINTS_PARTS = pads.partitioning(
+    pa.schema([("ds_bucket", pa.int32()), ("ds_date", pa.date32())]), flavor="hive"
+)
+_ROLLUP_PARTS = pads.partitioning(
+    pa.schema([("level", pa.int32()), ("bin_date", pa.date32())]), flavor="hive"
+)
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 _ONE_US = _dt.timedelta(microseconds=1)
@@ -140,6 +164,34 @@ def _dates(days: np.ndarray) -> list[_dt.date]:
     """The distinct UTC dates of epoch day numbers, sorted."""
     day0 = _dt.date(1970, 1, 1)
     return [day0 + _dt.timedelta(days=d) for d in np.unique(days).tolist()]
+
+
+def _level_bins(fine_ts):
+    """(level, bin start) of 1 s partials at every level: floor(fine_ts
+    / d) * d, exact integer arithmetic on a Spark column or a numpy
+    array alike (validation drops pre-epoch points, so fine_ts >= 0)."""
+    return [(d, fine_ts - fine_ts % d) for d in FIDELITIES]
+
+
+def _read_parts(base: str, parts, partitioning, columns, filter=None):
+    """Columns of the given partition directories (paths relative to
+    base) of a stored table, read on the driver with pyarrow, or None
+    when none of them holds a file. Only those directories are listed,
+    so the cost follows the partitions, not the table."""
+    files = []
+    for part in parts:
+        d = os.path.join(base, part)
+        if os.path.isdir(d):
+            files += [
+                os.path.join(d, f)
+                for f in sorted(os.listdir(d))
+                if not f.startswith((".", "_"))
+            ]
+    if not files:
+        return None
+    return pads.dataset(
+        files, format=_PARQUET, partitioning=partitioning, partition_base_dir=base
+    ).to_table(columns=columns, filter=filter)
 
 
 def _points_table(ids, us, values) -> pa.Table:
@@ -375,20 +427,25 @@ class TelemetryStore:
     def put(self, batch: DataFrame | pa.Table, _count: bool = True) -> None:
         """S6: append raw points and upsert every rollup level, in a
         fixed number of Spark actions that does not grow with the
-        number of levels. The batch's type picks how steps 1-2 run.
+        number of levels. The batch's type picks how it runs.
 
-        A pyarrow Table (API POSTs, metric flushes) is handled on the
-        driver until the write (_arrow_front):
+        A pyarrow Table (API POSTs, metric flushes) stays on the driver
+        until its two writes:
           1. pyarrow.compute applies _valid_rows' rules and keeps the
-             first of each in-batch (dataset_id, ts) key; the touched
-             keys come from epoch µs by integer arithmetic (raw
-             ds_dates, each level's bin_dates, the ids, their
-             ds_buckets, [min ts, max ts]), the new ids from a
-             driver-side Parquet read of the catalog (no Spark job);
-          2. one collect of the stored keys inside those buckets,
-             dates, ids and ts range, then an anti-join in pyarrow.
-             The new points are a local scan of the driver-held
-             result: nothing re-reads storage, so no checkpoint.
+             first of each in-batch (dataset_id, ts) key; the new ids
+             come from a driver-side Parquet read of the catalog
+             (_arrow_front);
+          2. a pyarrow read of the stored keys in the batch's touched
+             ds_bucket/ds_date directories, inside its ids and ts
+             range, then an anti-join in pyarrow;
+          3. the raw append, a local scan of the driver-held result
+             (Spark job 1);
+          4. the batch's 1 s partials cascade to every level, a pyarrow
+             read of the touched (level, bin_date) directories brings
+             the stored partials, and one group_by merges both
+             (_merge_rollups_arrow);
+          5. one dynamic-overwrite write of rollups/ from that local
+             table (Spark job 2).
 
         A DataFrame (bulk loads, the streaming sink) stays in Spark, so
         a large batch never passes through the driver (_spark_front):
@@ -397,18 +454,17 @@ class TelemetryStore:
              touched bin_dates and the ids the catalog lacks;
           2. anti-join against the stored points inside those buckets,
              dates and ts range, then an eager checkpoint (the lineage
-             cut before the append).
-
-        Then, for both:
-          3. the raw append (skipped when no valid row is left, or for
-             an Arrow batch no new one);
+             cut before the append);
+          3. the raw append;
           4. one plan aggregates the batch to the 1 s level, then
              merges every level's partials with the stored rows of the
              touched (level, bin_date) partitions in one aggregation,
-             then one eager checkpoint;
+             then one eager checkpoint (_merge_rollups);
           5. one dynamic-overwrite write of rollups/ from that
-             checkpoint;
-          6. a catalog rewrite, only when the batch brings new ids.
+             checkpoint.
+
+        Steps 3-5 are skipped when no valid new point is left. Then,
+        for both, a catalog rewrite, only when the batch brings new ids.
 
         Replaying a put that completed is a no-op (step 2). Replaying a
         put that failed after step 3 is not: its points are already in
@@ -420,21 +476,43 @@ class TelemetryStore:
         """
         if _count:
             self.num_puts += 1
-        front = self._arrow_front if isinstance(batch, pa.Table) else self._spark_front
-        points, bin_dates, new_ids = front(batch)
-        if points is not None:
-            (
-                points.withColumn("ds_bucket", _bucket_col(self.n_buckets))
-                .withColumn("ds_date", F.to_date("ts"))
-                .sortWithinPartitions("dataset_id", "ts")
-                .write.mode("append")
-                .partitionBy("ds_bucket", "ds_date")
-                .parquet(self.points_path)
-            )
-            self._invalidate_warm(self.points_path)
-            self._merge_rollups(points, bin_dates)
+        if isinstance(batch, pa.Table):
+            rows, new_ids = self._arrow_front(batch)
+            if rows is not None:
+                points = rows.set_column(1, "ts", rows.column("us").cast(_TS_TYPE))
+                self._append_points(self._local_frame(points))
+                self._merge_rollups_arrow(rows)
+        else:
+            points, bin_dates, new_ids = self._spark_front(batch)
+            if points is not None:
+                self._append_points(points)
+                self._merge_rollups(points, bin_dates)
         if new_ids:
             self._merge_catalog(new_ids)
+
+    def _local_frame(self, table: pa.Table) -> DataFrame:
+        """A driver-held table as a frame of at most defaultParallelism
+        partitions. createDataFrame keeps a table below
+        spark.sql.execution.arrow.localRelationThreshold (48 MB) as a
+        local relation, but splits a larger one into one partition per
+        Arrow batch of maxRecordsPerBatch (10k) rows, and a write from
+        that leaves a file per partition in every directory it
+        touches."""
+        return self.spark.createDataFrame(table).coalesce(
+            self.spark.sparkContext.defaultParallelism
+        )
+
+    def _append_points(self, points: DataFrame) -> None:
+        """put's raw append of the new (dataset_id, ts, value) points."""
+        (
+            points.withColumn("ds_bucket", _bucket_col(self.n_buckets))
+            .withColumn("ds_date", F.to_date("ts"))
+            .sortWithinPartitions("dataset_id", "ts")
+            .write.mode("append")
+            .partitionBy("ds_bucket", "ds_date")
+            .parquet(self.points_path)
+        )
+        self._invalidate_warm(self.points_path)
 
     def _spark_front(self, batch: DataFrame):
         """put's steps 1-2 for a DataFrame: (the frozen new points or
@@ -461,9 +539,10 @@ class TelemetryStore:
         return batch.localCheckpoint(eager=True), bin_dates, new_ids
 
     def _arrow_front(self, batch: pa.Table):
-        """put's steps 1-2 for a driver-held Arrow batch, with the
-        result of _spark_front. Dates and bins come from epoch µs, so
-        the host's time zone cannot move a partition."""
+        """put's steps 1-2 for a driver-held Arrow batch, with no Spark
+        job: (the new points as (dataset_id, us, value) or None, the
+        new ids). Partitions come from epoch µs, so the host's time
+        zone cannot move one."""
         ids = batch.column("dataset_id").cast(pa.string())
         us = batch.column("ts").cast(_TS_TYPE).cast(pa.int64())
         value = batch.column("value").cast(pa.float64())
@@ -480,7 +559,7 @@ class TelemetryStore:
         )
         rows = pa.table({"dataset_id": ids, "us": us, "value": value}).filter(ok)
         if rows.num_rows == 0:
-            return None, {}, []
+            return None, []
         # ST5 within the batch: keep the first row of each key
         first = (
             rows.append_column("_row", pa.array(np.arange(rows.num_rows)))
@@ -491,32 +570,27 @@ class TelemetryStore:
             rows = rows.take(np.sort(first.column("_row_min").to_numpy()))
         t = rows.column("us").to_numpy()
         names = pc.unique(rows.column("dataset_id")).to_pylist()
-        raw_dates = _dates(t // _DAY_US)
-        # floor_to's bin, then its UTC day: _bin_date(floor_to(ts, d))
-        bin_dates = {d: _dates(t // (d * 10**6) * d // 86_400) for d in FIDELITIES}
         new_ids = sorted(set(names).difference(self._catalog_ids()))
-        # ST5 across batches: the stored keys the batch can collide with
-        if os.path.exists(self.points_path):
-            buckets = sorted({_ds_bucket(i, self.n_buckets) for i in names})
-            stored = (
-                self._stored_keys(buckets, raw_dates, int(t.min()), int(t.max()), names)
-                .select("dataset_id", F.unix_micros("ts").alias("us"))
-                .toArrow()
-            )
-            if stored.num_rows:
-                rows = rows.join(stored, ["dataset_id", "us"], join_type="left anti")
-                if rows.num_rows == 0:
-                    return None, {}, new_ids  # an exact replay
-        points = self.spark.createDataFrame(
-            pa.table(
-                {
-                    "dataset_id": rows.column("dataset_id"),
-                    "ts": rows.column("us").cast(_TS_TYPE),
-                    "value": rows.column("value"),
-                }
-            )
+        # ST5 across batches: the stored keys the batch can collide
+        # with, in its ds_bucket/ds_date directories, ids and ts range
+        buckets = sorted({_ds_bucket(i, self.n_buckets) for i in names})
+        stamp = pa.timestamp("us")
+        days = _dates(t // _DAY_US)
+        stored = _read_parts(
+            self.points_path,
+            [f"ds_bucket={b}/ds_date={d}" for b in buckets for d in days],
+            _POINTS_PARTS,
+            ["dataset_id", "ts"],
+            (pads.field("ts") >= pa.scalar(int(t.min()), stamp))
+            & (pads.field("ts") <= pa.scalar(int(t.max()), stamp))
+            & pads.field("dataset_id").isin(names),
         )
-        return points, bin_dates, new_ids
+        if stored is not None and stored.num_rows:
+            stored = stored.set_column(1, "us", stored.column("ts").cast(pa.int64()))
+            rows = rows.join(stored, ["dataset_id", "us"], join_type="left anti")
+            if rows.num_rows == 0:
+                return None, new_ids  # an exact replay
+        return rows, new_ids
 
     def _catalog_ids(self) -> list[str]:
         """The catalog's ids, by a driver-side Parquet read of the
@@ -526,25 +600,18 @@ class TelemetryStore:
         return pq.read_table(self.catalog_path).column("dataset_id").to_pylist()
 
     def _stored_keys(
-        self,
-        buckets: list[int],
-        dates: list[_dt.date],
-        lo: int,
-        hi: int,
-        ids: list[str] | None = None,
+        self, buckets: list[int], dates: list[_dt.date], lo: int, hi: int
     ) -> DataFrame:
         """The (dataset_id, ts) of the stored points a batch can
         collide with: those in its ds_bucket and ds_date partitions,
-        between its first and last epoch µs (lo, hi) and, when given,
-        of its ids. The range is on ts itself, not on an expression of
-        it, so Parquet row-group stats prune it."""
+        between its first and last epoch µs (lo, hi). The partitions do
+        the pruning: Spark stores ts as INT96, which carries no
+        row-group statistics, so the ts range skips no row group."""
         cond = (
             F.col("ds_bucket").isin(buckets)
             & F.col("ds_date").isin(dates)
             & F.col("ts").between(F.lit(_from_us(lo)), F.lit(_from_us(hi)))
         )
-        if ids is not None:
-            cond = cond & F.col("dataset_id").isin(ids)
         return self._scan(self.points_path).filter(cond).select("dataset_id", "ts")
 
     def _touched_keys(self, batch: DataFrame):
@@ -604,38 +671,35 @@ class TelemetryStore:
         (the reference's catalog is the data/full/ directory listing,
         src/index.py:231-239). Search then scans a frame with one row
         per series ever written — never the fact table. Called only
-        with ids the catalog does not hold yet."""
-        path = self.catalog_path
+        with ids the catalog does not hold yet. The merged ids are
+        built on the driver, so the overwrite reads a local table, not
+        the path it replaces, and needs no checkpoint."""
+        ids = pa.array(sorted(set(self._catalog_ids()).union(new_ids)), pa.string())
         # an Arrow table, not Python rows: no Python worker reads it
-        merged = self.spark.createDataFrame(
-            pa.table({"dataset_id": pa.array(sorted(new_ids), pa.string())})
+        (
+            self.spark.createDataFrame(pa.table({"dataset_id": ids}))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(self.catalog_path)
         )
-        if os.path.exists(path):
-            # eager checkpoint: the plan reads the path it overwrites
-            merged = (
-                self._scan(path).unionByName(merged).localCheckpoint(eager=True)
-            )
-        merged.coalesce(1).write.mode("overwrite").parquet(path)
-        self._invalidate_warm(path)
+        self._invalidate_warm(self.catalog_path)
 
     def _merge_rollups(
         self, points: DataFrame, bin_dates: dict[int, list[_dt.date]]
     ) -> None:
         """A1-A3/ST3: algebraic merge of every level in one plan and one
-        write.
+        write, in Spark (a DataFrame batch).
 
         The batch is aggregated once into the finest level (A1); each
-        1 s partial then enters every level at its bin, floor(bin_ts /
-        d) * d (exact integer arithmetic; validate drops pre-epoch
-        points), as a cascade inside the plan (A3). One partition-pruned
-        scan of rollups/ reads the stored rows of each level's touched
+        1 s partial then enters every level at its bin (_level_bins),
+        as a cascade inside the plan (A3). One partition-pruned scan of
+        rollups/ reads the stored rows of each level's touched
         bin_dates into the same union, and one aggregation on (level,
-        dataset_id, bin_ts) merges both — min(min), max(max), sum(sum),
-        sum(count), so combine(agg(A), agg(B)) == agg(A ∪ B). The result
-        is checkpointed (it reads the partitions about to be
-        overwritten), then one write overwrites only the touched
-        (level, bin_date) partitions (partitionOverwriteMode=dynamic).
-        On a cluster with Delta the write is one MERGE INTO rollups ON
+        dataset_id, bin_ts) merges both (_ROLLUP_MERGE: min(min),
+        max(max), sum(sum), sum(count)), so combine(agg(A), agg(B)) ==
+        agg(A ∪ B). The result is checkpointed (it reads the partitions
+        about to be overwritten), then written (_write_rollups). On a
+        cluster with Delta the write is one MERGE INTO rollups ON
         (level, dataset_id, bin_ts)."""
         fine = aggregate_points(points, FIDELITIES[0]).withColumnRenamed(
             "bin_ts", "fine_ts"
@@ -643,11 +707,8 @@ class TelemetryStore:
         bins = F.inline(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(d).alias("level"),
-                        (F.col("fine_ts") - F.col("fine_ts") % d).alias("bin_ts"),
-                    )
-                    for d in FIDELITIES
+                    F.struct(F.lit(d).alias("level"), b.alias("bin_ts"))
+                    for d, b in _level_bins(F.col("fine_ts"))
                 ]
             )
         )
@@ -662,19 +723,94 @@ class TelemetryStore:
             )
             stored = self._scan(self.rollups_path).filter(touched)
             rows = rows.unionByName(stored.select("level", *_ROLLUP_COLS))
-        (
+        self._write_rollups(
             rows.groupBy("level", "dataset_id", "bin_ts")
-            .agg(
-                F.min("min_value").alias("min_value"),
-                F.max("max_value").alias("max_value"),
-                F.sum("sum_values").alias("sum_values"),
-                F.sum("count").alias("count"),
-            )
+            .agg(*[getattr(F, fn)(c).alias(c) for c, fn in _ROLLUP_MERGE])
             .withColumn("bin_date", _bin_date(F.col("bin_ts")))
             .localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            # per-write dynamic overwrite: rewrite only the partitions
-            # this batch touches, without mutating session-global conf
+        )
+
+    def _merge_rollups_arrow(self, rows: pa.Table) -> None:
+        """The same merge as _merge_rollups, on the driver, for the new
+        points of an Arrow batch ((dataset_id, us, value)), with no
+        Spark job until the write. The 1 s partials (us // 10**6) enter
+        every level at their bin (_level_bins); a pyarrow read of the
+        touched (level, bin_date) directories brings the stored
+        partials; one group_by on (level, dataset_id, bin_ts) merges
+        both (_ROLLUP_MERGE). The merged rows are written from the
+        driver (_write_rollups), sorted within each write task; nothing
+        re-reads storage, so no checkpoint. The driver holds every row
+        of the touched partitions, as a POST already holds its batch;
+        a DataFrame batch goes through _merge_rollups instead."""
+        aggs = ("min", "max", "sum", "count")
+        fine = (
+            pa.table(
+                {
+                    "dataset_id": rows.column("dataset_id"),
+                    "fine_ts": rows.column("us").to_numpy() // 10**6,
+                    "value": rows.column("value"),
+                }
+            )
+            .group_by(["dataset_id", "fine_ts"])
+            .aggregate([("value", fn) for fn in aggs])
+        )
+        values = [fine.column(f"value_{fn}") for fn in aggs]
+        levels = _level_bins(fine.column("fine_ts").to_numpy())
+        partials = [
+            pa.table(
+                [
+                    pa.array(np.full(fine.num_rows, d, np.int32)),
+                    fine.column("dataset_id"),
+                    bin_ts,
+                    *values,
+                ],
+                names=["level", *_ROLLUP_COLS],
+            )
+            for d, bin_ts in levels
+        ]
+        stored = _read_parts(
+            self.rollups_path,
+            [
+                f"level={d}/bin_date={day}"
+                for d, bin_ts in levels
+                for day in _dates(bin_ts // 86_400)
+            ],
+            _ROLLUP_PARTS,
+            ["level", *_ROLLUP_COLS],
+        )
+        if stored is not None:
+            partials.append(stored.cast(partials[0].schema))
+        merged = (
+            pa.concat_tables(partials)
+            .group_by(["level", "dataset_id", "bin_ts"])
+            .aggregate(list(_ROLLUP_MERGE))
+        )
+        bin_ts = merged.column("bin_ts").to_numpy()
+        out = pa.table(
+            [
+                merged.column("level"),
+                merged.column("dataset_id"),
+                bin_ts,
+                *[merged.column(f"{c}_{fn}") for c, fn in _ROLLUP_MERGE],
+                pa.array((bin_ts // 86_400).astype(np.int32), pa.date32()),
+            ],
+            names=["level", *_ROLLUP_COLS, "bin_date"],
+        )
+        # Spark's sort, not the driver's: the write sorts by the
+        # partition columns anyway, so the longer key costs it little
+        # (a driver sort_by took 0.43 s of 2.4M merged rows)
+        self._write_rollups(
+            self._local_frame(out).sortWithinPartitions(
+                "level", "bin_date", "dataset_id", "bin_ts"
+            )
+        )
+
+    def _write_rollups(self, rollups: DataFrame) -> None:
+        """Overwrite the (level, bin_date) partitions the merged rows
+        touch, and only those (partitionOverwriteMode=dynamic)."""
+        (
+            rollups.write.mode("overwrite")
+            # per-write dynamic overwrite, without mutating session-global conf
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("level", "bin_date")
             .parquet(self.rollups_path)

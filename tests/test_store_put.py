@@ -1,16 +1,21 @@
 """TelemetryStore.put: a fixed Spark-job budget per put, exact
 touched rollup partitions across a UTC midnight, idempotent replay of
 a completed put, the known gap in replaying a failed one, the same
-stored result from an Arrow batch as from a DataFrame, and the
-store's own small frames built from Arrow."""
+stored result from an Arrow batch as from a DataFrame (fixed batches
+and generated put sequences), and the store's own small frames built
+from Arrow."""
 
 import contextlib
 import datetime as dt
 import itertools
 import os
+import tempfile
 
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from open_tlm_spark.operators.rollup import aggregate_points
 from open_tlm_spark.schemas import FIDELITIES, POINTS_SCHEMA
@@ -88,21 +93,52 @@ def _put_job_counts(spark, tmp_path, front):
 def test_put_job_budget(spark, tmp_path):
     """A put into a non-empty store runs a fixed handful of Spark jobs
     (11), with one rollup write for all six levels. A put that brings
-    a new series adds the catalog rewrite's two jobs (a checkpoint and
-    a write)."""
+    a new series adds the catalog rewrite's one job: the merged ids
+    are built on the driver, so the write needs no checkpoint."""
     counts = _put_job_counts(spark, tmp_path, "dataframe")
     assert 0 < counts[2] <= 11, counts
-    assert counts[0] == counts[1] <= counts[2] + 2, counts
+    assert counts[0] == counts[1] <= counts[2] + 1, counts
 
 
 def test_put_job_budget_arrow(spark, tmp_path):
-    """From an Arrow batch, validation, the touched keys and the dedup
-    run on the driver: a put runs at most 6 Spark jobs (the stored-key
-    collect, the raw append, the rollup merge and its write), and a
-    new series adds the catalog rewrite's two."""
+    """From an Arrow batch, everything but the two writes runs on the
+    driver: validation, the dedup against the stored keys and the
+    rollup merge, both reads done with pyarrow. A put runs at most 2
+    Spark jobs (the raw append and the rollup write), and a new series
+    adds the catalog rewrite's one."""
     counts = _put_job_counts(spark, tmp_path, "arrow")
-    assert 0 < counts[2] <= 6, counts
-    assert counts[0] == counts[1] <= counts[2] + 2, counts
+    assert 0 < counts[2] <= 2, counts
+    assert counts[0] == counts[1] <= counts[2] + 1, counts
+
+
+def test_arrow_put_writes_few_files_per_partition(spark, tmp_path):
+    """createDataFrame splits an Arrow table above
+    spark.sql.execution.arrow.localRelationThreshold into one partition
+    per maxRecordsPerBatch rows. Lowered here so a 10k-point batch
+    splits 100 ways, an Arrow put must still write at most
+    defaultParallelism files into each partition it touches, raw and
+    rollup."""
+    conf = {
+        "spark.sql.execution.arrow.localRelationThreshold": "1",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "100",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    store = TelemetryStore(spark, str(tmp_path))
+    t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
+    batch = points(spark, [f"few.{i}" for i in range(20)], t0, 500, 0.1, "arrow")
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        store.put(batch)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    limit = spark.sparkContext.defaultParallelism
+    for table in (store.points_path, store.rollups_path):
+        for root, _, names in os.walk(table):
+            files = [n for n in names if n.endswith(".parquet")]
+            assert len(files) <= limit, (root, len(files))
+    _levels_match_raw(store)
 
 
 def _bins(rows):
@@ -111,7 +147,12 @@ def _bins(rows):
 
 def _levels_match_raw(store):
     """Every stored level equals aggregate_points over every stored raw
-    point: counts and min/max exact, sums within rel 1e-9."""
+    point: counts and min/max exact, sums within rel 1e-9. Every bin is
+    stored in the partition of its start's UTC day, where a narrow
+    read looks for it."""
+    day0 = dt.date(1970, 1, 1)
+    for r in store._read(store.rollups_path).select("bin_ts", "bin_date").collect():
+        assert r.bin_date == day0 + dt.timedelta(days=r.bin_ts // 86_400), r
     raw = store.get(None, LO, HI, fidelity=None)
     for d in FIDELITIES:
         _same_bins(
@@ -271,6 +312,95 @@ def test_arrow_and_dataframe_fronts_store_the_same(spark, tmp_path):
     ]
 
 
+_MIDNIGHT_US = _epoch_us(dt.datetime(2024, 1, 2, tzinfo=UTC))
+_DAY_US = 86_400 * 10**6
+
+# Distinct (dataset_id, µs offset from the 2024-01-02 UTC midnight,
+# value) points: a few ids, instants within a day of the midnight or
+# seconds from it (so fine bins hold several points), and values on a
+# quarter grid, so every sum is exact whatever order it is folded in.
+_pool = st.lists(
+    st.tuples(
+        st.sampled_from(["h.a", "h.b", "h.c"]),
+        st.one_of(
+            st.integers(-_DAY_US, _DAY_US), st.integers(-3 * 10**6, 3 * 10**6)
+        ),
+        st.integers(-400, 400).map(lambda q: q / 4),
+    ),
+    min_size=4,
+    max_size=40,
+    unique_by=lambda p: p[:2],
+)
+
+
+@st.composite
+def _put_sequences(draw):
+    """2-4 batches from one pool of points. Each of at least two
+    batches brings its own slice of the pool (new points, which for a
+    later batch fall into coarse bins already stored), points of
+    earlier batches (a partial overlap) and repeats of its own
+    (in-batch duplicates); an exact replay of an earlier batch may
+    follow any of them."""
+    pool = draw(_pool)
+    n = draw(st.integers(2, 4))
+    seq = []
+    for k in range(n):
+        fresh = pool[k * len(pool) // n : (k + 1) * len(pool) // n]
+        old = [p for batch in seq for p in batch]
+        seq.append(
+            fresh
+            + draw(st.lists(st.sampled_from(old or fresh), max_size=4))
+            + draw(st.lists(st.sampled_from(fresh), max_size=2))
+        )
+        if len(seq) + n - k - 1 < 4 and draw(st.booleans()):
+            seq.append(draw(st.sampled_from(seq)))
+    return seq
+
+
+def _window_matches_get(store):
+    """read_window on a warm store equals get() field for field, raw
+    (as epoch µs) and at every level."""
+    for fid in (None, *FIDELITIES):
+        got = store.read_window(None, LO, HI, fidelity=fid)
+        want = store.get(None, LO, HI, fidelity=fid)
+        if fid is None:
+            want = want.select("dataset_id", F.unix_micros("ts").alias("us"), "value")
+        assert list(zip(*(c.to_pylist() for c in got.columns))) == [
+            tuple(r) for r in want.collect()
+        ], fid
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(batches=_put_sequences())
+def test_fronts_agree_on_generated_put_sequences(spark, tmp_path, batches):
+    """A generated sequence of puts, as Arrow tables into one store and
+    as DataFrames into another: both leave the same raw points, every
+    level equals aggregate_points over raw and the other store's, and
+    a warm read_window equals get()."""
+    root = tempfile.mkdtemp(dir=tmp_path)
+    stores = {f: TelemetryStore(spark, os.path.join(root, f)) for f in FRONTS}
+    for rows in batches:
+        ids, offsets, values = zip(*rows)
+        table = _points_table(ids, [_MIDNIGHT_US + o for o in offsets], values)
+        for front, store in stores.items():
+            store.put(as_front(spark, table, front))
+    arrow, frame = stores["arrow"], stores["dataframe"]
+    assert _raw(arrow) == _raw(frame)
+    assert len(_raw(arrow)) == len({r[:2] for rows in batches for r in rows})
+    ids = sorted({r[0] for rows in batches for r in rows})
+    assert arrow.list_datasets() == frame.list_datasets() == ids
+    for d in FIDELITIES:
+        _same_bins(
+            _bins(arrow.get(None, LO, HI, fidelity=d).collect()),
+            _bins(frame.get(None, LO, HI, fidelity=d).collect()),
+            d,
+        )
+    for store in stores.values():
+        _levels_match_raw(store)
+        store.warm()
+        _window_matches_get(store)
+
+
 @pytest.mark.parametrize("front", FRONTS)
 def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
     """A key sent three times in one batch with different values is
@@ -308,18 +438,20 @@ def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
 @pytest.mark.parametrize("front", FRONTS)
 def test_replay_after_failed_rollup_merge(spark, tmp_path, front):
     """A put that fails after the raw append, then is replayed, leaves
-    every level equal to aggregate_points over raw."""
+    every level equal to aggregate_points over raw. The crash is
+    raised in the rollup merge the front really calls."""
     store = TelemetryStore(spark, str(tmp_path))
     t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
     store.put(points(spark, ["crash.a"], t0, 20, 0.5, front))
     batch = points(spark, ["crash.a"], t0 + dt.timedelta(seconds=10), 20, 0.5, front)
-    merge = store._merge_rollups
+    hook = "_merge_rollups_arrow" if front == "arrow" else "_merge_rollups"
+    merge = getattr(store, hook)
 
     def crash(*args):
-        store._merge_rollups = merge
+        setattr(store, hook, merge)
         raise RuntimeError("killed after the raw append")
 
-    store._merge_rollups = crash
+    setattr(store, hook, crash)
     with pytest.raises(RuntimeError):
         store.put(batch)
     store.put(batch)  # the replay
@@ -331,11 +463,11 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
     """The frames the store builds itself come from Arrow tables: their
     executed plans scan a local table, never a Python RDD (Scan
     ExistingRDD), so no Python worker reads them. They are an empty
-    store's stand-ins (get(), datasets()), the points a put builds
-    from the metrics flush and the serve counters' flush (which hand
-    put an Arrow batch), and the first and second new comment (the
-    first unions the empty comments stand-in). The flushed points keep
-    their instants and values."""
+    store's stand-ins (get(), datasets()), the raw-append and
+    rollup-write frames of the puts of the metrics flush and the serve
+    counters' flush (which hand put an Arrow batch), and the first and
+    second new comment (the first unions the empty comments stand-in).
+    The flushed points keep their instants and values."""
     from open_tlm_spark.operators.serve_metrics import ServeMetrics
     from open_tlm_spark.store import CommentStore
 
@@ -346,18 +478,18 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
         store.datasets(),
     ]
     batches = []
-    put, merge = store.put, store._merge_rollups
+    put = store.put
 
     def capture_put(batch, _count=True):
         batches.append(batch)
         put(batch, _count)
 
-    def capture_merge(points, bin_dates):
-        frames.append(points)
-        merge(points, bin_dates)
-
     monkeypatch.setattr(store, "put", capture_put)
-    monkeypatch.setattr(store, "_merge_rollups", capture_merge)
+    for name in ("_append_points", "_write_rollups"):
+        write = getattr(store, name)
+        monkeypatch.setattr(
+            store, name, lambda df, w=write: (frames.append(df), w(df))[1]
+        )
     store.num_puts, store.num_gets = 3, 4
     ts = dt.datetime(2024, 1, 1, 12)  # naive = UTC
     store.flush_metrics(ts)
@@ -374,7 +506,7 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
     comments.create(ts, "first", [])
     comments.create(ts, "second", ["a"])
 
-    assert len(frames) == 7
+    assert len(frames) == 9
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -2,7 +2,8 @@
 # One-command verification: replicates every gate the driver runs.
 #   tests    — full pytest suite (includes per-query oracle diff at sf0.001)
 #   serving  — the read_window and GET /api/data payload and date tests,
-#              and the Arrow-vs-DataFrame put equivalence test, again
+#              the Arrow-vs-DataFrame put equivalence tests (fixed and
+#              generated batches) and the Arrow put's job budget, again
 #              under a non-UTC TZ (dates are formatted and partitions
 #              keyed from epoch instants, so the host zone must not
 #              change a byte or move a partition)
@@ -19,6 +20,8 @@ python -m pytest tests/ -q
 echo "== serving payload and put front-end tests (TZ=America/New_York) =="
 TZ=America/New_York python -m pytest -q tests/test_tsdb_golden.py \
   tests/test_store_put.py::test_arrow_and_dataframe_fronts_store_the_same \
+  tests/test_store_put.py::test_fronts_agree_on_generated_put_sequences \
+  tests/test_store_put.py::test_put_job_budget_arrow \
   tests/test_api.py::test_iso_dates_match_isoformat \
   tests/test_api.py::test_data_body_matches_json_dumps \
   tests/test_api.py::test_data_roundtrip tests/test_api.py::test_data_auto_fidelity
