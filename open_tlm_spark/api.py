@@ -41,6 +41,17 @@ from open_tlm_spark.store.tsdb import _epoch_us, _points_table
 
 _NOT_OBJECT = {"message": "the request body must be a JSON object"}
 
+# The one date form _points_fast takes: naive YYYY-MM-DDTHH:MM:SS with
+# 1-6 fraction digits or none, which numpy's datetime64[us] reads as
+# datetime.fromisoformat does (naive = UTC). Year 0, which numpy takes
+# and fromisoformat does not, is left out; a day past its month's end
+# matches but fails numpy's parse.
+_DATE = (
+    r"(?!0000)[0-9]{4}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12][0-9]|3[01])"
+    r"T(?:[01][0-9]|2[0-3]):[0-5][0-9]:[0-5][0-9](?:\.[0-9]{1,6})?"
+)
+_DATES = re.compile(f"{_DATE}(?:\n{_DATE})*")
+
 
 def _iso(ts) -> str:
     return ts.isoformat()
@@ -56,6 +67,47 @@ def _iso_dates(us) -> list[str]:
     whole = us % 1_000_000 == 0
     out[whole] = out[whole].astype("<U19")  # drop ".000000"
     return out.tolist()
+
+
+def _points_loop(data: list) -> tuple[list, list, list]:
+    """A POST's points as (ids, epoch µs, values), one datetime per
+    point; a bad point raises KeyError, ValueError, TypeError or
+    OverflowError (an integer past float range), whose text the 400
+    response carries."""
+    ids, stamps, values = [], [], []
+    for ds in data:
+        ids += [str(ds["dataset_id"])] * len(ds["points"])
+        for p in ds["points"]:
+            # naive ISO dates are UTC by engine convention
+            d = _dt.datetime.fromisoformat(p["date"])
+            stamps.append(_epoch_us(d))
+            values.append(float(p["value"]))
+    return ids, stamps, values
+
+
+def _points_fast(data: list):
+    """_points_loop's result decoded a column at a time, or None unless
+    every point is a {"date", "value"} object whose date matches _DATE
+    and whose value is a JSON number (an int or a float, not a bool);
+    the caller then runs _points_loop, so what is accepted or rejected,
+    and each 400's text, stays the loop's."""
+    ids, dates, values = [], [], []
+    try:
+        for ds in data:
+            points = ds["points"]
+            if type(points) is not list:
+                return None
+            ids += [str(ds["dataset_id"])] * len(points)
+            dates += [p["date"] for p in points]
+            values += [p["value"] for p in points]
+        if not set(map(type, values)) <= {int, float}:
+            return None
+        if dates and not _DATES.fullmatch("\n".join(dates)):
+            return None
+        stamps = np.array(dates, dtype="datetime64[us]").astype(np.int64)
+        return ids, stamps, np.array(values, dtype=np.float64)
+    except (KeyError, TypeError, ValueError, OverflowError):
+        return None
 
 
 def _json_floats(x: np.ndarray) -> list:
@@ -264,15 +316,8 @@ class TlmHandler(BaseHTTPRequestHandler):
                         400, {"message": "One or more data fields was missing 'points'"}
                     )
             try:
-                ids, stamps, values = [], [], []
-                for ds in data:
-                    ids += [str(ds["dataset_id"])] * len(ds["points"])
-                    for p in ds["points"]:
-                        # naive ISO dates are UTC by engine convention
-                        d = _dt.datetime.fromisoformat(p["date"])
-                        stamps.append(_epoch_us(d))
-                        values.append(float(p["value"]))
-            except (KeyError, ValueError, TypeError) as e:
+                ids, stamps, values = _points_fast(data) or _points_loop(data)
+            except (KeyError, ValueError, TypeError, OverflowError) as e:
                 return self._send(400, {"message": f"invalid point: {e}"})
             batch = _points_table(ids, stamps, values)
             with self.write_lock:
@@ -380,9 +425,10 @@ def serve(
     tables it changed and they rebuild on their next read. A data
     read's window comes back as Arrow columns, from which the JSON
     body is encoded without a dict per point (_data_body). A data
-    POST hands store.put its points as an Arrow table, so validation,
-    the dedup and the rollup merge run on the driver, and a put
-    without new series runs 2 Spark jobs, its two writes.
+    POST decodes its points a column at a time (_points_fast) and
+    hands store.put an Arrow table, so validation, the dedup, the
+    rollup merge and the pyarrow writes all run on the driver, and a
+    POST runs no Spark job, with or without new series.
 
     ui_root: path to a reference-style static tree (templates/ +
     public/) to serve the browser app at / — completes the switching

@@ -2,17 +2,16 @@
 
 Reference parity (SURVEY.md §1.4, §3):
   * Index.put  (src/index.py:102-177)  -> put(): validate -> dedup ->
-    append raw points (partitioned, sorted-within-partition for
+    append raw points (partitioned, sorted within each file for
     Parquet min/max locality) -> upsert all rollup levels. The
     reference rewrites its six levels in six passes; put() merges all
-    six in ONE aggregation and ONE write and runs a fixed number of
-    Spark actions per call, however many levels there are. A batch
-    held on the driver as a pyarrow Table (an API POST, a metrics
-    flush) is validated, deduped and merged into every level there,
-    reading only its touched partitions with pyarrow, so Spark runs
-    just its two writes; a DataFrame batch (bulk loads, the streaming
-    sink) does the same steps in Spark, so it never passes through the
-    driver.
+    six in ONE aggregation and ONE write, however many levels there
+    are. A batch held on the driver as a pyarrow Table (an API POST, a
+    metrics flush) is validated, deduped and merged into every level
+    there, reading only its touched partitions with pyarrow, and
+    pyarrow writes its files, so it runs no Spark job; a DataFrame
+    batch (bulk loads, the streaming sink) does the same steps in
+    Spark, so it never passes through the driver.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
@@ -26,31 +25,34 @@ Reference parity (SURVEY.md §1.4, §3):
 
 Physical layout (designed for 100 TB):
   points/   partitioned by ds_bucket (crc32 of dataset_id) and ds_date
-            (UTC day of ts). Within a partition, rows are sorted by
-            (dataset_id, ts) at write so Parquet's dataset_id stats let
-            a per-series scan skip row groups. Spark stores ts as
-            INT96, which carries no row-group stats, so a time range
-            prunes by day partition only.
+            (UTC day of ts). Each file's rows are sorted by
+            (dataset_id, ts) so Parquet's dataset_id stats let a
+            per-series scan skip row groups. Both writers store ts as
+            INT96, Spark's default, which carries no row-group stats,
+            so a time range prunes by day partition only.
   rollups/  every level in one table, partitioned by level (the bin
             duration d in seconds) and bin_date (UTC day of the bin
             start); level d is ≈1/d of raw, so read-merge-overwrite of
             the touched partitions is cheap — this is the
             unbounded-lateness upsert (SURVEY.md ST3) that pure
             watermarked streaming cannot express.
-  datasets/ the catalog: one row per dataset_id ever written.
+  datasets  the catalog: one Parquet file, one row per dataset_id ever
+            written, replaced whole (os.replace) when new ids arrive.
 
-Every read passes the table's known schema (the *_DDL constants), so
-no scan starts a Parquet schema-inference job.
+Spark and pyarrow write the same files: snappy, partition columns in
+the path only, ts as INT96. Every Spark read passes the table's known
+schema (the *_DDL constants), so no scan starts a Parquet
+schema-inference job; pyarrow reads pass the matching Arrow schema.
 
 Interactive serving (read_window, list_datasets) on a warm store runs
 no Spark job: each stored table is held as an immutable driver-side
 snapshot (numpy columns sorted by (dataset_id, time) plus each
-series' row range; rollups get one per level), built by a single Arrow
+series' row range; rollups get one per level), built by one pyarrow
 read of the table, so a window is two binary searches per series.
 read_window returns the window as an Arrow table of the snapshot's
-slices, with no Python object per row. Spark does every write and
-builds every snapshot; an Arrow put reads its touched partitions with
-pyarrow; get() and datasets() always read storage.
+slices, with no Python object per row. Spark writes only DataFrame
+batches and compactions; get() and datasets() always read storage
+with Spark.
 """
 
 from __future__ import annotations
@@ -58,7 +60,9 @@ from __future__ import annotations
 import collections
 import datetime as _dt
 import os
+import shutil
 import threading
+import uuid
 import zlib
 from functools import reduce
 
@@ -111,18 +115,40 @@ _ROLLUP_MERGE = (
     ("count", "sum"),
 )
 
-# Driver-side reads of stored partitions (put's Arrow path): the hive
-# partition columns' types as Spark writes them, and ts, which Spark
-# stores as INT96, read as microseconds.
+# The stored tables as pyarrow reads and writes them: the on-disk
+# schemas above, with ts, which both writers store as INT96, read as
+# microseconds.
+_POINTS_SCHEMA = pa.schema(
+    [
+        ("dataset_id", pa.string()),
+        ("ts", pa.timestamp("us")),
+        ("value", pa.float64()),
+        ("ds_bucket", pa.int32()),
+        ("ds_date", pa.date32()),
+    ]
+)
+_ROLLUP_SCHEMA = pa.schema(
+    [
+        ("dataset_id", pa.string()),
+        ("bin_ts", pa.int64()),
+        *[(c, pa.float64()) for c in ("min_value", "max_value", "sum_values")],
+        ("count", pa.int64()),
+        ("level", pa.int32()),
+        ("bin_date", pa.date32()),
+    ]
+)
 _PARQUET = pads.ParquetFileFormat(
     read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
 )
-_POINTS_PARTS = pads.partitioning(
-    pa.schema([("ds_bucket", pa.int32()), ("ds_date", pa.date32())]), flavor="hive"
+# Files as Spark writes them: snappy, ts as INT96 (Spark's default
+# spark.sql.parquet.outputTimestampType), no Arrow schema in the footer.
+_WRITE = dict(
+    compression="snappy", use_deprecated_int96_timestamps=True, store_schema=False
 )
-_ROLLUP_PARTS = pads.partitioning(
-    pa.schema([("level", pa.int32()), ("bin_date", pa.date32())]), flavor="hive"
-)
+
+# How often a snapshot build that found a listed file deleted lists
+# its table again before it fails (_snapshot).
+_BUILD_RETRIES = 5
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 _ONE_US = _dt.timedelta(microseconds=1)
@@ -173,25 +199,78 @@ def _level_bins(fine_ts):
     return [(d, fine_ts - fine_ts % d) for d in FIDELITIES]
 
 
-def _read_parts(base: str, parts, partitioning, columns, filter=None):
-    """Columns of the given partition directories (paths relative to
-    base) of a stored table, read on the driver with pyarrow, or None
-    when none of them holds a file. Only those directories are listed,
-    so the cost follows the partitions, not the table."""
-    files = []
-    for part in parts:
-        d = os.path.join(base, part)
-        if os.path.isdir(d):
-            files += [
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if not f.startswith((".", "_"))
-            ]
-    if not files:
-        return None
+def _read_parts(base: str, schema: pa.Schema, columns, parts=None, filter=None):
+    """Columns of a stored table (schema: its columns, then its two
+    hive partition columns), read on the driver with pyarrow: of the
+    given partition directories (paths relative to base), or of the
+    whole table when parts is None. Given parts, only those
+    directories are listed, so the cost follows the partitions, not
+    the table. Hidden paths
+    (".", "_": a write in progress) are skipped; a missing table reads
+    as no rows."""
+    if parts is None:
+        source = base if os.path.isdir(base) else []
+    else:
+        source = []
+        for part in parts:
+            d = os.path.join(base, part)
+            if os.path.isdir(d):
+                source += [
+                    os.path.join(d, f)
+                    for f in sorted(os.listdir(d))
+                    if not f.startswith((".", "_"))
+                ]
+    hive = pads.partitioning(pa.schema(list(schema)[-2:]), flavor="hive")
     return pads.dataset(
-        files, format=_PARQUET, partitioning=partitioning, partition_base_dir=base
+        source,
+        schema=schema,
+        format=_PARQUET,
+        partitioning=hive,
+        partition_base_dir=base,
     ).to_table(columns=columns, filter=filter)
+
+
+def _write_parts(base: str, table: pa.Table, keys: list[str]) -> list[str]:
+    """Write a table whose last two columns are its hive partition
+    columns under base: one file per partition directory, holding the
+    other columns sorted by keys. Each file is written under a hidden
+    name and renamed into place, so no reader sees it half written.
+    Returns the directories written, relative to base."""
+    parts = table.column_names[-2:]
+    table = table.sort_by([(c, "ascending") for c in (*parts, *keys)])
+    values = [table.column(c).to_numpy() for c in parts]
+    new_dir = reduce(np.logical_or, [v[1:] != v[:-1] for v in values])
+    bounds = [0, *(np.flatnonzero(new_dir) + 1).tolist(), table.num_rows]
+    data = table.drop_columns(parts)
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    dirs = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        rel = os.path.join(*[f"{c}={v[lo]}" for c, v in zip(parts, values)])
+        d = os.path.join(base, rel)
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(data.slice(lo, hi - lo), os.path.join(d, "." + name), **_WRITE)
+        os.rename(os.path.join(d, "." + name), os.path.join(d, name))
+        dirs.append(rel)
+    return dirs
+
+
+def _overwrite_parts(base: str, table: pa.Table, keys: list[str]) -> None:
+    """Replace the partition directories of base that the table
+    touches, and only those, with the table's rows (_write_parts), as
+    Spark's dynamic partition overwrite does: the new directories are
+    written under a hidden staging directory, then each replaces its
+    target by a delete and a rename. Like Spark's, the swap is not
+    atomic: a crash inside it can leave a partition missing."""
+    staging = os.path.join(base, f".staging-{uuid.uuid4().hex}")
+    try:
+        for rel in _write_parts(staging, table, keys):
+            target = os.path.join(base, rel)
+            if os.path.isdir(target):
+                shutil.rmtree(target)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(staging, rel), target)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _points_table(ids, us, values) -> pa.Table:
@@ -361,8 +440,8 @@ class TelemetryStore:
         snapshots (the reference holds its whole store in process RAM;
         this is the equivalent for the API shim). Builds the snapshots
         of the rollups, the catalog and the raw points now, each by one
-        Spark read of the stored table; a write drops its table's
-        snapshot, which rebuilds on its next read."""
+        pyarrow read of the stored table; a put drops the snapshots of
+        the tables it wrote, which rebuild on their next read."""
         self._warm_enabled = True
         for p in (self.rollups_path, self.catalog_path, self.points_path):
             self._snapshot(p)
@@ -370,26 +449,35 @@ class TelemetryStore:
     def _snapshot(self, path: str):
         """The path's snapshot, built if it was dropped. A build that
         raced a write to its path (the generation moved on) serves the
-        read that made it but is not kept."""
+        read that made it but is not kept. A rollup overwrite deletes
+        the files it replaces, so a build that listed one of them
+        before it was deleted lists the table again."""
         snap = self._snapshots.get(path)
         if snap is None:
             gen = self._warm_gen[path]
-            snap = self._build_snapshot(path)
+            for retries in range(_BUILD_RETRIES, -1, -1):
+                try:
+                    snap = self._build_snapshot(path)
+                    break
+                except FileNotFoundError:
+                    if not retries:
+                        raise
             with self._warm_lock:
                 if self._warm_gen[path] == gen:
                     self._snapshots[path] = snap
         return snap
 
     def _build_snapshot(self, path: str):
-        """One Spark read of a stored table, transferred as Arrow. The
-        rollups table is split by level while it is held."""
-        df = self._read(path)
+        """One pyarrow read of a stored table on the driver, with no
+        Spark job. The rollups table is split by level while it is
+        held."""
         if path == self.catalog_path:
-            return sorted(df.toArrow().column("dataset_id").to_pylist())
+            return sorted(self._catalog_ids())
         if path == self.points_path:
-            df = df.select("dataset_id", F.unix_micros("ts").alias("us"), "value")
-            return _Snapshot.collect([df.toArrow()], ("dataset_id", "us", "value"))[0]
-        tbl = df.select(*_ROLLUP_COLS, "level").toArrow()
+            tbl = _read_parts(path, _POINTS_SCHEMA, ["dataset_id", "ts", "value"])
+            tbl = tbl.set_column(1, "us", tbl.column("ts").cast(pa.int64()))
+            return _Snapshot.collect([tbl], ("dataset_id", "us", "value"))[0]
+        tbl = _read_parts(path, _ROLLUP_SCHEMA, [*_ROLLUP_COLS, "level"])
         level = tbl.column("level")
         parts = [
             tbl.filter(pc.equal(level, d)).drop_columns(["level"]) for d in FIDELITIES
@@ -397,13 +485,14 @@ class TelemetryStore:
         del tbl, level
         return dict(zip(FIDELITIES, _Snapshot.collect(parts, _ROLLUP_FIELDS)))
 
-    def _invalidate_warm(self, path: str) -> None:
-        """Drop a rewritten path's snapshot. Nothing is released: a
-        reader that holds the old snapshot keeps a consistent view of
-        the table before the write."""
+    def _invalidate_warm(self, *paths: str) -> None:
+        """Drop rewritten paths' snapshots, together. Nothing is
+        released: a reader that holds an old snapshot keeps a
+        consistent view of its table before the write."""
         with self._warm_lock:
-            self._snapshots.pop(path, None)
-            self._warm_gen[path] += 1
+            for path in paths:
+                self._snapshots.pop(path, None)
+                self._warm_gen[path] += 1
 
     # ------------------------------------------------------------ ingest
     @staticmethod
@@ -429,8 +518,8 @@ class TelemetryStore:
         fixed number of Spark actions that does not grow with the
         number of levels. The batch's type picks how it runs.
 
-        A pyarrow Table (API POSTs, metric flushes) stays on the driver
-        until its two writes:
+        A pyarrow Table (API POSTs, metric flushes) stays on the driver,
+        and pyarrow writes its files, so it runs no Spark job:
           1. pyarrow.compute applies _valid_rows' rules and keeps the
              first of each in-batch (dataset_id, ts) key; the new ids
              come from a driver-side Parquet read of the catalog
@@ -438,14 +527,15 @@ class TelemetryStore:
           2. a pyarrow read of the stored keys in the batch's touched
              ds_bucket/ds_date directories, inside its ids and ts
              range, then an anti-join in pyarrow;
-          3. the raw append, a local scan of the driver-held result
-             (Spark job 1);
+          3. the raw append: one new file in each touched
+             ds_bucket/ds_date directory (_append_points_arrow);
           4. the batch's 1 s partials cascade to every level, a pyarrow
              read of the touched (level, bin_date) directories brings
              the stored partials, and one group_by merges both
              (_merge_rollups_arrow);
-          5. one dynamic-overwrite write of rollups/ from that local
-             table (Spark job 2).
+          5. the merged partitions are written to a hidden staging
+             directory, then each replaces its (level, bin_date)
+             directory (_overwrite_parts).
 
         A DataFrame (bulk loads, the streaming sink) stays in Spark, so
         a large batch never passes through the driver (_spark_front):
@@ -464,46 +554,46 @@ class TelemetryStore:
              checkpoint.
 
         Steps 3-5 are skipped when no valid new point is left. Then,
-        for both, a catalog rewrite, only when the batch brings new ids.
+        for both, the catalog file is replaced, only when the batch
+        brings new ids. The put drops the snapshots of the tables it
+        wrote once, at its end, so a warm reader sees the store before
+        or after the put, never raw points ahead of their rollups.
 
         Replaying a put that completed is a no-op (step 2). Replaying a
         put that failed after step 3 is not: its points are already in
         raw storage, so the anti-join drops them and no rollup level
-        ever counts them (ROADMAP item 2: a per-put commit marker).
+        ever counts them (ROADMAP item 3). A crash inside step 5's swap
+        can leave a (level, bin_date) partition missing until the next
+        write of it, as with Spark's dynamic overwrite.
 
         _count=False exempts internal writes (metric flushes) from the
         num_puts counter, so the published series counts client puts.
         """
         if _count:
             self.num_puts += 1
-        if isinstance(batch, pa.Table):
-            rows, new_ids = self._arrow_front(batch)
-            if rows is not None:
-                points = rows.set_column(1, "ts", rows.column("us").cast(_TS_TYPE))
-                self._append_points(self._local_frame(points))
-                self._merge_rollups_arrow(rows)
-        else:
-            points, bin_dates, new_ids = self._spark_front(batch)
-            if points is not None:
-                self._append_points(points)
-                self._merge_rollups(points, bin_dates)
-        if new_ids:
-            self._merge_catalog(new_ids)
-
-    def _local_frame(self, table: pa.Table) -> DataFrame:
-        """A driver-held table as a frame of at most defaultParallelism
-        partitions. createDataFrame keeps a table below
-        spark.sql.execution.arrow.localRelationThreshold (48 MB) as a
-        local relation, but splits a larger one into one partition per
-        Arrow batch of maxRecordsPerBatch (10k) rows, and a write from
-        that leaves a file per partition in every directory it
-        touches."""
-        return self.spark.createDataFrame(table).coalesce(
-            self.spark.sparkContext.defaultParallelism
-        )
+        wrote = []
+        try:
+            if isinstance(batch, pa.Table):
+                rows, new_ids = self._arrow_front(batch)
+                if rows is not None:
+                    wrote += [self.points_path, self.rollups_path]
+                    self._append_points_arrow(rows)
+                    self._merge_rollups_arrow(rows)
+            else:
+                points, bin_dates, new_ids = self._spark_front(batch)
+                if points is not None:
+                    wrote += [self.points_path, self.rollups_path]
+                    self._append_points(points)
+                    self._merge_rollups(points, bin_dates)
+            if new_ids:
+                wrote.append(self.catalog_path)
+                self._merge_catalog(new_ids)
+        finally:
+            self._invalidate_warm(*wrote)
 
     def _append_points(self, points: DataFrame) -> None:
-        """put's raw append of the new (dataset_id, ts, value) points."""
+        """put's raw append of a DataFrame's new (dataset_id, ts, value)
+        points."""
         (
             points.withColumn("ds_bucket", _bucket_col(self.n_buckets))
             .withColumn("ds_date", F.to_date("ts"))
@@ -512,7 +602,29 @@ class TelemetryStore:
             .partitionBy("ds_bucket", "ds_date")
             .parquet(self.points_path)
         )
-        self._invalidate_warm(self.points_path)
+
+    def _append_points_arrow(self, rows: pa.Table) -> None:
+        """put's raw append of an Arrow batch's new points ((dataset_id,
+        us, value)): one new file in each ds_bucket/ds_date directory
+        they fall in. Partitions come from epoch µs, so the host's time
+        zone cannot move one."""
+        ids = pc.dictionary_encode(rows.column("dataset_id")).combine_chunks()
+        buckets = np.array(
+            [_ds_bucket(i, self.n_buckets) for i in ids.dictionary.to_pylist()],
+            np.int32,
+        )
+        us = rows.column("us").to_numpy()
+        table = pa.table(
+            [
+                rows.column("dataset_id"),
+                pa.array(us, pa.timestamp("us")),
+                rows.column("value"),
+                buckets[ids.indices.to_numpy()],
+                pa.array((us // _DAY_US).astype(np.int32), pa.date32()),
+            ],
+            schema=_POINTS_SCHEMA,
+        )
+        _write_parts(self.points_path, table, ["dataset_id", "ts"])
 
     def _spark_front(self, batch: DataFrame):
         """put's steps 1-2 for a DataFrame: (the frozen new points or
@@ -578,14 +690,14 @@ class TelemetryStore:
         days = _dates(t // _DAY_US)
         stored = _read_parts(
             self.points_path,
-            [f"ds_bucket={b}/ds_date={d}" for b in buckets for d in days],
-            _POINTS_PARTS,
+            _POINTS_SCHEMA,
             ["dataset_id", "ts"],
+            [f"ds_bucket={b}/ds_date={d}" for b in buckets for d in days],
             (pads.field("ts") >= pa.scalar(int(t.min()), stamp))
             & (pads.field("ts") <= pa.scalar(int(t.max()), stamp))
             & pads.field("dataset_id").isin(names),
         )
-        if stored is not None and stored.num_rows:
+        if stored.num_rows:
             stored = stored.set_column(1, "us", stored.column("ts").cast(pa.int64()))
             rows = rows.join(stored, ["dataset_id", "us"], join_type="left anti")
             if rows.num_rows == 0:
@@ -594,7 +706,7 @@ class TelemetryStore:
 
     def _catalog_ids(self) -> list[str]:
         """The catalog's ids, by a driver-side Parquet read of the
-        (tiny) table: no Spark job, warm or cold."""
+        (tiny) file: no Spark job, warm or cold."""
         if not os.path.exists(self.catalog_path):
             return []
         return pq.read_table(self.catalog_path).column("dataset_id").to_pylist()
@@ -605,8 +717,8 @@ class TelemetryStore:
         """The (dataset_id, ts) of the stored points a batch can
         collide with: those in its ds_bucket and ds_date partitions,
         between its first and last epoch µs (lo, hi). The partitions do
-        the pruning: Spark stores ts as INT96, which carries no
-        row-group statistics, so the ts range skips no row group."""
+        the pruning: ts is stored as INT96, which carries no row-group
+        statistics, so the ts range skips no row group."""
         cond = (
             F.col("ds_bucket").isin(buckets)
             & F.col("ds_date").isin(dates)
@@ -669,20 +781,18 @@ class TelemetryStore:
     def _merge_catalog(self, new_ids: list[str]) -> None:
         """C1: maintain the dataset catalog as a tiny dimension table
         (the reference's catalog is the data/full/ directory listing,
-        src/index.py:231-239). Search then scans a frame with one row
+        src/index.py:231-239). Search then scans a file with one row
         per series ever written — never the fact table. Called only
         with ids the catalog does not hold yet. The merged ids are
-        built on the driver, so the overwrite reads a local table, not
-        the path it replaces, and needs no checkpoint."""
+        written on the driver to a hidden file, which then replaces
+        the catalog in one os.replace, for both fronts."""
         ids = pa.array(sorted(set(self._catalog_ids()).union(new_ids)), pa.string())
-        # an Arrow table, not Python rows: no Python worker reads it
-        (
-            self.spark.createDataFrame(pa.table({"dataset_id": ids}))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(self.catalog_path)
-        )
-        self._invalidate_warm(self.catalog_path)
+        os.makedirs(self.base, exist_ok=True)
+        tmp = os.path.join(self.base, f".datasets-{uuid.uuid4().hex}")
+        pq.write_table(pa.table({"dataset_id": ids}), tmp, **_WRITE)
+        if os.path.isdir(self.catalog_path):  # a catalog Spark wrote
+            shutil.rmtree(self.catalog_path)
+        os.replace(tmp, self.catalog_path)
 
     def _merge_rollups(
         self, points: DataFrame, bin_dates: dict[int, list[_dt.date]]
@@ -698,9 +808,11 @@ class TelemetryStore:
         dataset_id, bin_ts) merges both (_ROLLUP_MERGE: min(min),
         max(max), sum(sum), sum(count)), so combine(agg(A), agg(B)) ==
         agg(A ∪ B). The result is checkpointed (it reads the partitions
-        about to be overwritten), then written (_write_rollups). On a
-        cluster with Delta the write is one MERGE INTO rollups ON
-        (level, dataset_id, bin_ts)."""
+        about to be overwritten), then overwrites the (level, bin_date)
+        partitions it touches, and only those
+        (partitionOverwriteMode=dynamic). On a cluster with Delta the
+        write is one MERGE INTO rollups ON (level, dataset_id,
+        bin_ts)."""
         fine = aggregate_points(points, FIDELITIES[0]).withColumnRenamed(
             "bin_ts", "fine_ts"
         )
@@ -723,11 +835,16 @@ class TelemetryStore:
             )
             stored = self._scan(self.rollups_path).filter(touched)
             rows = rows.unionByName(stored.select("level", *_ROLLUP_COLS))
-        self._write_rollups(
+        (
             rows.groupBy("level", "dataset_id", "bin_ts")
             .agg(*[getattr(F, fn)(c).alias(c) for c, fn in _ROLLUP_MERGE])
             .withColumn("bin_date", _bin_date(F.col("bin_ts")))
             .localCheckpoint(eager=True)
+            .write.mode("overwrite")
+            # per-write dynamic overwrite, without mutating session-global conf
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("level", "bin_date")
+            .parquet(self.rollups_path)
         )
 
     def _merge_rollups_arrow(self, rows: pa.Table) -> None:
@@ -737,11 +854,11 @@ class TelemetryStore:
         every level at their bin (_level_bins); a pyarrow read of the
         touched (level, bin_date) directories brings the stored
         partials; one group_by on (level, dataset_id, bin_ts) merges
-        both (_ROLLUP_MERGE). The merged rows are written from the
-        driver (_write_rollups), sorted within each write task; nothing
-        re-reads storage, so no checkpoint. The driver holds every row
-        of the touched partitions, as a POST already holds its batch;
-        a DataFrame batch goes through _merge_rollups instead."""
+        both (_ROLLUP_MERGE). pyarrow then replaces each touched
+        partition with its merged rows (_overwrite_parts). The driver
+        holds every row of the touched partitions, as a POST already
+        holds its batch; a DataFrame batch goes through _merge_rollups
+        instead."""
         aggs = ("min", "max", "sum", "count")
         fine = (
             pa.table(
@@ -770,16 +887,15 @@ class TelemetryStore:
         ]
         stored = _read_parts(
             self.rollups_path,
+            _ROLLUP_SCHEMA,
+            ["level", *_ROLLUP_COLS],
             [
                 f"level={d}/bin_date={day}"
                 for d, bin_ts in levels
                 for day in _dates(bin_ts // 86_400)
             ],
-            _ROLLUP_PARTS,
-            ["level", *_ROLLUP_COLS],
         )
-        if stored is not None:
-            partials.append(stored.cast(partials[0].schema))
+        partials.append(stored.cast(partials[0].schema))
         merged = (
             pa.concat_tables(partials)
             .group_by(["level", "dataset_id", "bin_ts"])
@@ -788,34 +904,15 @@ class TelemetryStore:
         bin_ts = merged.column("bin_ts").to_numpy()
         out = pa.table(
             [
-                merged.column("level"),
                 merged.column("dataset_id"),
                 bin_ts,
                 *[merged.column(f"{c}_{fn}") for c, fn in _ROLLUP_MERGE],
+                merged.column("level"),
                 pa.array((bin_ts // 86_400).astype(np.int32), pa.date32()),
             ],
-            names=["level", *_ROLLUP_COLS, "bin_date"],
+            schema=_ROLLUP_SCHEMA,
         )
-        # Spark's sort, not the driver's: the write sorts by the
-        # partition columns anyway, so the longer key costs it little
-        # (a driver sort_by took 0.43 s of 2.4M merged rows)
-        self._write_rollups(
-            self._local_frame(out).sortWithinPartitions(
-                "level", "bin_date", "dataset_id", "bin_ts"
-            )
-        )
-
-    def _write_rollups(self, rollups: DataFrame) -> None:
-        """Overwrite the (level, bin_date) partitions the merged rows
-        touch, and only those (partitionOverwriteMode=dynamic)."""
-        (
-            rollups.write.mode("overwrite")
-            # per-write dynamic overwrite, without mutating session-global conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("level", "bin_date")
-            .parquet(self.rollups_path)
-        )
-        self._invalidate_warm(self.rollups_path)
+        _overwrite_parts(self.rollups_path, out, ["dataset_id", "bin_ts"])
 
     # ------------------------------------------------------------- query
     # O4/T5: reject queries whose routed result would exceed this many

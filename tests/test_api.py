@@ -9,7 +9,13 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from open_tlm_spark.api import _data_body, _iso_dates, serve
+from open_tlm_spark.api import (
+    _data_body,
+    _iso_dates,
+    _points_fast,
+    _points_loop,
+    serve,
+)
 from open_tlm_spark.store import CommentStore, TelemetryStore
 from open_tlm_spark.store.tsdb import _ROLLUP_COLS, _ROLLUP_FIELDS, _ROLLUP_READ, _Snapshot
 
@@ -51,6 +57,103 @@ def test_iso_dates_match_isoformat():
     ]
     assert _iso_dates(us) == want
     assert _iso_dates([]) == []
+
+
+# Dates in and out of _points_fast's form: 0-7 fraction digits, UTC
+# and other offsets, the space separator, the basic format, date-only
+# and truncated times, impossible calendar values, years 0 and 1,
+# non-ASCII digits, and dates that are no string.
+_POST_DATES = [
+    "2024-01-01T03:00:00",
+    *[f"2024-01-01T03:00:00.{'123456789'[:n]}" for n in range(1, 8)],
+    "1969-12-31T23:59:59.999999",
+    "0001-01-01T00:00:00",
+    "0999-06-30T12:00:00.5",
+    "2024-02-29T23:59:59",
+    "2024-01-01T03:00:00Z",
+    "2024-01-01T03:00:00+00:00",
+    "2024-01-01T07:00:01+04:00",
+    "2023-12-31T22:30:03.25-04:30",
+    "2024-01-01 03:00:00",
+    "20240101T030000",
+    "2024-01-01",
+    "2024-01-01T03:00",
+    "2024-02-30T00:00:00",
+    "2023-02-29T00:00:00",
+    "2024-13-01T00:00:00",
+    "0000-01-01T00:00:00",
+    "2024-01-01T24:00:00",
+    "2024-01-01T23:59:60",
+    "\u0662\u0660\u0662\u0664-01-01T00:00:00",
+    "2024-01-01T03:00:00\n",
+    "",
+    1704078000,
+    None,
+]
+# Values: JSON numbers (ints past int64 and past float range, NaN and
+# infinities as json.loads gives them) and what is no number
+_POST_VALUES = [
+    1.0, -2.5, 0, 7, 2**63 + 1, 10**400, float("nan"), float("inf"),
+    float("-inf"), True, False, "1.5", "nan", None, [1.0],
+]
+
+
+def _decoded(decode, data):
+    """A decoder's (ids, epoch µs, value bits), or its error's type and
+    text."""
+    try:
+        ids, stamps, values = decode(data)
+    except (KeyError, ValueError, TypeError, OverflowError) as e:
+        return type(e), str(e)
+    return list(ids), [int(u) for u in stamps], np.array(values, np.float64).tobytes()
+
+
+def test_post_fast_decoder_matches_the_loop():
+    """A POST's points decoded a column at a time (_points_fast) equal
+    the per-point loop's (_points_loop) wherever the fast path takes the
+    body; a body it does not take goes to the loop, so every accepted
+    and rejected input and each 400's text stay the loop's. The fast
+    path takes every body of strict naive dates and JSON numbers."""
+    base = {"date": "2024-01-01T00:00:00", "value": 1.0}
+    bodies = [
+        [{"dataset_id": "f.a", "points": [base, {"date": d, "value": v}]}]
+        for d in _POST_DATES
+        for v in _POST_VALUES
+    ]
+    bodies += [
+        [{"dataset_id": "f.a", "points": {"date": "2024-01-01T00:00:00", "value": 1}}],
+        [{"dataset_id": "f.a", "points": "2024"}],
+        [{"dataset_id": "f.a", "points": 5}],
+        [{"dataset_id": "f.a", "points": [base, [1, 2]]}],
+        [{"dataset_id": "f.a", "points": [{"date": "2024-01-01T00:00:00"}]}],
+        [{"dataset_id": "f.a", "points": [{"value": 1.0}]}],
+        [{"dataset_id": 17, "points": [base]}, {"dataset_id": "f.b", "points": []}],
+        [{"dataset_id": "f.a", "points": []}],
+    ]
+    rng = np.random.default_rng(11)
+    epoch = dt.datetime(1970, 1, 1)
+    us = rng.integers(0, 4_102_444_800 * 10**6, 5000)
+    us[::3] -= us[::3] % 10**6  # whole seconds carry no fraction
+    strict = [
+        {"dataset_id": f"f.{k % 7}", "points": [
+            {"date": (epoch + dt.timedelta(microseconds=int(u))).isoformat(), "value": v}
+            for u, v in zip(us[k::50], rng.standard_normal(100).tolist())
+        ]}
+        for k in range(50)
+    ]
+    strict[0]["points"][0]["value"] = 3  # an int is a JSON number too
+    taken = 0
+    for data in [*bodies, strict]:
+        want = _decoded(_points_loop, data)
+        if _points_fast(data) is not None:
+            taken += 1
+            assert _decoded(_points_fast, data) == want, data
+        assert _decoded(lambda d: _points_fast(d) or _points_loop(d), data) == want
+    assert _points_fast(strict) is not None
+    # each of the 11 strict dates with each of the 8 JSON numbers in
+    # float range, the two other bodies of strict points and the
+    # random body
+    assert taken == 11 * 8 + 2 + 1
 
 
 def _json_dumps_body(dataset, table):
@@ -284,6 +387,12 @@ def test_post_validation_errors(api):
     assert status == 400 and "dataset_id" in body["message"]
     status, body = _req(f"{api}/api/data", "POST", {"data": [1]})
     assert status == 400 and "dataset_id" in body["message"]
+    # an integer past float range: a 400, not a dropped connection
+    point = {"date": "2024-01-01T00:00:00", "value": 10**400}
+    status, body = _req(
+        f"{api}/api/data", "POST", {"data": [{"dataset_id": "x", "points": [point]}]}
+    )
+    assert status == 400 and "invalid point" in body["message"]
 
 
 @pytest.mark.parametrize(

@@ -1,9 +1,9 @@
-"""TelemetryStore.put: a fixed Spark-job budget per put, exact
-touched rollup partitions across a UTC midnight, idempotent replay of
-a completed put, the known gap in replaying a failed one, the same
-stored result from an Arrow batch as from a DataFrame (fixed batches
-and generated put sequences), and the store's own small frames built
-from Arrow."""
+"""TelemetryStore.put: a fixed Spark-job budget per put (none for an
+Arrow batch), exact touched rollup partitions across a UTC midnight,
+idempotent replay of a completed put, the known gap in replaying a
+failed one, the same stored result from an Arrow batch as from a
+DataFrame (fixed batches and generated put sequences), a store written
+by both writers, and the store's own small frames built from Arrow."""
 
 import contextlib
 import datetime as dt
@@ -12,6 +12,7 @@ import os
 import tempfile
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 from open_tlm_spark.operators.rollup import aggregate_points
 from open_tlm_spark.schemas import FIDELITIES, POINTS_SCHEMA
 from open_tlm_spark.store import TelemetryStore
-from open_tlm_spark.store.tsdb import _epoch_us, _points_table
+from open_tlm_spark.store.tsdb import _ROLLUP_COLS, _epoch_us, _points_table
 
 UTC = dt.timezone.utc
 LO = dt.datetime(2023, 12, 31, tzinfo=UTC)
@@ -93,22 +94,19 @@ def _put_job_counts(spark, tmp_path, front):
 def test_put_job_budget(spark, tmp_path):
     """A put into a non-empty store runs a fixed handful of Spark jobs
     (11), with one rollup write for all six levels. A put that brings
-    a new series adds the catalog rewrite's one job: the merged ids
-    are built on the driver, so the write needs no checkpoint."""
+    a new series runs no more: the catalog file is written on the
+    driver."""
     counts = _put_job_counts(spark, tmp_path, "dataframe")
     assert 0 < counts[2] <= 11, counts
-    assert counts[0] == counts[1] <= counts[2] + 1, counts
+    assert counts[0] == counts[1] == counts[2], counts
 
 
 def test_put_job_budget_arrow(spark, tmp_path):
-    """From an Arrow batch, everything but the two writes runs on the
-    driver: validation, the dedup against the stored keys and the
-    rollup merge, both reads done with pyarrow. A put runs at most 2
-    Spark jobs (the raw append and the rollup write), and a new series
-    adds the catalog rewrite's one."""
-    counts = _put_job_counts(spark, tmp_path, "arrow")
-    assert 0 < counts[2] <= 2, counts
-    assert counts[0] == counts[1] <= counts[2] + 1, counts
+    """From an Arrow batch, everything runs on the driver: validation,
+    the dedup against the stored keys and the rollup merge read with
+    pyarrow, and pyarrow writes the raw points, the rollups and the
+    catalog. A put runs no Spark job, with or without a new series."""
+    assert _put_job_counts(spark, tmp_path, "arrow") == [0, 0, 0]
 
 
 def test_arrow_put_writes_few_files_per_partition(spark, tmp_path):
@@ -312,6 +310,94 @@ def test_arrow_and_dataframe_fronts_store_the_same(spark, tmp_path):
     ]
 
 
+def _same_reads(store, want):
+    """Spark's get() (raw and every level) and the DataFrame front's
+    stored-key scan return the same rows from both stores."""
+    for fid in (None, *FIDELITIES):
+        rows = [s.get(None, LO, HI, fidelity=fid).collect() for s in (store, want)]
+        assert rows[0] == rows[1], fid
+    days = [dt.date(2024, 1, 1), dt.date(2024, 1, 2)]
+    lo, hi = _epoch_us(LO), _epoch_us(HI)
+    keys = [
+        sorted(s._stored_keys(list(range(s.n_buckets)), days, lo, hi).collect())
+        for s in (store, want)
+    ]
+    assert keys[0] == keys[1] and keys[0]
+
+
+def _check_arrow_files(store):
+    """The files pyarrow wrote keep Spark's layout: ts stored as INT96,
+    dataset_id statistics set, rows sorted by (dataset_id, time), no
+    partition column inside a file; no hidden staging directory or
+    temporary file is left. Returns how many such files there are."""
+    assert sorted(os.listdir(store.base)) == ["datasets", "points", "rollups"]
+    n = 0
+    for table, cols in (
+        (store.points_path, ["dataset_id", "ts", "value"]),
+        (store.rollups_path, list(_ROLLUP_COLS)),
+    ):
+        for root, dirs, names in os.walk(table):
+            assert not [d for d in dirs if d.startswith((".", "_"))], root
+            for name in names:
+                if name.startswith((".", "_")):
+                    continue
+                f = pq.ParquetFile(os.path.join(root, name))
+                if not f.metadata.created_by.startswith("parquet-cpp"):
+                    continue  # written by Spark
+                n += 1
+                assert f.schema_arrow.names == cols, root
+                if cols[1] == "ts":
+                    assert f.schema.column(1).physical_type == "INT96"
+                for g in range(f.metadata.num_row_groups):
+                    assert f.metadata.row_group(g).column(0).is_stats_set
+                got = f.read(columns=cols[:2])
+                keys = list(zip(*(c.to_pylist() for c in got.columns)))
+                assert keys == sorted(keys), root
+    return n
+
+
+def test_mixed_writer_store(spark, tmp_path):
+    """A store filled by a DataFrame put, then Arrow puts, then compact()
+    and expire_raw, then one more Arrow put, answers Spark's get() (raw
+    and every level) and the stored-key scan with the same rows as a
+    store that took the same puts as DataFrames, after each step. The
+    files pyarrow wrote keep Spark's physical layout."""
+    from open_tlm_spark.store.retention import expire_raw
+
+    jan1 = dt.datetime(2024, 1, 1, tzinfo=UTC)
+    first, replay, later = _front_batches()
+    # new points in the partitions the DataFrame put wrote
+    beside = [
+        (sid, jan1 + dt.timedelta(hours=23, minutes=41, seconds=7 * i), 0.5 * i)
+        for sid in ("eq.a", "eq.b")
+        for i in range(40)
+    ]
+    after = [("eq.c", jan1 + dt.timedelta(days=1, hours=5, seconds=i), 1.0) for i in range(9)]
+    mixed = TelemetryStore(spark, str(tmp_path / "mixed"))
+    frame = TelemetryStore(spark, str(tmp_path / "frame"))
+
+    def put(rows, front):
+        mixed.put(as_front(spark, _batch(rows), front))
+        frame.put(as_front(spark, _batch(rows), "dataframe"))
+
+    put(first, "dataframe")
+    for rows in (replay, later, beside):
+        put(rows, "arrow")
+        _same_reads(mixed, frame)
+    assert _check_arrow_files(mixed) > 0
+    _levels_match_raw(mixed)
+    for store in (mixed, frame):
+        store.compact()
+    _same_reads(mixed, frame)
+    expired = [expire_raw(s, jan1 + dt.timedelta(days=1)) for s in (mixed, frame)]
+    assert expired[0] == expired[1] > 0
+    _same_reads(mixed, frame)
+    put(after, "arrow")
+    _same_reads(mixed, frame)
+    assert _check_arrow_files(mixed) > 0
+    assert mixed.list_datasets() == frame.list_datasets() == ["eq.a", "eq.b", "eq.c"]
+
+
 _MIDNIGHT_US = _epoch_us(dt.datetime(2024, 1, 2, tzinfo=UTC))
 _DAY_US = 86_400 * 10**6
 
@@ -359,7 +445,9 @@ def _put_sequences(draw):
 
 def _window_matches_get(store):
     """read_window on a warm store equals get() field for field, raw
-    (as epoch µs) and at every level."""
+    (as epoch µs) and at every level, and list_datasets equals
+    datasets()."""
+    assert store.list_datasets() == [r.dataset_id for r in store.datasets().collect()]
     for fid in (None, *FIDELITIES):
         got = store.read_window(None, LO, HI, fidelity=fid)
         want = store.get(None, LO, HI, fidelity=fid)
@@ -375,15 +463,18 @@ def _window_matches_get(store):
 def test_fronts_agree_on_generated_put_sequences(spark, tmp_path, batches):
     """A generated sequence of puts, as Arrow tables into one store and
     as DataFrames into another: both leave the same raw points, every
-    level equals aggregate_points over raw and the other store's, and
-    a warm read_window equals get()."""
+    level equals aggregate_points over raw and the other store's, and,
+    after every put, the warm store's read_window equals get()."""
     root = tempfile.mkdtemp(dir=tmp_path)
     stores = {f: TelemetryStore(spark, os.path.join(root, f)) for f in FRONTS}
+    for store in stores.values():
+        store.warm()
     for rows in batches:
         ids, offsets, values = zip(*rows)
         table = _points_table(ids, [_MIDNIGHT_US + o for o in offsets], values)
         for front, store in stores.items():
             store.put(as_front(spark, table, front))
+            _window_matches_get(store)
     arrow, frame = stores["arrow"], stores["dataframe"]
     assert _raw(arrow) == _raw(frame)
     assert len(_raw(arrow)) == len({r[:2] for rows in batches for r in rows})
@@ -397,8 +488,8 @@ def test_fronts_agree_on_generated_put_sequences(spark, tmp_path, batches):
         )
     for store in stores.values():
         _levels_match_raw(store)
-        store.warm()
-        _window_matches_get(store)
+
+
 
 
 @pytest.mark.parametrize("front", FRONTS)
@@ -460,14 +551,15 @@ def test_replay_after_failed_rollup_merge(spark, tmp_path, front):
 
 
 def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch):
-    """The frames the store builds itself come from Arrow tables: their
-    executed plans scan a local table, never a Python RDD (Scan
-    ExistingRDD), so no Python worker reads them. They are an empty
-    store's stand-ins (get(), datasets()), the raw-append and
-    rollup-write frames of the puts of the metrics flush and the serve
-    counters' flush (which hand put an Arrow batch), and the first and
-    second new comment (the first unions the empty comments stand-in).
-    The flushed points keep their instants and values."""
+    """An Arrow put builds no Spark frame: the puts of the metrics flush
+    and the serve counters' flush (which hand put an Arrow batch) run
+    with a store whose Spark session fails on any use. The frames the
+    store still builds itself come from Arrow tables: their executed
+    plans scan a local table, never a Python RDD (Scan ExistingRDD), so
+    no Python worker reads them. They are an empty store's stand-ins
+    (get(), datasets()) and the first and second new comment (the
+    first unions the empty comments stand-in). The flushed points keep
+    their instants and values."""
     from open_tlm_spark.operators.serve_metrics import ServeMetrics
     from open_tlm_spark.store import CommentStore
 
@@ -484,12 +576,12 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
         batches.append(batch)
         put(batch, _count)
 
+    class NoSession:
+        def __getattr__(self, name):
+            raise AssertionError(f"an Arrow put used the Spark session ({name})")
+
     monkeypatch.setattr(store, "put", capture_put)
-    for name in ("_append_points", "_write_rollups"):
-        write = getattr(store, name)
-        monkeypatch.setattr(
-            store, name, lambda df, w=write: (frames.append(df), w(df))[1]
-        )
+    monkeypatch.setattr(store, "spark", NoSession())
     store.num_puts, store.num_gets = 3, 4
     ts = dt.datetime(2024, 1, 1, 12)  # naive = UTC
     store.flush_metrics(ts)
@@ -497,6 +589,7 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
     counters.inc("rerank.batches", 2.0)
     assert counters.flush_to_store(store, ts.replace(tzinfo=UTC)) == 1
     assert [type(b) for b in batches] == [pa.Table, pa.Table]
+    monkeypatch.setattr(store, "spark", spark)
 
     comments = CommentStore(spark, str(tmp_path / "comments"))
     write = comments._write
@@ -506,7 +599,7 @@ def test_internal_frames_scan_arrow_not_python_rows(spark, tmp_path, monkeypatch
     comments.create(ts, "first", [])
     comments.create(ts, "second", ["a"])
 
-    assert len(frames) == 9
+    assert len(frames) == 5
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from open_tlm_spark.schemas import POINTS_SCHEMA
 from open_tlm_spark.store import TelemetryStore
+from open_tlm_spark.store.tsdb import _epoch_us, _points_table
 
 
 # The reference parses fixture timestamps with naive-LOCAL tz
@@ -499,9 +500,10 @@ def test_snapshot_invalidated_during_build_is_not_kept(spark, tmp_path):
 def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
     """Concurrent read_window calls (the ThreadingHTTPServer serving
     pattern), more readers than cores and a short switch interval, each
-    get the 9 rows and leave the session conf untouched. With a put
-    overlapping them, every read returns exactly the pre-put or the
-    post-put rows and none raises."""
+    get the 9 rows and leave the session conf untouched. Beside a
+    sequence of five puts, Arrow and DataFrame in turn, each adding a
+    point, no read raises, rollup reads included, and every raw read
+    returns exactly the rows before or after one of the puts."""
     import sys
     import threading
     import time
@@ -519,6 +521,8 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
         try:
             for _ in range(reads):
                 seen.append(_as_tuples(store.read_window("test_conc", START, END, None)))
+                # a rollup rebuild may race a put's partition swap
+                store.read_window("test_conc", START, END, 1)
                 if stop.is_set():
                     return
                 time.sleep(0.002)
@@ -543,19 +547,27 @@ def test_read_window_concurrent_readers_beside_put(spark, tmp_path):
         assert len(seen) >= 8 and all(rows == pre for rows in seen)
 
         seen.clear()
-        extra = spark.createDataFrame(
-            [("test_conc", _dt("2024-01-01T03:10:00"), 42.0)], POINTS_SCHEMA
-        )
+        # later than every stored point, so each put appends a row
+        extra = [
+            ("test_conc", _epoch_us(_dt(f"2024-01-01T03:1{k}:00")), 40.0 + k)
+            for k in range(5)
+        ]
+
+        def puts():
+            for k, row in enumerate(extra):
+                batch = _points_table(*zip(row))
+                store.put(batch if k % 2 else spark.createDataFrame(batch))
+
         run(
             [threading.Thread(target=reader, args=(10**5,)) for _ in range(3)],
-            during=lambda: store.put(extra),
+            during=puts,
         )
     finally:
         sys.setswitchinterval(interval)
-    post = _as_tuples(store.read_window("test_conc", START, END, None))
+    states = [(pre[0], pre[1] + extra[:k]) for k in range(len(extra) + 1)]
     assert not errors, errors
-    assert len(post[1]) == 10 and set(pre[1]) < set(post[1])
-    assert seen and all(rows in (pre, post) for rows in seen)
+    assert _as_tuples(store.read_window("test_conc", START, END, None)) == states[-1]
+    assert seen and all(rows in states for rows in seen)
     assert spark.conf.get("spark.sql.adaptive.enabled") == conf_before
 
 

@@ -3,10 +3,12 @@
 #   tests    — full pytest suite (includes per-query oracle diff at sf0.001)
 #   serving  — the read_window and GET /api/data payload and date tests,
 #              the Arrow-vs-DataFrame put equivalence tests (fixed and
-#              generated batches) and the Arrow put's job budget, again
-#              under a non-UTC TZ (dates are formatted and partitions
-#              keyed from epoch instants, so the host zone must not
-#              change a byte or move a partition)
+#              generated batches), the mixed-writer store test, the
+#              POST decoder's differential test and the Arrow put's job
+#              budget, again under a non-UTC TZ (dates are parsed,
+#              formatted and partitions keyed from epoch instants, so
+#              the host zone must not change a byte or move a
+#              partition)
 #   gate     — tools/diffcheck.py at sf0.01 (the driver's correctness pass),
 #              repeated under a non-UTC TZ (driver env may differ)
 #   contract — fresh-process __spark_entry__ smoke (plain SparkSession)
@@ -21,8 +23,10 @@ echo "== serving payload and put front-end tests (TZ=America/New_York) =="
 TZ=America/New_York python -m pytest -q tests/test_tsdb_golden.py \
   tests/test_store_put.py::test_arrow_and_dataframe_fronts_store_the_same \
   tests/test_store_put.py::test_fronts_agree_on_generated_put_sequences \
+  tests/test_store_put.py::test_mixed_writer_store \
   tests/test_store_put.py::test_put_job_budget_arrow \
   tests/test_api.py::test_iso_dates_match_isoformat \
+  tests/test_api.py::test_post_fast_decoder_matches_the_loop \
   tests/test_api.py::test_data_body_matches_json_dumps \
   tests/test_api.py::test_data_roundtrip tests/test_api.py::test_data_auto_fidelity
 
