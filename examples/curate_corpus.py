@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 def curate_stages(spark, sf_dir: str, docs=None) -> dict:
     """Build the curation plan and return every stage frame (ordered
     dict: gated -> deduped -> clean -> packs), all lazy. `docs`
-    overrides the corpus (tools/curate_scale_smoke.py feeds synthetic
-    decades through the SAME code path)."""
+    overrides the corpus (a scale run can feed synthetic decades
+    through the SAME code path)."""
     from open_tlm_spark.operators import curation as C
     from open_tlm_spark.operators import dedup as D
     from open_tlm_spark.operators import text as T

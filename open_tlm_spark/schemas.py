@@ -61,6 +61,7 @@ FIDELITIES: list[int] = [1, 10, 100, 1000, 10_000, 100_000]
 # ingest check (no path-traversal concern under Spark). Anchored with
 # \z, not $: Java's $ (Spark rlike) also matches before a trailing line
 # terminator ("abc\n", "abc\u2028"), which the reference's re.fullmatch
-# rejects. Java and RE2 (pyarrow.compute) agree on \z, so both ingest
-# front ends use this one constant.
+# rejects. Java and RE2 (pyarrow.compute) agree on \z, so the Spark
+# rule (TelemetryStore._valid_rows) and put's pyarrow check use this
+# one constant.
 DATASET_ID_PATTERN = r"^[a-zA-Z0-9._-]+\z"

@@ -6,12 +6,11 @@ Reference parity (SURVEY.md §1.4, §3):
     Parquet min/max locality) -> upsert all rollup levels. The
     reference rewrites its six levels in six passes; put() merges all
     six in ONE aggregation and ONE write, however many levels there
-    are. A batch held on the driver as a pyarrow Table (an API POST, a
-    metrics flush) is validated, deduped and merged into every level
-    there, reading only its touched partitions with pyarrow, and
-    pyarrow writes its files, so it runs no Spark job; a DataFrame
-    batch (bulk loads, the streaming sink) does the same steps in
-    Spark, so it never passes through the driver.
+    are. Every batch is validated, deduped and merged into every level
+    on the driver, reading only its touched partitions with pyarrow,
+    and pyarrow writes its files: a pyarrow Table (an API POST, a
+    metrics flush) runs no Spark job, a DataFrame (bulk loads, the
+    streaming sink) one, its toArrow() collect.
   * Index.get  (src/index.py:179-217)  -> get(): fidelity routing +
     exact time-range filter. The reference returns whole overlapping
     *files* (coarse, documented quirk); we return exact ranges —
@@ -50,9 +49,8 @@ snapshot (numpy columns sorted by (dataset_id, time) plus each
 series' row range; rollups get one per level), built by one pyarrow
 read of the table, so a window is two binary searches per series.
 read_window returns the window as an Arrow table of the snapshot's
-slices, with no Python object per row. Spark writes only DataFrame
-batches and compactions; get() and datasets() always read storage
-with Spark.
+slices, with no Python object per row. Spark writes only
+compactions; get() and datasets() always read storage with Spark.
 """
 
 from __future__ import annotations
@@ -71,15 +69,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_tlm_spark.functions.time import floor_to
-from open_tlm_spark.operators.rollup import (
-    aggregate_points,
-    recommended_fidelity,
-    with_mean,
-)
+from open_tlm_spark.operators.rollup import recommended_fidelity, with_mean
 from open_tlm_spark.schemas import DATASET_ID_PATTERN, FIDELITIES
 from open_tlm_spark.session import empty_frame
 
@@ -156,11 +149,6 @@ _DAY_US = 86_400 * 10**6
 _TS_TYPE = pa.timestamp("us", tz="UTC")
 
 
-def _bin_date(bin_ts: Column) -> Column:
-    """UTC day of a bin start: the rollup partition key."""
-    return F.to_date(F.timestamp_seconds(bin_ts))
-
-
 def _as_utc(d: _dt.datetime) -> _dt.datetime:
     """Engine convention: naive datetimes ARE UTC. Attaching tzinfo
     makes every downstream use agree — .timestamp() would otherwise
@@ -181,11 +169,6 @@ def _epoch_us(d: _dt.datetime) -> int:
     return (_as_utc(d) - _EPOCH) // _ONE_US
 
 
-def _from_us(us: int) -> _dt.datetime:
-    """The UTC datetime of epoch microseconds (exact)."""
-    return _EPOCH + _dt.timedelta(microseconds=us)
-
-
 def _dates(days: np.ndarray) -> list[_dt.date]:
     """The distinct UTC dates of epoch day numbers, sorted."""
     day0 = _dt.date(1970, 1, 1)
@@ -194,8 +177,8 @@ def _dates(days: np.ndarray) -> list[_dt.date]:
 
 def _level_bins(fine_ts):
     """(level, bin start) of 1 s partials at every level: floor(fine_ts
-    / d) * d, exact integer arithmetic on a Spark column or a numpy
-    array alike (validation drops pre-epoch points, so fine_ts >= 0)."""
+    / d) * d, in exact integer arithmetic (validation drops pre-epoch
+    points, so fine_ts >= 0)."""
     return [(d, fine_ts - fine_ts % d) for d in FIDELITIES]
 
 
@@ -291,20 +274,10 @@ def _points_table(ids, us, values) -> pa.Table:
 
 
 def _ds_bucket(dataset_id: str, n_buckets: int) -> int:
-    """Bucket id of a series — crc32, which Python's zlib and Spark's
-    F.crc32 compute identically (_bucket_col), so the query side can
-    prune to one bucket without running a Spark job."""
+    """Bucket id of a series: crc32 of its UTF-8 bytes, the same on
+    the write and the query side, so a read prunes to its ids' buckets
+    without running a Spark job."""
     return zlib.crc32(dataset_id.encode("utf-8")) % n_buckets
-
-
-def _bucket_col(n_buckets: int) -> Column:
-    """_ds_bucket of the dataset_id column, in Spark. A string cast to
-    binary is its UTF-8 bytes, as encode(dataset_id, 'UTF-8') gives,
-    at a fraction of encode's cost per row."""
-    return (
-        F.pmod(F.crc32(F.col("dataset_id").cast("binary")), F.lit(n_buckets))
-        .cast("int")
-    )
 
 
 class _Snapshot:
@@ -514,16 +487,17 @@ class TelemetryStore:
         return self._valid_rows(batch).dropDuplicates(["dataset_id", "ts"])
 
     def put(self, batch: DataFrame | pa.Table, _count: bool = True) -> None:
-        """S6: append raw points and upsert every rollup level, in a
-        fixed number of Spark actions that does not grow with the
-        number of levels. The batch's type picks how it runs.
-
-        A pyarrow Table (API POSTs, metric flushes) stays on the driver,
-        and pyarrow writes its files, so it runs no Spark job:
+        """S6: append raw points and upsert every rollup level on the
+        driver, with pyarrow, in a fixed number of steps that does not
+        grow with the number of levels. A pyarrow Table (API POSTs,
+        metric flushes) runs no Spark job. A DataFrame (bulk loads, the
+        streaming sink) runs one: its dataset_id, ts and value columns
+        are collected with toArrow(), and the table takes the same
+        steps:
           1. pyarrow.compute applies _valid_rows' rules and keeps the
-             first of each in-batch (dataset_id, ts) key; the new ids
-             come from a driver-side Parquet read of the catalog
-             (_arrow_front);
+             first of each in-batch (dataset_id, ts) key, in batch
+             order; the new ids come from a driver-side Parquet read of
+             the catalog (_arrow_front);
           2. a pyarrow read of the stored keys in the batch's touched
              ds_bucket/ds_date directories, inside its ids and ts
              range, then an anti-join in pyarrow;
@@ -537,27 +511,17 @@ class TelemetryStore:
              directory, then each replaces its (level, bin_date)
              directory (_overwrite_parts).
 
-        A DataFrame (bulk loads, the streaming sink) stays in Spark, so
-        a large batch never passes through the driver (_spark_front):
-          1. one key collect over the valid rows: the touched raw
-             ds_dates and ds_buckets, [min ts, max ts], each level's
-             touched bin_dates and the ids the catalog lacks;
-          2. anti-join against the stored points inside those buckets,
-             dates and ts range, then an eager checkpoint (the lineage
-             cut before the append);
-          3. the raw append;
-          4. one plan aggregates the batch to the 1 s level, then
-             merges every level's partials with the stored rows of the
-             touched (level, bin_date) partitions in one aggregation,
-             then one eager checkpoint (_merge_rollups);
-          5. one dynamic-overwrite write of rollups/ from that
-             checkpoint.
+        Steps 3-5 are skipped when no valid new point is left (an empty
+        streaming micro-batch writes nothing). Then the catalog file is
+        replaced, only when the batch brings new ids. The put drops the
+        snapshots of the tables it wrote once, at its end, so a warm
+        reader sees the store before or after the put, never raw points
+        ahead of their rollups.
 
-        Steps 3-5 are skipped when no valid new point is left. Then,
-        for both, the catalog file is replaced, only when the batch
-        brings new ids. The put drops the snapshots of the tables it
-        wrote once, at its end, so a warm reader sees the store before
-        or after the put, never raw points ahead of their rollups.
+        Memory: the driver holds the whole batch, and step 4 holds every
+        row of the touched rollup partitions (a warm server holds the
+        whole store anyway). A store larger than driver memory is bulk
+        loaded one slice per put, e.g. one day at a time.
 
         Replaying a put that completed is a no-op (step 2). Replaying a
         put that failed after step 3 is not: its points are already in
@@ -571,41 +535,24 @@ class TelemetryStore:
         """
         if _count:
             self.num_puts += 1
+        if not isinstance(batch, pa.Table):
+            batch = batch.select("dataset_id", "ts", "value").toArrow()
         wrote = []
         try:
-            if isinstance(batch, pa.Table):
-                rows, new_ids = self._arrow_front(batch)
-                if rows is not None:
-                    wrote += [self.points_path, self.rollups_path]
-                    self._append_points_arrow(rows)
-                    self._merge_rollups_arrow(rows)
-            else:
-                points, bin_dates, new_ids = self._spark_front(batch)
-                if points is not None:
-                    wrote += [self.points_path, self.rollups_path]
-                    self._append_points(points)
-                    self._merge_rollups(points, bin_dates)
+            rows, new_ids = self._arrow_front(batch)
+            if rows is not None:
+                wrote += [self.points_path, self.rollups_path]
+                self._append_points_arrow(rows)
+                self._merge_rollups_arrow(rows)
             if new_ids:
                 wrote.append(self.catalog_path)
                 self._merge_catalog(new_ids)
         finally:
             self._invalidate_warm(*wrote)
 
-    def _append_points(self, points: DataFrame) -> None:
-        """put's raw append of a DataFrame's new (dataset_id, ts, value)
-        points."""
-        (
-            points.withColumn("ds_bucket", _bucket_col(self.n_buckets))
-            .withColumn("ds_date", F.to_date("ts"))
-            .sortWithinPartitions("dataset_id", "ts")
-            .write.mode("append")
-            .partitionBy("ds_bucket", "ds_date")
-            .parquet(self.points_path)
-        )
-
     def _append_points_arrow(self, rows: pa.Table) -> None:
-        """put's raw append of an Arrow batch's new points ((dataset_id,
-        us, value)): one new file in each ds_bucket/ds_date directory
+        """put's raw append of its new points ((dataset_id, us,
+        value)): one new file in each ds_bucket/ds_date directory
         they fall in. Partitions come from epoch µs, so the host's time
         zone cannot move one."""
         ids = pc.dictionary_encode(rows.column("dataset_id")).combine_chunks()
@@ -626,35 +573,10 @@ class TelemetryStore:
         )
         _write_parts(self.points_path, table, ["dataset_id", "ts"])
 
-    def _spark_front(self, batch: DataFrame):
-        """put's steps 1-2 for a DataFrame: (the frozen new points or
-        None, each level's touched bin_dates, the new ids)."""
-        # duplicates add no key, so this collect skips validate's
-        # dedup shuffle
-        keys = self._touched_keys(self._valid_rows(batch))
-        if keys is None:
-            return None, {}, []  # nothing valid (also: empty micro-batches)
-        raw_dates, buckets, lo, hi, bin_dates, new_ids = keys
-        batch = self.validate(batch).select("dataset_id", "ts", "value")
-        # Cross-batch dedup (ST5): anti-join against the stored points
-        # the batch can collide with (a pruned read — never a
-        # full-table scan), so re-sent points neither duplicate raw
-        # storage nor double-count rollups. The reference
-        # double-counts here (src/index.py:39-40).
-        if os.path.exists(self.points_path):
-            stored = self._stored_keys(buckets, raw_dates, lo, hi)
-            batch = batch.join(stored, ["dataset_id", "ts"], "left_anti")
-        # Freeze the (validated, deduped) batch NOW: the anti-join above
-        # must not re-evaluate after the append, or it would see the
-        # batch's own rows in storage and erase itself from the rollup
-        # merge.
-        return batch.localCheckpoint(eager=True), bin_dates, new_ids
-
     def _arrow_front(self, batch: pa.Table):
-        """put's steps 1-2 for a driver-held Arrow batch, with no Spark
-        job: (the new points as (dataset_id, us, value) or None, the
-        new ids). Partitions come from epoch µs, so the host's time
-        zone cannot move one."""
+        """put's steps 1-2, with no Spark job: (the new points as
+        (dataset_id, us, value) or None, the new ids). Partitions come
+        from epoch µs, so the host's time zone cannot move one."""
         ids = batch.column("dataset_id").cast(pa.string())
         us = batch.column("ts").cast(_TS_TYPE).cast(pa.int64())
         value = batch.column("value").cast(pa.float64())
@@ -711,57 +633,6 @@ class TelemetryStore:
             return []
         return pq.read_table(self.catalog_path).column("dataset_id").to_pylist()
 
-    def _stored_keys(
-        self, buckets: list[int], dates: list[_dt.date], lo: int, hi: int
-    ) -> DataFrame:
-        """The (dataset_id, ts) of the stored points a batch can
-        collide with: those in its ds_bucket and ds_date partitions,
-        between its first and last epoch µs (lo, hi). The partitions do
-        the pruning: ts is stored as INT96, which carries no row-group
-        statistics, so the ts range skips no row group."""
-        cond = (
-            F.col("ds_bucket").isin(buckets)
-            & F.col("ds_date").isin(dates)
-            & F.col("ts").between(F.lit(_from_us(lo)), F.lit(_from_us(hi)))
-        )
-        return self._scan(self.points_path).filter(cond).select("dataset_id", "ts")
-
-    def _touched_keys(self, batch: DataFrame):
-        """One collect over the valid rows, or None when there are
-        none: the distinct raw ds_dates and ds_buckets, the first and
-        last epoch µs, the distinct bin_dates per level duration and
-        the dataset_ids missing from the catalog. The bins are the
-        ones the merge assigns, so the touched partitions are exact."""
-        new_id = F.col("dataset_id")
-        if os.path.exists(self.catalog_path):
-            known = self._scan(self.catalog_path).select(
-                "dataset_id", F.lit(True).alias("_known")
-            )
-            batch = batch.join(known, "dataset_id", "left")
-            new_id = F.when(F.col("_known").isNull(), new_id)
-        us = F.unix_micros("ts")
-        row = batch.agg(
-            F.collect_set(F.to_date("ts")).alias("raw"),
-            F.collect_set(_bucket_col(self.n_buckets)).alias("buckets"),
-            F.min(us).alias("lo"),
-            F.max(us).alias("hi"),
-            F.collect_set(new_id).alias("new_ids"),
-            *[
-                F.collect_set(_bin_date(floor_to("ts", d))).alias(str(d))
-                for d in FIDELITIES
-            ],
-        ).first()
-        if not row["raw"]:
-            return None
-        return (
-            row["raw"],
-            row["buckets"],
-            row["lo"],
-            row["hi"],
-            {d: row[str(d)] for d in FIDELITIES},
-            row["new_ids"],
-        )
-
     def flush_metrics(
         self, ts: _dt.datetime, prefix: str = "tlm.metrics"
     ) -> None:
@@ -785,7 +656,7 @@ class TelemetryStore:
         per series ever written — never the fact table. Called only
         with ids the catalog does not hold yet. The merged ids are
         written on the driver to a hidden file, which then replaces
-        the catalog in one os.replace, for both fronts."""
+        the catalog in one os.replace."""
         ids = pa.array(sorted(set(self._catalog_ids()).union(new_ids)), pa.string())
         os.makedirs(self.base, exist_ok=True)
         tmp = os.path.join(self.base, f".datasets-{uuid.uuid4().hex}")
@@ -794,71 +665,19 @@ class TelemetryStore:
             shutil.rmtree(self.catalog_path)
         os.replace(tmp, self.catalog_path)
 
-    def _merge_rollups(
-        self, points: DataFrame, bin_dates: dict[int, list[_dt.date]]
-    ) -> None:
-        """A1-A3/ST3: algebraic merge of every level in one plan and one
-        write, in Spark (a DataFrame batch).
-
-        The batch is aggregated once into the finest level (A1); each
-        1 s partial then enters every level at its bin (_level_bins),
-        as a cascade inside the plan (A3). One partition-pruned scan of
-        rollups/ reads the stored rows of each level's touched
-        bin_dates into the same union, and one aggregation on (level,
-        dataset_id, bin_ts) merges both (_ROLLUP_MERGE: min(min),
-        max(max), sum(sum), sum(count)), so combine(agg(A), agg(B)) ==
-        agg(A ∪ B). The result is checkpointed (it reads the partitions
-        about to be overwritten), then overwrites the (level, bin_date)
-        partitions it touches, and only those
-        (partitionOverwriteMode=dynamic). On a cluster with Delta the
-        write is one MERGE INTO rollups ON (level, dataset_id,
-        bin_ts)."""
-        fine = aggregate_points(points, FIDELITIES[0]).withColumnRenamed(
-            "bin_ts", "fine_ts"
-        )
-        bins = F.inline(
-            F.array(
-                *[
-                    F.struct(F.lit(d).alias("level"), b.alias("bin_ts"))
-                    for d, b in _level_bins(F.col("fine_ts"))
-                ]
-            )
-        )
-        rows = fine.select("*", bins).select("level", *_ROLLUP_COLS)
-        if os.path.exists(self.rollups_path):
-            touched = reduce(
-                Column.__or__,
-                [
-                    (F.col("level") == d) & F.col("bin_date").isin(bin_dates[d])
-                    for d in FIDELITIES
-                ],
-            )
-            stored = self._scan(self.rollups_path).filter(touched)
-            rows = rows.unionByName(stored.select("level", *_ROLLUP_COLS))
-        (
-            rows.groupBy("level", "dataset_id", "bin_ts")
-            .agg(*[getattr(F, fn)(c).alias(c) for c, fn in _ROLLUP_MERGE])
-            .withColumn("bin_date", _bin_date(F.col("bin_ts")))
-            .localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            # per-write dynamic overwrite, without mutating session-global conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("level", "bin_date")
-            .parquet(self.rollups_path)
-        )
-
     def _merge_rollups_arrow(self, rows: pa.Table) -> None:
-        """The same merge as _merge_rollups, on the driver, for the new
-        points of an Arrow batch ((dataset_id, us, value)), with no
-        Spark job until the write. The 1 s partials (us // 10**6) enter
-        every level at their bin (_level_bins); a pyarrow read of the
-        touched (level, bin_date) directories brings the stored
-        partials; one group_by on (level, dataset_id, bin_ts) merges
-        both (_ROLLUP_MERGE). pyarrow then replaces each touched
-        partition with its merged rows (_overwrite_parts). The driver
-        holds every row of the touched partitions, as a POST already
-        holds its batch; a DataFrame batch goes through _merge_rollups
-        instead."""
+        """A1-A3/ST3: algebraic merge of every level in one aggregation
+        and one write, on the driver, for a put's new points
+        ((dataset_id, us, value)), with no Spark job. The batch is
+        aggregated once into 1 s partials (us // 10**6, A1), which
+        enter every level at their bin (_level_bins, A3); a pyarrow
+        read of the touched (level, bin_date) directories brings the
+        stored partials; one group_by on (level, dataset_id, bin_ts)
+        merges both (_ROLLUP_MERGE: min(min), max(max), sum(sum),
+        sum(count)), so combine(agg(A), agg(B)) == agg(A ∪ B). pyarrow
+        then replaces each touched partition with its merged rows, and
+        only those (_overwrite_parts). The driver holds every row of
+        the touched partitions, as it already holds the batch."""
         aggs = ("min", "max", "sum", "count")
         fine = (
             pa.table(

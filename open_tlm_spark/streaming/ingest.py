@@ -22,16 +22,16 @@ Reference parity (SURVEY.md §2.9, §3.2):
     (src/metrics/loop.py:10-78): literally a rate source feeding the
     same sink.
 
-Scale notes: foreachBatch batches arrive pre-partitioned by the
-source; the put() path aggregates the batch once to the 1 s level,
-then shuffles once for all six rollup levels, on (level, dataset_id,
-bin), writes them to the one rollups/ table in one write, and runs a
-fixed number of Spark jobs per micro-batch however many levels there
-are. Checkpoint dirs make the source offsets restartable. A replayed
-micro-batch whose put completed is a no-op (the store's ST5 anti-join
-drops its points), but one whose put failed after the raw append
-loses its points from every rollup level: the anti-join drops them
-before the merge (see TelemetryStore.put).
+Scale notes: put() collects each micro-batch to the driver with one
+toArrow() job, then validates, dedups, appends raw and merges all six
+rollup levels there with pyarrow, rewriting only the touched
+partitions. So a micro-batch must fit in driver memory; size the
+trigger (or maxFilesPerTrigger) to keep it there. Checkpoint dirs
+make the source offsets restartable. A replayed micro-batch whose
+put completed is a no-op (the store's ST5 anti-join drops its
+points), but one whose put failed after the raw append loses its
+points from every rollup level: the anti-join drops them before the
+merge (see TelemetryStore.put).
 """
 
 from __future__ import annotations

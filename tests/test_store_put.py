@@ -1,9 +1,11 @@
 """TelemetryStore.put: a fixed Spark-job budget per put (none for an
-Arrow batch), exact touched rollup partitions across a UTC midnight,
-idempotent replay of a completed put, the known gap in replaying a
-failed one, the same stored result from an Arrow batch as from a
-DataFrame (fixed batches and generated put sequences), a store written
-by both writers, and the store's own small frames built from Arrow."""
+Arrow batch, one collect for a DataFrame), exact touched rollup
+partitions across a UTC midnight, idempotent replay of a completed
+put, the known gap in replaying a failed one, the same stored result
+from an Arrow batch as from a DataFrame, on one Spark partition or
+several (fixed batches and generated put sequences), a store written
+by both Spark and pyarrow, and the store's own small frames built
+from Arrow."""
 
 import contextlib
 import datetime as dt
@@ -47,8 +49,12 @@ FRONTS = ("dataframe", "arrow")
 
 
 def as_front(spark, table, front):
-    """An Arrow batch as put takes it on the given front end."""
-    return table if front == "arrow" else spark.createDataFrame(table)
+    """An Arrow batch as put takes it on the given front end:
+    "partitioned" is a DataFrame spread over three Spark partitions."""
+    if front == "arrow":
+        return table
+    df = spark.createDataFrame(table)
+    return df.repartition(3) if front == "partitioned" else df
 
 
 def _batch(rows):
@@ -92,13 +98,17 @@ def _put_job_counts(spark, tmp_path, front):
 
 
 def test_put_job_budget(spark, tmp_path):
-    """A put into a non-empty store runs a fixed handful of Spark jobs
-    (11), with one rollup write for all six levels. A put that brings
-    a new series runs no more: the catalog file is written on the
-    driver."""
-    counts = _put_job_counts(spark, tmp_path, "dataframe")
-    assert 0 < counts[2] <= 11, counts
-    assert counts[0] == counts[1] == counts[2], counts
+    """A DataFrame put runs one Spark job, its toArrow() collect; the
+    rest runs on the driver as for an Arrow batch, with or without a
+    new series. An empty DataFrame (an empty streaming micro-batch)
+    runs the same one collect and writes no directory."""
+    assert _put_job_counts(spark, tmp_path / "store", "dataframe") == [1, 1, 1]
+    empty = TelemetryStore(spark, str(tmp_path / "empty"))
+    batch = points(spark, ["budget.a"], dt.datetime(2024, 1, 1), 10, 1.0)
+    with job_group(spark) as jobs:
+        empty.put(batch.filter(F.col("value") > 100))
+        assert len(jobs()) == 1
+    assert not os.path.exists(empty.base)
 
 
 def test_put_job_budget_arrow(spark, tmp_path):
@@ -278,51 +288,47 @@ def _front_batches():
 
 
 def test_arrow_and_dataframe_fronts_store_the_same(spark, tmp_path):
-    """The same batches put as Arrow tables into one store and as
-    DataFrames into another leave the same raw points and catalog,
+    """The same batches put as Arrow tables into one store, as
+    DataFrames into another and as DataFrames spread over three Spark
+    partitions into a third leave the same raw points and catalog,
     exactly, and the same rollup levels: counts and min/max exact, sums
-    within rel 1e-9 (the fronts fold float sums in a different order).
-    NaN, null, pre-epoch points and every id of BAD_IDS are dropped;
-    duplicates, in a batch or already stored, are stored once. The
-    Arrow front computes dates from epoch integers and Spark in the
-    session zone, so a non-UTC host must not move a partition either."""
-    stores = {f: TelemetryStore(spark, str(tmp_path / f)) for f in FRONTS}
+    within rel 1e-9 (rows collected from several partitions arrive in
+    another order, so float sums fold in another order). NaN, null,
+    pre-epoch points and every id of BAD_IDS are dropped; duplicates,
+    in a batch or already stored, are stored once. Dates come from
+    epoch integers, whatever zone the collected timestamps carry, so a
+    non-UTC host must not move a partition either."""
+    fronts = (*FRONTS, "partitioned")
+    stores = {f: TelemetryStore(spark, str(tmp_path / f)) for f in fronts}
     for rows in _front_batches():
         for front, store in stores.items():
             store.put(as_front(spark, _batch(rows), front))
-    arrow, frame = stores["arrow"], stores["dataframe"]
+    arrow = stores["arrow"]
     raw = _raw(arrow)
-    assert raw == _raw(frame)
     assert len(raw) == 240 + 2 + 50 + 3
     assert {r[0] for r in raw} == {"eq.a", "eq.b", "eq.c"}
-    assert arrow.list_datasets() == frame.list_datasets() == ["eq.a", "eq.b", "eq.c"]
-    for d in FIDELITIES:
-        _same_bins(
-            _bins(arrow.get(None, LO, HI, fidelity=d).collect()),
-            _bins(frame.get(None, LO, HI, fidelity=d).collect()),
-            d,
-        )
     for store in stores.values():
+        assert _raw(store) == raw
+        assert store.list_datasets() == ["eq.a", "eq.b", "eq.c"]
+        for d in FIDELITIES:
+            _same_bins(
+                _bins(store.get(None, LO, HI, fidelity=d).collect()),
+                _bins(arrow.get(None, LO, HI, fidelity=d).collect()),
+                d,
+            )
         _levels_match_raw(store)
-    assert _bin_date_dirs(arrow, 10_000) == _bin_date_dirs(frame, 10_000) == [
-        "bin_date=2024-01-01",
-        "bin_date=2024-01-02",
-    ]
+        assert _bin_date_dirs(store, 10_000) == [
+            "bin_date=2024-01-01",
+            "bin_date=2024-01-02",
+        ]
 
 
 def _same_reads(store, want):
-    """Spark's get() (raw and every level) and the DataFrame front's
-    stored-key scan return the same rows from both stores."""
+    """Spark's get() (raw and every level) returns the same rows from
+    both stores, and not none."""
     for fid in (None, *FIDELITIES):
         rows = [s.get(None, LO, HI, fidelity=fid).collect() for s in (store, want)]
-        assert rows[0] == rows[1], fid
-    days = [dt.date(2024, 1, 1), dt.date(2024, 1, 2)]
-    lo, hi = _epoch_us(LO), _epoch_us(HI)
-    keys = [
-        sorted(s._stored_keys(list(range(s.n_buckets)), days, lo, hi).collect())
-        for s in (store, want)
-    ]
-    assert keys[0] == keys[1] and keys[0]
+        assert rows[0] == rows[1] and rows[0], fid
 
 
 def _check_arrow_files(store):
@@ -358,10 +364,10 @@ def _check_arrow_files(store):
 
 def test_mixed_writer_store(spark, tmp_path):
     """A store filled by a DataFrame put, then Arrow puts, then compact()
-    and expire_raw, then one more Arrow put, answers Spark's get() (raw
-    and every level) and the stored-key scan with the same rows as a
-    store that took the same puts as DataFrames, after each step. The
-    files pyarrow wrote keep Spark's physical layout."""
+    (a Spark write) and expire_raw, then one more Arrow put, answers
+    Spark's get() (raw and every level) with the same rows as a store
+    that took the same puts as DataFrames, after each step. The files
+    pyarrow wrote keep Spark's physical layout."""
     from open_tlm_spark.store.retention import expire_raw
 
     jan1 = dt.datetime(2024, 1, 1, tzinfo=UTC)
@@ -495,9 +501,9 @@ def test_fronts_agree_on_generated_put_sequences(spark, tmp_path, batches):
 @pytest.mark.parametrize("front", FRONTS)
 def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
     """A key sent three times in one batch with different values is
-    stored once with one of them (the Arrow front keeps the first),
-    and every level counts it once. A later batch with a new value for
-    a stored key adds nothing."""
+    stored once with the first of them in batch order, and every level
+    counts it once. A later batch with a new value for a stored key
+    adds nothing."""
     store = TelemetryStore(spark, str(tmp_path))
     t = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
     us = _epoch_us(t)
@@ -511,9 +517,7 @@ def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
     store.put(as_front(spark, _batch(rows), front))
     raw = _raw(store)
     kept = [v for sid, u, v in raw if (sid, u) == ("dup.a", us)]
-    assert len(raw) == 3 and len(kept) == 1 and kept[0] in (1.0, 2.0, 4.0)
-    if front == "arrow":
-        assert kept == [1.0]
+    assert len(raw) == 3 and kept == [1.0]
     _levels_match_raw(store)
     store.put(as_front(spark, _batch([("dup.a", t, 9.0)]), front))
     assert _raw(store) == raw
@@ -524,25 +528,24 @@ def test_conflicting_duplicates_keep_one_value(spark, tmp_path, front):
     strict=True,
     reason="a put that fails after the raw append loses its batch from "
     "every rollup level on replay: the anti-join drops the stored points "
-    "(ROADMAP item 2, per-put commit marker)",
+    "(ROADMAP item 3, a redo log of each put)",
 )
 @pytest.mark.parametrize("front", FRONTS)
 def test_replay_after_failed_rollup_merge(spark, tmp_path, front):
     """A put that fails after the raw append, then is replayed, leaves
     every level equal to aggregate_points over raw. The crash is
-    raised in the rollup merge the front really calls."""
+    raised in the rollup merge, which both fronts call."""
     store = TelemetryStore(spark, str(tmp_path))
     t0 = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
     store.put(points(spark, ["crash.a"], t0, 20, 0.5, front))
     batch = points(spark, ["crash.a"], t0 + dt.timedelta(seconds=10), 20, 0.5, front)
-    hook = "_merge_rollups_arrow" if front == "arrow" else "_merge_rollups"
-    merge = getattr(store, hook)
+    merge = store._merge_rollups_arrow
 
     def crash(*args):
-        setattr(store, hook, merge)
+        store._merge_rollups_arrow = merge
         raise RuntimeError("killed after the raw append")
 
-    setattr(store, hook, crash)
+    store._merge_rollups_arrow = crash
     with pytest.raises(RuntimeError):
         store.put(batch)
     store.put(batch)  # the replay
